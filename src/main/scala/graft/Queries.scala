@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{MetricRegistry, Scalars, TextFunctions, TimeBuckets}
 import graft.operators.{Dedup, Episodes, GapFill, Rollup, Similarity, Skew, Sliding, Sri}
+import graft.sources.Parquet
 
 /** Driver-facing query catalog. Each entry exercises one engine operator
   * from SURVEY.md §2 over the driver's testdata tables (events ≙ the
@@ -19,7 +20,7 @@ import graft.operators.{Dedup, Episodes, GapFill, Rollup, Similarity, Skew, Slid
 object Queries {
 
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(s, s"$dir/$name.parquet")
 
   private def events(s: SparkSession, dir: String): DataFrame = tbl(s, dir, "events")
 

@@ -11,9 +11,10 @@ import scala.concurrent.duration.Duration
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 
-import graft.sources.IceTable
+import graft.sources.{IceTable, Parquet}
 
 /** Resumable tier build: raw IceTable → 1m-tier parquet, one event-time DAY
   * per work unit, each unit committed with a lineage-carrying checkpoint.
@@ -48,6 +49,8 @@ object CheckpointedRollup {
 
   private val mapper = new ObjectMapper()
   private[operators] val DayUs = 86400000000L
+  /** Largest auto-sized day batch (see `runUnits`). */
+  private val MaxAutoBatch = 8
 
   final case class DayResult(dayUs: Long, rows: Long, bytes: Long, skipped: Boolean)
 
@@ -123,9 +126,9 @@ object CheckpointedRollup {
       }
     }
     def scanDay(sparkS: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame =
-      sparkS.read.parquet(s"$dir/day=$dayUs")
+      Parquet.read(sparkS, s"$dir/day=$dayUs")
     override def scanDays(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
-      sparkS.read.parquet(daysUs.map(d => s"$dir/day=$d"): _*)
+      Parquet.read(sparkS, daysUs.map(d => s"$dir/day=$d"): _*)
     def lineageId: Long = 0L
   }
 
@@ -171,7 +174,7 @@ object CheckpointedRollup {
       parallelism: Int = 1): Seq[DayResult] =
     runUnits(spark, new IceDaySource(source), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), value, interval),
-      failAfter, parallelism)
+      col("bucket_start"), failAfter, parallelism)
 
   /** Run (or resume) a day-unit build: for each source day whose
     * fingerprint changed (or has no marker), apply `transform` to that
@@ -182,31 +185,34 @@ object CheckpointedRollup {
     * are per-day and order-independent). Returns per-day results in day
     * order.
     *
-    * `dayBucket` (optional) names an OUTPUT column whose event-time day
-    * identifies the day unit every output row belongs to (e.g.
-    * `col("bucket_start")` for tier rollups — 1m/1h/1d windows never
-    * straddle a day). When set, to-run days are grouped into BATCHES that
-    * execute as ONE Spark job each (dynamic day partitioning splits the
-    * output), amortizing the per-job fixed cost (plan + submit + commit,
-    * measured ~0.4-0.5 s against ~10 ms of per-day compute at bench
-    * scale) across the batch — while each day still commits individually
-    * (atomic rename + marker), so visibility, fingerprints and resume stay
-    * day-grained; a crash mid-batch redoes only that batch's uncommitted
-    * days. `unitBatch` > 0 fixes the batch size; 0 sizes it so the
-    * submission pool cycles ~4 rounds of batches (capped at 16 days;
-    * measured flat across 5-9 days/batch and degrading past ~12 on the
-    * bench shape — see OPTIMIZATION_r06.md), overridable via the
-    * `SPARK_GRAFT_UNIT_BATCH` env for deployment tuning.
-    * Batching is disabled under `failAfter` (it counts day units) and
-    * without `dayBucket` (a generic transform's output can't be split). */
+    * `dayBucket` names an OUTPUT column whose event-time day identifies
+    * the day unit every output row belongs to (e.g. `col("bucket_start")`
+    * for tier rollups — 1m/1h/1d windows never straddle a day). To-run
+    * days are grouped into BATCHES that execute as ONE Spark job each
+    * (dynamic day partitioning splits the output), amortizing the per-job
+    * fixed cost (plan + submit + commit) across the batch — while each day
+    * still commits individually (atomic rename + marker), so visibility,
+    * fingerprints and resume stay day-grained; a crash mid-batch redoes
+    * only that batch's uncommitted days. Rows are written in a fixed order
+    * per task, so at a fixed task layout a day's files (and the byte count
+    * its marker chains downstream) do not depend on which days shared its
+    * batch.
+    *
+    * Batch size: `unitBatch` > 0 fixes it; 0 sizes batches so the to-run
+    * days fill the `parallelism` pool in ONE wave, ceil(days /
+    * parallelism), capped at `MaxAutoBatch` days. A second wave would pay
+    * every batch's fixed cost again; past the cap, build time was measured
+    * flat across 5-9 days per batch at 140 days on 8 threads
+    * (OPTIMIZATION_r06.md). Batches hold one day under `failAfter` (it
+    * counts day units). */
   def runUnits(
       spark: SparkSession,
       source: DaySource,
       outDir: String,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      dayBucket: Column,
       failAfter: Option[Int] = None,
       parallelism: Int = 1,
-      dayBucket: Option[Column] = None,
       unitBatch: Int = 0): Seq[DayResult] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(outDir).getFileSystem(conf)
@@ -254,64 +260,61 @@ object CheckpointedRollup {
       failAfter.foreach(k =>
         if (done.get() >= k) throw new RuntimeException(s"injected failure after $k units"))
       val t0 = System.nanoTime()
-      if (batch.size == 1) {
-        val (dayUs, fp) = batch.head
-        val tier = transform(source.scanDay(spark, dayUs))
+      val out = transform(source.scanDays(spark, batch.map(_._1)))
+      // case-INSENSITIVE reservation check: Spark resolves columns
+      // case-insensitively by default, so a transform column 'Day'
+      // would otherwise be silently replaced by the partition value
+      require(!out.columns.exists(_.equalsIgnoreCase("day")),
+        "runUnits batching reserves the output column name 'day'")
+      // floor-div day of the bucket column (exact in double: |µs| < 2^53);
+      // the value doubles as the committed day-dir suffix
+      val us = unix_micros(dayBucket.cast("timestamp"))
+      // each task writes its rows of a day in one fixed order, so a day's
+      // files do not depend on which days share its batch: their byte
+      // count chains into the downstream fingerprints (DayDirSource)
+      val withDay = out.withColumn("day",
+        floor(us / lit(DayUs.toDouble)).cast("long") * lit(DayUs))
+        .sortWithinPartitions((col("day") +: out.schema.fields.toSeq
+          .filter(f => RowOrdering.isOrderable(f.dataType)).map(f => col(f.name))): _*)
+      val tmpDir = new Path(outDir, s".batch-${batch.head._1}.tmp")
+      withDay.write.mode("overwrite").partitionBy("day").parquet(tmpDir.toString)
+      // a transform emitting rows OUTSIDE the batch's days would vanish
+      // with the tmp dir below — fail fast BEFORE any day commits, so a
+      // contract violation never leaves valid markers over missing data.
+      // A null bucket lands in Hive's default partition, a non-numeric dir
+      val dayDirs = fs.listStatus(tmpDir).map(_.getPath.getName)
+        .filter(_.startsWith("day=")).map(_.stripPrefix("day="))
+      val nonNumeric = dayDirs.filter(_.toLongOption.isEmpty)
+      require(nonNumeric.isEmpty,
+        s"runUnits batching: transform emitted rows with a null day bucket (day=${nonNumeric.mkString(",")})")
+      val written = dayDirs.map(_.toLong).toSet
+      val stray = written -- batch.map(_._1).toSet
+      require(stray.isEmpty,
+        s"runUnits batching: transform emitted rows outside the batch's days: ${stray.mkString(",")}")
+      val wallShareMs = (System.nanoTime() - t0) / 1000000 / batch.size
+      val results = batch.map { case (dayUs, fp) =>
         val dayDir = new Path(outDir, s"day=$dayUs")
-        val tmpDir = new Path(outDir, s".day-$dayUs.tmp")
-        tier.write.mode("overwrite").parquet(tmpDir.toString)
+        val src = new Path(tmpDir, s"day=$dayUs")
         if (fs.exists(dayDir)) fs.delete(dayDir, true)
-        if (!fs.rename(tmpDir, dayDir))
-          throw new IllegalStateException(s"checkpoint commit: rename $tmpDir -> $dayDir failed")
-        Seq(commitDay(dayUs, fp, (System.nanoTime() - t0) / 1000000))
-      } else {
-        val out = transform(source.scanDays(spark, batch.map(_._1)))
-        // case-INSENSITIVE reservation check: Spark resolves columns
-        // case-insensitively by default, so a transform column 'Day'
-        // would otherwise be silently replaced by the partition value
-        require(!out.columns.exists(_.equalsIgnoreCase("day")),
-          "runUnits batching reserves the output column name 'day'")
-        // floor-div day of the bucket column (exact in double: |µs| < 2^53);
-        // the value doubles as the committed day-dir suffix
-        val us = unix_micros(dayBucket.get.cast("timestamp"))
-        val withDay = out.withColumn("day",
-          floor(us / lit(DayUs.toDouble)).cast("long") * lit(DayUs))
-        val tmpDir = new Path(outDir, s".batch-${batch.head._1}.tmp")
-        withDay.write.mode("overwrite").partitionBy("day").parquet(tmpDir.toString)
-        // a transform emitting rows OUTSIDE the batch's days would vanish
-        // with the tmp dir below — fail fast BEFORE any day commits, so a
-        // contract violation never leaves valid markers over missing data
-        val written = fs.listStatus(tmpDir).map(_.getPath.getName)
-          .filter(_.startsWith("day=")).map(_.stripPrefix("day=").toLong).toSet
-        val stray = written -- batch.map(_._1).toSet
-        require(stray.isEmpty,
-          s"runUnits batching: transform emitted rows outside the batch's days: ${stray.mkString(",")}")
-        val wallShareMs = (System.nanoTime() - t0) / 1000000 / batch.size
-        val results = batch.map { case (dayUs, fp) =>
-          val dayDir = new Path(outDir, s"day=$dayUs")
-          val src = new Path(tmpDir, s"day=$dayUs")
-          if (fs.exists(dayDir)) fs.delete(dayDir, true)
-          if (written.contains(dayUs)) {
-            if (!fs.rename(src, dayDir))
-              throw new IllegalStateException(s"checkpoint commit: rename $src -> $dayDir failed")
-          } else {
-            // a pending day can hold zero output rows (a source file span
-            // covering a row-less day): commit a SCHEMA-BEARING empty
-            // parquet dir, exactly like the single-day path's empty write
-            // — a bare mkdirs would make any later single-day scan of this
-            // day fail schema inference
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](), out.schema)
-              .write.mode("overwrite").parquet(dayDir.toString)
-          }
-          // wall_ms = this day's amortized share of its batch job (the
-          // job is indivisible; recording the full batch wall per day
-          // would overstate summed per-day wall by up to batchSize×)
-          commitDay(dayUs, fp, wallShareMs)
+        if (written.contains(dayUs)) {
+          if (!fs.rename(src, dayDir))
+            throw new IllegalStateException(s"checkpoint commit: rename $src -> $dayDir failed")
+        } else {
+          // a pending day can hold zero output rows (a source file span
+          // covering a row-less day): commit a SCHEMA-BEARING empty
+          // parquet dir — a bare mkdirs would make any later single-day
+          // scan of this day fail schema inference
+          spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), out.schema)
+            .write.mode("overwrite").parquet(dayDir.toString)
         }
-        fs.delete(tmpDir, true)
-        results
+        // wall_ms = this day's amortized share of its batch job (the
+        // job is indivisible; recording the full batch wall per day
+        // would overstate summed per-day wall by up to batchSize×)
+        commitDay(dayUs, fp, wallShareMs)
       }
+      fs.delete(tmpDir, true)
+      results
     }
 
     val days = source.pendingDays
@@ -319,12 +322,10 @@ object CheckpointedRollup {
     val (doneDays, runDays) = fps.partition { case (d, fp) => isDone(spark, outDir, d, fp) }
     val skippedResults = doneDays.map { case (d, _) => DayResult(d, 0L, 0L, skipped = true) }
     val batchSize =
-      if (dayBucket.isEmpty || failAfter.isDefined) 1
+      if (failAfter.isDefined) 1
       else if (unitBatch > 0) unitBatch
-      else sys.env.get("SPARK_GRAFT_UNIT_BATCH")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-        .getOrElse(math.max(1, math.min(16,
-          math.ceil(runDays.size.toDouble / math.max(parallelism * 4, 1)).toInt)))
+      else math.max(1, math.min(MaxAutoBatch,
+        math.ceil(runDays.size.toDouble / math.max(parallelism, 1)).toInt))
     val batches = runDays.grouped(batchSize).toSeq
 
     val ran: Seq[DayResult] =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.IceTable
+import graft.sources.{IceTable, Parquet}
 
 /** The assembled north-star pipeline: raw transcripts IceTable →
   * continuous-aggregate tier IceTables (1m → 1h → 1d), each tier row
@@ -118,25 +118,27 @@ object TierStore {
     import CheckpointedRollup.{runUnits, DayDirSource, IceDaySource}
     val dirs = TierDirs(s"$root/1m", s"$root/1h", s"$root/1d")
     // dayBucket = bucket_start: 1m/1h/1d windows never straddle a day, so
-    // runUnits may batch several day units into one Spark job (the per-job
-    // fixed cost dominated the build — see runUnits scaladoc) while each
-    // day still commits/fingerprints individually
+    // runUnits batches a tier's to-run days into one wave of `parallelism`
+    // jobs (see runUnits) while each day still commits and fingerprints
+    // individually. Every tier's scans (raw files, upstream day dirs) take
+    // their schema from a parquet footer (sources.Parquet), so no batch
+    // starts a schema-inference job before its write.
     val r1m = runUnits(spark, new IceDaySource(source), dirs.t1m,
       raw => Rollup.rollupRawWithGorilla(
         raw.withColumn("_v", value), col("conv_id"), col("ts"), col("_v"), "1 minute"),
-      parallelism = parallelism, dayBucket = Some(col("bucket_start")))
+      parallelism = parallelism, dayBucket = col("bucket_start"))
     val r1h = runUnits(spark, new DayDirSource(spark, dirs.t1m), dirs.t1h,
       t1m => Rollup.rollupTierWithGorilla(t1m, "1 hour"),
-      parallelism = parallelism, dayBucket = Some(col("bucket_start")))
+      parallelism = parallelism, dayBucket = col("bucket_start"))
     val r1d = runUnits(spark, new DayDirSource(spark, dirs.t1h), dirs.t1d,
       t1h => Rollup.rollupTierWithGorilla(t1h, "1 day"),
-      parallelism = parallelism, dayBucket = Some(col("bucket_start")))
+      parallelism = parallelism, dayBucket = col("bucket_start"))
     (r1m, r1h, r1d)
   }
 
   /** Scan one tier of an incremental store. */
   def scanTier(spark: SparkSession, tierDir: String): DataFrame =
-    spark.read.parquet(s"$tierDir/day=*")
+    Parquet.read(spark, s"$tierDir/day=*")
 
   /** Retention for an incremental store tier: physically drop day dirs (and
     * their markers) entirely older than the cutoff. Returns dropped days. */

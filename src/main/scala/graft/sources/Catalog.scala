@@ -32,5 +32,5 @@ object Catalog {
     }
 
   /** Open one discovered parquet dataset. */
-  def open(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def open(spark: SparkSession, path: String): DataFrame = Parquet.read(spark, path)
 }

@@ -365,7 +365,7 @@ final class IceTable(val root: String) {
 
   /** Per-file (rows, min ts, max ts, bytes) stats of a committed data dir. */
   private def statsOf(spark: SparkSession, dir: Path, tsCol: String): Seq[FileEntry] = {
-    val rows = spark.read.parquet(dir.toString)
+    val rows = Parquet.read(spark, dir.toString)
       .groupBy(input_file_name().as("f"))
       .agg(count(lit(1)).as("rows"),
         min(unix_micros(col(tsCol).cast("timestamp"))).as("lo"),
@@ -482,7 +482,7 @@ final class IceTable(val root: String) {
       .filter(f => f.maxTsUs >= loUs && f.minTsUs <= hiUs)
       .map(_.path)
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    else Parquet.readFiles(spark, files)
   }
 
   /** Retention expiry: metadata-only snapshot dropping files entirely older

@@ -54,7 +54,7 @@ object StreamTier {
       value: Column,
       interval: String = "1 minute",
       lateness: String = "10 minutes"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(inputPath).schema
+    val schema = graft.sources.Parquet.read(spark, inputPath).schema
     val stream = spark.readStream.schema(schema).parquet(inputPath)
       .withColumn("text_len", length(col("text")).cast("double"))
     val tiered = tierAggregate(stream, value, interval, lateness)
@@ -79,7 +79,7 @@ object StreamTier {
       value: Column,
       interval: String = "1 minute",
       lateness: String = "10 minutes"): DataStreamWriter[Row] = {
-    val schema = spark.read.parquet(inputPath).schema
+    val schema = graft.sources.Parquet.read(spark, inputPath).schema
     val stream = spark.readStream.schema(schema).parquet(inputPath)
     val withVal = stream.withColumn("text_len", length(col("text")).cast("double"))
     tierAggregate(withVal, value, interval, lateness)

@@ -353,7 +353,7 @@ class IceTableSpec extends SparkSpec {
     val outDir = tmp("tier-batched")
     val res = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
-      parallelism = 1, dayBucket = Some(col("bucket_start")), unitBatch = 3)
+      parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 3)
     assert(res.length == 3, s"3 pending days expected, got $res")
     val empty = res.find(_.rows == 0L)
     assert(empty.isDefined, s"the row-less middle day must commit with rows=0: $res")
@@ -369,8 +369,29 @@ class IceTableSpec extends SparkSpec {
     // rebuild is a metadata-only skip for all days, empty one included
     val again = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
-      parallelism = 1, dayBucket = Some(col("bucket_start")), unitBatch = 3)
+      parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 3)
     assert(again.forall(_.skipped), s"unchanged source must skip all days: $again")
+  }
+
+  test("batched day units: a null day bucket fails with a clear message before any day commits") {
+    val rows = Seq(
+      ("c1", "2025-02-01 10:00:00", 3.0),
+      ("c1", "2025-02-02 10:00:00", 7.0))
+      .toDF("conv_id", "tss", "text_len")
+      .select($"conv_id", to_timestamp($"tss").as("ts"), $"text_len")
+    val t = IceTable(tmp("ice-null-day"))
+    t.append(rows, "ts")
+    val outDir = tmp("tier-null-day")
+    val e = intercept[IllegalArgumentException] {
+      CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
+        raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute")
+          .withColumn("bucket_start",
+            when(col("max") > 5.0, lit(null)).otherwise(col("bucket_start"))),
+        parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 2)
+    }
+    assert(e.getMessage.contains("null day bucket"), e.getMessage)
+    val markers = new java.io.File(s"$outDir/_checkpoints").listFiles().filter(_.getName.startsWith("day-"))
+    assert(markers.isEmpty, s"no day may commit: ${markers.map(_.getName).mkString(",")}")
   }
 
   test("checkpointed rollup resumes after crash with identical output") {

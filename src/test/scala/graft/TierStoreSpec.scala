@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.functions.{Gorilla, GorillaAgg}
-import graft.operators.{Rollup, TierStore}
+import graft.operators.{CheckpointedRollup, Rollup, TierStore}
 import graft.sources.{IceTable, TranscriptGen}
 
 /** End-to-end north-star pipeline: raw IceTable → Gorilla tier IceTables →
@@ -109,6 +109,50 @@ class TierStoreSpec extends SparkSpec {
     assert(dropped.nonEmpty)
     val lo = TierStore.scanTier(spark, s"$root/1m").agg(min($"bucket_start")).head().getTimestamp(0)
     assert(lo.getTime * 1000 >= cutoffUs - 86400000000L)
+  }
+
+  test("sync batch sizes: parallelism 4 and 1 build equal tiers and markers; 1m expiry re-syncs only 1m") {
+    val src = IceTable(tmp("ice-waves"))
+    src.append(TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
+      .where($"ts" < "2025-01-16").withColumn("text_len", length($"text").cast("double")), "ts")
+    val (p4, p1) = (tmp("tiers-p4"), tmp("tiers-p1"))
+    val r4 = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
+    val r1 = TierStore.sync(spark, src, p1, $"text_len", parallelism = 1)
+    assert(r4._1.size >= 8, s"the fixture must span at least 8 days, got ${r4._1.size}")
+    assert(Seq(r4, r1).forall(r => Seq(r._1, r._2, r._3).forall(_.forall(!_.skipped))))
+
+    def marker(root: String, tier: String, dayUs: Long) = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$root/$tier/_checkpoints/day-$dayUs.json"))
+    val keys = Seq("conv_id", "bucket_start")
+    val exact = Seq("n_rows", "n_vals", "min", "max", "gblock")
+    val approx = Seq("sum", "sum_sq", "sum_sin", "sum_cos")
+    for (tier <- Seq("1m", "1h", "1d")) {
+      val days = new CheckpointedRollup.DayDirSource(spark, s"$p4/$tier").pendingDays
+      assert(days == new CheckpointedRollup.DayDirSource(spark, s"$p1/$tier").pendingDays, tier)
+      // 1m markers also share the raw-file fingerprint (same source table)
+      val fields = Seq("rows", "bucket_lo_us", "bucket_hi_us") ++ (if (tier == "1m") Seq("source_files_fp") else Nil)
+      for (d <- days; f <- fields)
+        assert(marker(p4, tier, d).get(f).asLong == marker(p1, tier, d).get(f).asLong, s"$tier day $d marker $f")
+      // row-for-row equal; float sums within 1e-9 relative (summation order
+      // follows the batch's partitioning)
+      def side(root: String, p: String) = TierStore.scanTier(spark, s"$root/$tier")
+        .select((keys.map(col) ++ (exact ++ approx).map(k => col(k).as(p + k))): _*)
+      val j = side(p4, "a_").join(side(p1, "b_"), keys, "full_outer")
+      val bad = j.where(
+        exact.map(k => !col("a_" + k).eqNullSafe(col("b_" + k))).reduce(_ || _) ||
+          approx.map(k => col("a_" + k).isNull || col("b_" + k).isNull ||
+            abs(col("a_" + k) - col("b_" + k)) > abs(col("b_" + k)) * 1e-9 + 1e-9).reduce(_ || _))
+      assert(bad.count() == 0, s"$tier differs between parallelism 4 and 1")
+    }
+
+    // the fingerprint chain: 1m days dropped by retention are rebuilt from
+    // raw with identical markers, so 1h and 1d skip them
+    val days1m = r4._1.map(_.dayUs)
+    val dropped = TierStore.expireDays(spark, s"$p4/1m", days1m(3))
+    assert(dropped == days1m.take(3))
+    val (a1m, a1h, a1d) = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
+    assert(a1m.filterNot(_.skipped).map(_.dayUs) == dropped)
+    assert(a1h.forall(_.skipped) && a1d.forall(_.skipped), s"1h/1d rebuilt: ${(a1h ++ a1d).filterNot(_.skipped)}")
   }
 
   test("retention ladder expires fine tiers earlier than coarse tiers") {
