@@ -5,10 +5,9 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * Shared with the single-query dev dump (tools.VerifyOne). */
-  private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
+    * — a tab or CR in a query's SQL would otherwise make a JSON reader of
+    * oracle_sql.json fail. */
+  private def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -132,15 +132,8 @@ object CheckpointedRollup {
     def lineageId: Long = 0L
   }
 
-  /** Distinct event-time days present in the source manifest (metadata only). */
-  def pendingDays(source: IceTable): Seq[Long] = new IceDaySource(source).pendingDays
-
   private def markerPath(outDir: String, dayUs: Long) =
     new Path(outDir, s"_checkpoints/day-$dayUs.json")
-
-  /** Deterministic fingerprint of the source files overlapping a day. */
-  def dayFingerprint(source: IceTable, dayUs: Long): Long =
-    new IceDaySource(source).dayFingerprint(dayUs)
 
   private def readFully(fs: FileSystem, p: Path): String = {
     val in = new InputStreamReader(fs.open(p), StandardCharsets.UTF_8)

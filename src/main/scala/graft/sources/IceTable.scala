@@ -17,23 +17,19 @@ import org.apache.spark.sql.functions._
   * immutable Parquet data files plus a JSON snapshot log with per-file
   * min/max event-time stats.
   *
-  * Gives the engine the three Iceberg semantics the north rule needs:
-  *   1. snapshot-id LINEAGE — every append/expire records parent & op;
+  * Gives the engine the two Iceberg semantics the north rule needs:
+  *   1. snapshot-id LINEAGE — every append records parent & op;
   *      downstream checkpoints cite the source snapshot-id they consumed;
   *   2. stat-based PRUNING — scans pass a time range and only overlapping
   *      files are read (manifest-level partition pruning; at 100 TB this is
-  *      what turns an incremental tier build into an O(changed-days) scan);
-  *   3. retention EXPIRY — `expireOlderThan` is a metadata-only snapshot
-  *      that drops aged files from the table (Iceberg expire/rewrite
-  *      analog of the reference's post-infection retention filters,
-  *      /root/reference/scripts/sleepSD.R:216,226).
+  *      what turns an incremental tier build into an O(changed-days) scan).
+  * Retention lives in the tier store, not here (TierStore.expireDays).
   *
   * METADATA PLANE IS O(new files) PER APPEND (the Iceberg delta-manifest
   * idea). An append snapshot's JSON lists ONLY the files that append added
   * (`delta: true`); the live file set is the union of the delta chain down
-  * to the nearest BASE snapshot (expire/rewrite snapshots, which change the
-  * set non-monotonically, always write the full list; and every
-  * `BaseEvery`-th append materializes a full manifest so the chain walk is
+  * to the nearest BASE snapshot (the first append, and every
+  * `BaseEvery`-th append, materializes a full manifest so the chain walk is
   * bounded at `BaseEvery` small JSON reads — each snapshot records its
   * distance to the base as `chain_len`, so the base-or-delta decision reads
   * only the parent snapshot, never the chain). N daily appends therefore
@@ -63,7 +59,8 @@ import org.apache.spark.sql.functions._
   *     `currentSnapshotId` takes max(CURRENT, highest v*.json), so a crash
   *     (or a racing slow writer) that leaves CURRENT behind heals on the
   *     next read. A crash before the claim leaves only an unreferenced
-  *     data/d-<uuid> dir, reclaimed by `vacuum` after its grace window;
+  *     data/d-<uuid> dir: no snapshot lists it, so no scan reads it (and
+  *     nothing deletes it — the table has no orphan-file sweep);
   *   - atomicity of the claim is the storage layer's no-overwrite rename
   *     (server-side atomic on HDFS; object stores need a conditional-put
   *     committer); on LOCAL FS — where POSIX rename overwrites — the
@@ -108,7 +105,7 @@ final class IceTable(val root: String) {
 
   /** One snapshot-log entry. `files` are the entries RECORDED IN THIS
     * snapshot's JSON: the full live set when `delta` is false (a BASE:
-    * first/periodic append, expire, rewrite), only the newly added files
+    * first/periodic append), only the newly added files
     * when true. Use `liveFiles` for the resolved live set. `chainLen` =
     * number of delta snapshots between this one and its base (0 for a
     * base). */
@@ -132,33 +129,40 @@ final class IceTable(val root: String) {
     } finally in.close()
   }
 
+  private lazy val fc: FileContext = FileContext.getFileContext(rootPath.toUri, hadoopConf)
+
   /** Write `content` to `dst` atomically: temp file + overwrite-rename
     * (FileContext rename is atomic on HDFS and local FS). */
   private def atomicWrite(dst: Path, content: String): Unit = {
     val tmp = new Path(dst.getParent, s".${dst.getName}.tmp-${System.nanoTime()}")
     val out = new OutputStreamWriter(fs.create(tmp, true), StandardCharsets.UTF_8)
     try out.write(content) finally out.close()
-    val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
-    // local ChecksumFs renames the data file and its .crc sibling as TWO
-    // steps, so two concurrent overwrites of the same dst (e.g. vacuum's
-    // key-index sync beside an active appender) can interleave such that
-    // the loser's crc rename hits the winner's fresh .crc and throws
-    // FileAlreadyExistsException (observed under heavy host load). Both
-    // writers carry a complete value and last-writer-wins is the contract
-    // here, so clear the stale sibling and retry; readers tolerate a
-    // briefly absent .crc (ChecksumFs skips verification then).
-    var attempts = 0
-    var renamed = false
-    while (!renamed) {
-      try {
-        fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-        renamed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException if attempts < 3 =>
-          attempts += 1
-          fs.delete(new Path(dst.getParent, s".${dst.getName}.crc"), false)
-      }
+    try fc.rename(tmp, dst, Options.Rename.OVERWRITE)
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => retryAfterCrcClash(tmp, dst, attemptsLeft = 3)
     }
+  }
+
+  /** atomicWrite's recovery from the `.crc` race. Local ChecksumFs renames
+    * the data file and its .crc sibling as TWO steps, so two concurrent
+    * overwrites of the same dst (e.g. two appenders' post-commit key-index
+    * syncs) can interleave such that the loser's crc rename hits the
+    * winner's fresh .crc and throws FileAlreadyExistsException — usually
+    * AFTER the loser's data file has already been renamed onto dst. Both
+    * writers carry a complete value and last-writer-wins is the contract
+    * here, so: clear the stale sibling; if `tmp` is gone its content has
+    * landed (drop its orphaned .crc) and the write is done; else rename
+    * again. Readers tolerate a briefly absent .crc (ChecksumFs skips
+    * verification then). */
+  private[graft] def retryAfterCrcClash(tmp: Path, dst: Path, attemptsLeft: Int): Unit = {
+    fs.delete(new Path(dst.getParent, s".${dst.getName}.crc"), false)
+    if (!fs.exists(tmp)) fs.delete(new Path(tmp.getParent, s".${tmp.getName}.crc"), false): Unit
+    else
+      try fc.rename(tmp, dst, Options.Rename.OVERWRITE)
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException if attemptsLeft > 1 =>
+          retryAfterCrcClash(tmp, dst, attemptsLeft - 1)
+      }
   }
 
   /** Highest committed snapshot id: max of the CURRENT hint and the
@@ -225,8 +229,7 @@ final class IceTable(val root: String) {
   /** Resolved live file set of the current snapshot (empty for a fresh table). */
   def currentLiveFiles: Seq[FileEntry] = current.map(liveFiles).getOrElse(Nil)
 
-  /** Write/overwrite a snapshot JSON WITHOUT moving CURRENT (also used by
-    * vacuum's in-place manifest rebase). */
+  /** A snapshot's JSON manifest. */
   private def snapshotJsonString(s: Snapshot): String = {
     val node: ObjectNode = mapper.createObjectNode()
     node.put("id", s.id)
@@ -242,11 +245,6 @@ final class IceTable(val root: String) {
       fn.put("min_ts_us", f.minTsUs); fn.put("max_ts_us", f.maxTsUs)
     }
     mapper.writerWithDefaultPrettyPrinter.writeValueAsString(node)
-  }
-
-  private def writeSnapshotJson(s: Snapshot): Unit = {
-    fs.mkdirs(snapDir)
-    atomicWrite(new Path(snapDir, f"v${s.id}%05d.json"), snapshotJsonString(s))
   }
 
   /** COMMIT POINT: claim snapshots/v<id>.json by rename-WITHOUT-overwrite
@@ -267,7 +265,6 @@ final class IceTable(val root: String) {
     try out.write(snapshotJsonString(s)) finally out.close()
     if (isLocalFs) claimLocalFs(tmp, dst)
     else {
-      val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
       try { fc.rename(tmp, dst); true }
       catch {
         case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException
@@ -470,8 +467,8 @@ final class IceTable(val root: String) {
     scanSnapshot(spark, current, loUs, hiUs)
 
   /** Time travel: scan a PAST snapshot by id (data files are immutable and
-    * expiry/rewrite are metadata-only, so every committed snapshot stays
-    * readable — the Iceberg `VERSION AS OF` analog). */
+    * never deleted, so every committed snapshot stays readable — the
+    * Iceberg `VERSION AS OF` analog). */
   def scanAt(spark: SparkSession, snapshotId: Long, loUs: Long = Long.MinValue, hiUs: Long = Long.MaxValue): DataFrame = {
     require(snapshot(snapshotId).isDefined, s"unknown snapshot id $snapshotId for table $root")
     scanSnapshot(spark, snapshot(snapshotId), loUs, hiUs)
@@ -485,166 +482,10 @@ final class IceTable(val root: String) {
     else Parquet.readFiles(spark, files)
   }
 
-  /** Retention expiry: metadata-only snapshot dropping files entirely older
-    * than the cutoff. Rows in straddling files are NOT dropped here — pair
-    * with a filter at read time or a rewrite; tier buckets align to file
-    * boundaries in practice so straddlers are rare. Expiry changes the set
-    * non-monotonically, so it always writes a BASE manifest (and thereby
-    * compacts any delta chain above it). Returns new snapshot id. */
-  def expireOlderThan(cutoffUs: Long): Long =
-    claimCommit { (parent, id) =>
-      // kept set re-derived per claim attempt: a concurrent append between
-      // attempts is thereby included, never silently dropped
-      val kept = parent.map(liveFiles).getOrElse(Nil).filter(_.maxTsUs >= cutoffUs)
-      Snapshot(id, parent.map(_.id).getOrElse(0L), "expire", kept)
-    }.id
-
-  /** Compaction rewrite: coalesce the current file set into ~`targetFiles`
-    * new data files and commit as an op="rewrite" snapshot (Iceberg
-    * rewriteDataFiles analog) — always a BASE manifest, so it also
-    * collapses the delta chain. Old files stay on disk for time travel;
-    * `expireOlderThan`-style manifest pruning governs logical visibility.
-    * Rows and their `tsCol` stats are preserved exactly. */
-  def rewriteCompact(spark: SparkSession, tsCol: String, targetFiles: Int = 1): Long = {
-    // a rewrite's manifest is exactly the data it compacted, so unlike
-    // append/expire it CANNOT absorb a concurrent commit by rebuilding
-    // metadata — if the parent moved while we compacted, committing would
-    // silently drop the racer's files. Detect and refuse instead.
-    val parentAtScan = currentSnapshotId
-    val df = scan(spark).coalesce(math.max(targetFiles, 1))
-    val dir = stageDataDir(df)
-    val entries = statsOf(spark, dir, tsCol)
-    claimCommit { (parent, id) =>
-      val pid = parent.map(_.id).getOrElse(0L)
-      if (pid != parentAtScan)
-        throw new java.util.ConcurrentModificationException(
-          s"rewriteCompact on $root: snapshot moved $parentAtScan -> $pid during compaction; re-run")
-      Snapshot(id, pid, "rewrite", entries)
-    }.id
-  }
-
   /** Total (rows, bytes) in the current snapshot — table-level metrics. */
   def metrics: (Long, Long) = {
     val fs = currentLiveFiles
     (fs.map(_.rows).sum, fs.map(_.bytes).sum)
-  }
-
-  /** PHYSICAL space reclamation (Iceberg expire_snapshots +
-    * remove_orphan_files analog): drop snapshot JSONs older than
-    * `keepFromId` and delete every data file no kept snapshot references.
-    * `expireOlderThan`/`rewriteCompact` are metadata-only so time travel
-    * stays cheap; at retention scale the aged bytes must eventually be
-    * reclaimed, and this is that action. Time travel to ids < keepFromId
-    * is gone afterwards; CURRENT and all newer snapshots stay readable.
-    *
-    * Kept DELTA snapshots whose parent chain dips below the horizon are
-    * first rewritten in place as base manifests (same id/parent/op/key,
-    * full file list — Iceberg's manifest rewrite), so resolution never
-    * touches a deleted JSON. Stale keys.json entries are left alone
-    * deliberately: "was this epoch committed" must stay true for replay
-    * idempotency even after its snapshot is vacuumed.
-    *
-    * SAFE TO RUN CONCURRENTLY WITH WRITERS (the out-of-band janitor case,
-    * TierStore.vacuumRetention) under two rules, both Iceberg's own:
-    *   - unreferenced data files are deleted ONLY if older than `minAgeMs`
-    *     (default 1h — Iceberg remove_orphan_files' older_than): a writer
-    *     that has staged data but not yet claimed its snapshot JSON is
-    *     invisible to the manifest walk, and the grace window is what keeps
-    *     its fresh files alive until the claim lands;
-    *   - snapshot JSONs are deleted only BELOW the horizon; anything at or
-    *     above it — including claims that raced in while vacuum ran — is
-    *     never touched (claims above the CURRENT hint ARE commits here,
-    *     see the commit protocol).
-    * Callers doing offline cleanup of a known-quiesced table may pass
-    * minAgeMs = 0 to reclaim everything immediately.
-    *
-    * Returns (snapshots deleted, data files deleted, bytes freed). */
-  def vacuum(keepFromId: Long, minAgeMs: Long = 3600 * 1000L): (Int, Int, Long) = {
-    val curId = currentSnapshotId
-    require(keepFromId <= curId, s"keepFromId $keepFromId is ahead of CURRENT $curId")
-    // capture idempotency keys FIRST: a crash between a keyed commit and
-    // its post-commit index write leaves the key only in the snapshot log,
-    // and deleting that JSON below would lose it — breaking exactly-once
-    // replay. syncKeyIndex persists every committed key before any delete.
-    syncKeyIndex()
-    // memoized snapshot reads: the existence pass, the delta-rebase chain
-    // walks, and the referenced-set resolution otherwise re-read the same
-    // small JSONs many times — each a metadata RPC on object storage
-    val cache = scala.collection.mutable.Map.empty[Long, Option[Snapshot]]
-    def snap(id: Long): Option[Snapshot] = cache.getOrElseUpdate(id, snapshot(id))
-    def resolved(s: Snapshot): Seq[FileEntry] =
-      if (!s.delta) s.files
-      else snap(s.parentId).map(p => resolved(p) ++ s.files).getOrElse(throw new IllegalStateException(
-        s"delta snapshot ${s.id} references missing parent ${s.parentId} in $root"))
-    val keptIds = (keepFromId to curId).flatMap(id => snap(id).map(_ => id))
-    // rebase kept deltas whose parent chain crosses the horizon BEFORE
-    // deleting (ids can skip after crashed commits, so walk the chain
-    // rather than arithmetic on chainLen — bounded at BaseEvery reads)
-    keptIds.foreach { id =>
-      val s = snap(id).get
-      if (s.delta) {
-        var cur = s
-        var crosses = false
-        while (cur.delta && !crosses) {
-          if (cur.parentId < keepFromId) crosses = true
-          else cur = snap(cur.parentId).get
-        }
-        if (crosses) {
-          val rebased = s.copy(files = resolved(s), delta = false, chainLen = 0)
-          writeSnapshotJson(rebased)
-          cache(id) = Some(rebased)
-        }
-      }
-    }
-    val referenced = keptIds.flatMap(id => resolved(snap(id).get)).map(f => new Path(f.path)).toSet
-    val ageCutoff = System.currentTimeMillis() - minAgeMs
-    // delete unreferenced data files + crashed-commit temp dirs, but only
-    // past the grace window — an in-flight writer's staged-but-unclaimed
-    // data is always younger than minAgeMs (see scaladoc)
-    var filesDeleted = 0
-    var bytesFreed = 0L
-    if (fs.exists(dataDir)) {
-      fs.listStatus(dataDir).foreach { d =>
-        if (d.getPath.getName.startsWith(".tmp-")) {
-          if (d.getModificationTime < ageCutoff) fs.delete(d.getPath, true): Unit
-        } else {
-          // skip _SUCCESS/._* markers — Hadoop convention for non-data files
-          fs.listStatus(d.getPath).foreach { f =>
-            val name = f.getPath.getName
-            if (!name.startsWith("_") && !name.startsWith(".") &&
-                !referenced.contains(f.getPath) && f.getModificationTime < ageCutoff) {
-              bytesFreed += f.getLen
-              filesDeleted += 1
-              fs.delete(f.getPath, false): Unit
-            }
-          }
-          if (!fs.listStatus(d.getPath).exists(f => !f.getPath.getName.startsWith("_")))
-            fs.delete(d.getPath, true): Unit
-        }
-      }
-    }
-    // drop pre-horizon snapshot JSONs ONLY. Ids above the horizon — even
-    // above the CURRENT hint — are committed claims (possibly racing this
-    // vacuum) and must survive; currentSnapshotId's listing-max already
-    // treats them as the table head.
-    var snapsDeleted = 0
-    if (fs.exists(snapDir)) {
-      fs.listStatus(snapDir).foreach { f =>
-        val n = f.getPath.getName
-        if (n.startsWith("v") && n.endsWith(".json")) {
-          scala.util.Try(n.stripPrefix("v").stripSuffix(".json").toLong).toOption.foreach { id =>
-            if (id < keepFromId) {
-              snapsDeleted += 1
-              fs.delete(f.getPath, false): Unit
-            }
-          }
-        } else if (n.startsWith(".") && n.contains(".claim-") && f.getModificationTime < ageCutoff) {
-          // abandoned claim temp (writer died mid-claim) — grace-aged
-          fs.delete(f.getPath, false): Unit
-        }
-      }
-    }
-    (snapsDeleted, filesDeleted, bytesFreed)
   }
 }
 
@@ -660,17 +501,28 @@ object IceTable {
   private[sources] def lockFor(root: String): Object =
     locks.computeIfAbsent(root, _ => new Object)
 
-  /** One NEVER-CLOSED FileChannel per commit-lock path per JVM: FileLock
+  /** One NEVER-CLOSED FileChannel per commit-lock file per JVM: FileLock
     * permits closing any channel to a file to release all of the JVM's
     * locks on it, so per-claim open/close could drop a concurrent
-    * winner's lock (see claimLocalFs). One descriptor per table, JVM
-    * lifetime. */
-  private val lockChannels =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.channels.FileChannel]()
-  private[sources] def lockChannelFor(p: java.nio.file.Path): java.nio.channels.FileChannel =
-    lockChannels.computeIfAbsent(p.toString, _ =>
-      java.nio.channels.FileChannel.open(p,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE))
+    * winner's lock (see claimLocalFs). The cache entry remembers the file
+    * identity it was opened on and is replaced when the file at `p` is no
+    * longer that file (a table root deleted and recreated): a lock on the
+    * deleted file would exclude no one who opens the new one. The stale
+    * channel is left open, since a claimant may still hold its lock; one
+    * descriptor per table per recreation, JVM lifetime. */
+  private final case class LockChannel(ch: java.nio.channels.FileChannel, fileKey: AnyRef)
+  private val lockChannels = new java.util.concurrent.ConcurrentHashMap[String, LockChannel]()
+  private def fileKeyOf(p: java.nio.file.Path): Option[AnyRef] =
+    scala.util.Try(java.nio.file.Files.readAttributes(
+      p, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey).toOption
+  private[graft] def lockChannelFor(p: java.nio.file.Path): java.nio.channels.FileChannel =
+    lockChannels.compute(p.toString, (_, cached) =>
+      if (cached != null && fileKeyOf(p).contains(cached.fileKey)) cached
+      else {
+        val ch = java.nio.channels.FileChannel.open(p,
+          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+        LockChannel(ch, fileKeyOf(p).orNull)
+      }).ch
 
   def apply(root: String): IceTable = new IceTable(root)
 }

@@ -1,10 +1,11 @@
-package graft.tools
+package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Dev tool: regenerate the golden files for the three non-SQL-expressible
   * (no_oracle) queries at sf0.001. Run when their parameters are
-  * intentionally changed; GoldenSpec pins the behavior in between. */
+  * intentionally changed; GoldenSpec pins the behavior in between.
+  * Usage: sbt "Test/runMain graft.GoldenGen" */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.001"

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Hard signal for the three no_oracle (non-SQL-expressible) queries: their
   * output is DETERMINISTIC (seeded hyperplanes / seeded hash permutations /
   * fixed fingerprint blocks), so it is pinned against golden files at
-  * sf0.001. Regenerate with graft.tools.GoldenGen on an INTENTIONAL
+  * sf0.001. Regenerate with graft.GoldenGen on an INTENTIONAL
   * parameter change; anything else failing here is a behavior regression
   * the driver's rows-only check would miss. */
 class GoldenSpec extends SparkSpec {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{CheckpointedRollup, Rollup}
 import graft.sources.{IceTable, TranscriptGen}
 
-/** Snapshot lineage, stat pruning, retention expiry, and crash-resume
+/** Snapshot lineage, stat pruning, commit races, and crash-resume
   * (SURVEY.md §5.6). */
 class IceTableSpec extends SparkSpec {
   import spark.implicits._
@@ -58,9 +58,8 @@ class IceTableSpec extends SparkSpec {
     assert(orphan.mkdirs())
     val id = t.append(turnsDf.where($"turn_idx" % 2 === 1), "ts")
     assert(id == 2, s"data dirs carry no ids — next claim is simply parent+1, got $id")
+    // the orphan is invisible to scans
     assert(t.scan(spark).count() == turnsDf.count())
-    // the orphan is invisible to scans and reclaimable by an aged vacuum
-    assert(t.vacuum(keepFromId = id, minAgeMs = 0)._1 == 1) // snapshot 1's JSON
   }
 
   test("a claimed snapshot JSON above the CURRENT hint IS the table head (pointer heals)") {
@@ -75,7 +74,7 @@ class IceTableSpec extends SparkSpec {
     assert(t.currentSnapshotId == id2, "listing-max must out-vote a stale CURRENT hint")
     assert(t.scan(spark).count() == turnsDf.count())
     // and the next commit parents off the healed head
-    val id3 = t.expireOlderThan(Long.MinValue)
+    val id3 = t.append(turnsDf.limit(5), "ts")
     assert(id3 == id2 + 1 && t.snapshot(id3).get.parentId == id2)
   }
 
@@ -116,10 +115,6 @@ class IceTableSpec extends SparkSpec {
     val id2 = t.append(half2, "ts")
     assert(t.scanAt(spark, id1).count() == half1.count())
     assert(t.scanAt(spark, id2).count() == turnsDf.count())
-    // expiry is metadata-only: the pre-expiry snapshot stays fully readable
-    t.expireOlderThan(Long.MaxValue)
-    assert(t.scan(spark).count() == 0L)
-    assert(t.scanAt(spark, id2).count() == turnsDf.count())
     intercept[IllegalArgumentException](t.scanAt(spark, 999L))
   }
 
@@ -138,35 +133,6 @@ class IceTableSpec extends SparkSpec {
     assert(pruned.inputFiles.length < t.scan(spark).inputFiles.length)
   }
 
-  test("expireOlderThan drops aged files metadata-only and keeps lineage") {
-    val t = IceTable(tmp("ice"))
-    val early = turnsDf.where($"ts" < "2025-01-15")
-    val late = turnsDf.where($"ts" >= "2025-01-15")
-    t.append(early, "ts")
-    t.append(late, "ts")
-    val cutoffUs = java.sql.Timestamp.valueOf("2025-01-15 00:00:00").getTime * 1000
-    val id = t.expireOlderThan(cutoffUs)
-    assert(t.current.get.op == "expire" && t.current.get.id == id)
-    assert(t.scan(spark).count() == late.count())
-    // expired snapshot still on disk (audit) — time travel sees old files
-    assert(t.liveFiles(2).map(_.rows).sum == early.count() + late.count())
-  }
-
-  test("rewriteCompact coalesces files, preserves rows, keeps time travel") {
-    val t = IceTable(tmp("ice"))
-    t.append(turnsDf.where($"turn_idx" % 2 === 0), "ts")
-    t.append(turnsDf.where($"turn_idx" % 2 === 1), "ts")
-    val before = t.scan(spark).orderBy("conv_id", "turn_idx").collect()
-    val nFilesBefore = t.currentLiveFiles.length
-    val id = t.rewriteCompact(spark, "ts", targetFiles = 1)
-    assert(t.current.get.op == "rewrite" && t.current.get.id == id)
-    assert(t.currentLiveFiles.length < nFilesBefore)
-    val after = t.scan(spark).orderBy("conv_id", "turn_idx").collect()
-    assert(after.sameElements(before))
-    // pre-rewrite snapshot still resolvable
-    assert(t.liveFiles(2).map(_.rows).sum == before.length)
-  }
-
   test("append manifests are delta: snapshot JSON entries stay O(new files) across N appends") {
     val t = IceTable(tmp("ice"))
     val days = (10 to 19).map(d => turnsDf.where($"ts" >= f"2025-01-$d%02d" && $"ts" < f"2025-01-${d + 1}%02d"))
@@ -179,9 +145,6 @@ class IceTableSpec extends SparkSpec {
     // the resolved live set is still complete and scan-correct
     assert(t.currentLiveFiles.map(_.rows).sum == days.map(_.count()).sum)
     assert(t.scan(spark).count() == days.map(_.count()).sum)
-    // expire compacts the chain into a base manifest
-    t.expireOlderThan(Long.MinValue)
-    assert(!t.current.get.delta && t.current.get.files.length == t.currentLiveFiles.length)
   }
 
   test("keyed lookup uses the keys.json index, heals when stale, survives deletion") {
@@ -201,105 +164,6 @@ class IceTableSpec extends SparkSpec {
     // replay through the healed index is still a no-op
     val replay = t.append(turnsDf.where($"turn_idx" % 5 === 2), "ts", key = Some("ck#epoch-2"))
     assert(replay == ids(2) && t.currentSnapshotId == ids.last)
-  }
-
-  test("vacuum reclaims bytes of unreferenced files, drops old snapshots, rebases kept deltas") {
-    val t = IceTable(tmp("ice"))
-    val thirds = (0 until 3).map(k => turnsDf.where($"turn_idx" % 3 === k))
-    thirds.foreach(d => t.append(d.coalesce(1), "ts"))
-    val compactId = t.rewriteCompact(spark, "ts") // pre-compaction files now unreferenced
-    val extraId = t.append(thirds(0).limit(7).coalesce(1), "ts") // a kept DELTA over the rewrite base
-    val expected = t.scan(spark).count()
-
-    val (snaps, files, bytes) = t.vacuum(keepFromId = compactId, minAgeMs = 0)
-    assert(snaps == 3 && files == 3 && bytes > 0,
-      s"3 pre-compaction snapshots + their files must go, got ($snaps, $files, $bytes)")
-    // current lineage unaffected: full scan + the kept delta still resolve
-    assert(t.currentSnapshotId == extraId)
-    assert(t.scan(spark).count() == expected)
-    assert(t.scanAt(spark, compactId).count() == turnsDf.count())
-    // pre-horizon time travel is gone (that is the point of vacuum)
-    intercept[IllegalArgumentException](t.scanAt(spark, 1L))
-    // idempotent: nothing left to reclaim
-    assert(t.vacuum(keepFromId = compactId, minAgeMs = 0) == ((0, 0, 0L)))
-  }
-
-  test("vacuum grace window spares fresh unreferenced data (concurrent-writer safety)") {
-    val t = IceTable(tmp("ice"))
-    t.append(turnsDf.where($"turn_idx" % 2 === 0).coalesce(1), "ts")
-    val compactId = t.rewriteCompact(spark, "ts") // snapshot 1's files now unreferenced
-    // default-style grace: everything here is younger than minAgeMs, so the
-    // unreferenced bytes (≈ a mid-commit writer's staged data) must survive
-    val (snapsA, filesA, bytesA) = t.vacuum(keepFromId = compactId, minAgeMs = 3600 * 1000L)
-    assert(filesA == 0 && bytesA == 0L, s"grace window must spare fresh files, got ($filesA, $bytesA)")
-    assert(snapsA == 1, "metadata below the horizon still goes (it is committed, not in-flight)")
-    assert(t.scan(spark).count() > 0)
-    // aged (grace 0): now the unreferenced bytes are reclaimed
-    val (_, filesB, bytesB) = t.vacuum(keepFromId = compactId, minAgeMs = 0)
-    assert(filesB > 0 && bytesB > 0L)
-    assert(t.scan(spark).count() > 0)
-  }
-
-  test("vacuum preserves idempotency keys of vacuumed snapshots") {
-    val t = IceTable(tmp("ice"))
-    val half1 = turnsDf.where($"turn_idx" % 2 === 0)
-    val half2 = turnsDf.where($"turn_idx" % 2 === 1)
-    val id0 = t.append(half1, "ts", key = Some("ck#e0"))
-    val id1 = t.append(half2, "ts", key = Some("ck#e1"))
-    // crash-window simulation: the post-commit index write never happened
-    assert(new java.io.File(s"${t.root}/keys.json").delete())
-    val id2 = t.rewriteCompact(spark, "ts")
-    t.vacuum(keepFromId = id2, minAgeMs = 0) // deletes the keyed snapshots' JSONs
-    assert(t.snapshot(id0).isEmpty)
-    // replay of the vacuumed epochs must STILL be a no-op: vacuum synced
-    // the key index from the log BEFORE deleting the JSONs
-    assert(t.append(half1, "ts", key = Some("ck#e0")) == id0)
-    assert(t.appendIdForKey("ck#e1").contains(id1))
-    assert(t.currentSnapshotId == id2)
-  }
-
-  test("vacuum rebases a kept delta whose chain crosses the horizon") {
-    val t = IceTable(tmp("ice"))
-    val thirds = (0 until 3).map(k => turnsDf.where($"turn_idx" % 3 === k))
-    val ids = thirds.map(d => t.append(d.coalesce(1), "ts")) // base, delta, delta
-    val expected = t.scan(spark).count()
-    // keep only the LAST delta: its chain references both dropped snapshots,
-    // so vacuum must materialize it as a base manifest first
-    val (snaps, files, bytes) = t.vacuum(keepFromId = ids.last, minAgeMs = 0)
-    assert(snaps == 2 && files == 0 && bytes == 0L,
-      s"all data files stay referenced by the rebased head, got ($snaps, $files, $bytes)")
-    assert(!t.current.get.delta && t.scan(spark).count() == expected)
-    assert(t.currentLiveFiles.length == 3)
-  }
-
-  test("vacuum running beside an active writer never loses a committed append") {
-    val root = tmp("ice")
-    val writer = IceTable(root)
-    val janitor = IceTable(root)
-    val slices = (0 until 6).map(k => turnsDf.where($"turn_idx" % 6 === k).coalesce(1))
-    writer.append(slices.head, "ts")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val appends = scala.concurrent.Future {
-      slices.tail.map(s => writer.append(s, "ts"))
-    }
-    // the out-of-band janitor loops with the DEFAULT grace window while
-    // the writer commits — the exact TierStore.vacuumRetention shape the
-    // old design corrupted (it deleted claims above the CURRENT hint and
-    // swept staged-but-unclaimed data)
-    var sweeps = 0
-    while (!appends.isCompleted) {
-      janitor.vacuum(keepFromId = janitor.currentSnapshotId)
-      sweeps += 1
-      Thread.sleep(20)
-    }
-    scala.concurrent.Await.result(appends, scala.concurrent.duration.Duration(300, "s"))
-    pool.shutdown()
-    assert(sweeps > 0)
-    assert(writer.currentSnapshotId == 6)
-    assert(writer.scan(spark).count() == turnsDf.count(),
-      "every append must survive concurrent vacuuming")
   }
 
   test("cross-process claim race: exactly one of N concurrent claimants wins an id") {
@@ -335,6 +199,51 @@ class IceTableSpec extends SparkSpec {
     assert(json.contains(s"claimant-$winner"), "the committed JSON must be the winner's, intact")
     assert(new java.io.File(s"$root/snapshots/.commit.lock").exists(),
       "the permanent per-table commit-lock file exists (never deleted - see claimLocalFs)")
+  }
+
+  test("atomicWrite: a rename whose data file landed before its .crc clashed counts as written") {
+    // the loser's state in the ChecksumFs .crc race (see retryAfterCrcClash):
+    // its data file already sits at dst, its staged file is gone, and the
+    // winner's stale .crc sits beside dst
+    val t = IceTable(tmp("ice"))
+    t.append(turnsDf.limit(5), "ts")
+    val fs = new org.apache.hadoop.fs.Path(t.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dst = new org.apache.hadoop.fs.Path(t.root, "keys.json")
+    val staged = new org.apache.hadoop.fs.Path(t.root, ".keys.json.tmp-landed")
+    val landed = """{"up_to":1,"keys":{}}"""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/keys.json"), landed)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/.keys.json.crc"), "stale")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/..keys.json.tmp-landed.crc"), "orphan")
+    // renaming the missing staged file again would throw FileNotFoundException
+    t.retryAfterCrcClash(staged, dst, attemptsLeft = 3)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"${t.root}/keys.json")) == landed)
+    assert(!new java.io.File(s"${t.root}/.keys.json.crc").exists(), "the stale .crc must go")
+    assert(!new java.io.File(s"${t.root}/..keys.json.tmp-landed.crc").exists(), "the staged file's orphaned .crc must go")
+    assert(!fs.exists(staged))
+    // a staged file that is still there is renamed onto dst
+    val out = fs.create(staged, true)
+    try out.write("""{"up_to":0,"keys":{}}""".getBytes) finally out.close()
+    t.retryAfterCrcClash(staged, dst, attemptsLeft = 3)
+    assert(!fs.exists(staged) && java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"${t.root}/keys.json")) == """{"up_to":0,"keys":{}}""")
+  }
+
+  test("a table root deleted and recreated gets a commit lock on the new lock file") {
+    val root = tmp("ice")
+    IceTable(root).append(turnsDf.limit(5), "ts") // caches a lock channel
+    graft.Fs.deleteTreeQuietly(root)
+    IceTable(root).append(turnsDf.limit(5), "ts")
+    val p = java.nio.file.Paths.get(s"$root/snapshots/.commit.lock")
+    val held = IceTable.lockChannelFor(p).lock()
+    val other = java.nio.channels.FileChannel.open(p, java.nio.file.StandardOpenOption.WRITE)
+    try {
+      // the JVM's lock table is keyed by file identity: a second lock on the
+      // SAME file overlaps, while a lock on the deleted file would not
+      intercept[java.nio.channels.OverlappingFileLockException](other.tryLock())
+    } finally {
+      held.release()
+      other.close()
+    }
   }
 
   test("batched day units: one job per batch, per-day markers, empty days stay scannable") {

@@ -7,7 +7,7 @@ import graft.functions.{Gorilla, GorillaAgg}
 import graft.operators.{CheckpointedRollup, Rollup, TierStore}
 import graft.sources.{IceTable, TranscriptGen}
 
-/** End-to-end north-star pipeline: raw IceTable → Gorilla tier IceTables →
+/** End-to-end north-star pipeline: raw IceTable → Gorilla day-dir tiers →
   * retention ladder; plus exact replay from gorilla blocks. */
 class TierStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -24,18 +24,20 @@ class TierStoreSpec extends SparkSpec {
 
   test("tier store: 1d tier from the store equals a direct raw rollup; gorilla replays raw") {
     val (src, turns) = fixture
-    val tiers = TierStore.build(spark, src, tmp("tiers"), length($"text").cast("double"))
+    val root = tmp("tiers")
+    TierStore.sync(spark, src, root, length($"text").cast("double"))
 
     // correctness: store's 1d stat blocks == direct raw→1d rollup
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select($"conv_id", $"bucket_start", $"n_rows", round($"sum", 6).as("s"), $"min", $"max")
       .orderBy("conv_id", "bucket_start").collect().toSeq
     val direct = Rollup.rollupRaw(turns, $"conv_id", $"ts", $"text_len", "1 day")
-    assert(canon(tiers.t1d.scan(spark)) == canon(direct))
+    assert(canon(TierStore.scanTier(spark, s"$root/1d")) == canon(direct))
 
     // gorilla replay via the native Generator: decoding every 1m gblock
     // reproduces the raw points
-    val replayed = tiers.t1m.scan(spark)
+    val t1m = TierStore.scanTier(spark, s"$root/1m")
+    val replayed = t1m
       .select($"conv_id", graft.plans.GorillaExplode.gorillaExplode($"gblock"))
       .orderBy("conv_id", "ts_us", "v").collect()
     val raw = turns
@@ -45,20 +47,11 @@ class TierStoreSpec extends SparkSpec {
     assert(replayed.sameElements(raw))
 
     // the Generator and the UDF decode path agree
-    val viaUdf = tiers.t1m.scan(spark)
+    val viaUdf = t1m
       .select($"conv_id", explode(GorillaAgg.decodeUdf($"gblock")).as("p"))
       .select($"conv_id", $"p.ts_us", $"p.v")
       .orderBy("conv_id", "ts_us", "v").collect()
     assert(viaUdf.sameElements(replayed))
-
-    // per-tier slice sizing: the fine tier keeps ~day slices (many files,
-    // expiry granularity) while coarse tiers must NOT inherit that count —
-    // a month-span fixture gets weekly 1h files and ~one 1d file
-    val (f1m, f1h, f1d) = (tiers.t1m.currentLiveFiles.length,
-      tiers.t1h.currentLiveFiles.length, tiers.t1d.currentLiveFiles.length)
-    assert(f1m >= 10, s"1m tier should keep day-grained slices, got $f1m files")
-    assert(f1h <= 8, s"1h tier must not over-slice, got $f1h files")
-    assert(f1d <= 3, s"1d tier must not over-slice, got $f1d files")
   }
 
   test("incremental sync: appending raw data rebuilds ONLY the touched days at EVERY tier") {
@@ -135,13 +128,8 @@ class TierStoreSpec extends SparkSpec {
         assert(marker(p4, tier, d).get(f).asLong == marker(p1, tier, d).get(f).asLong, s"$tier day $d marker $f")
       // row-for-row equal; float sums within 1e-9 relative (summation order
       // follows the batch's partitioning)
-      def side(root: String, p: String) = TierStore.scanTier(spark, s"$root/$tier")
-        .select((keys.map(col) ++ (exact ++ approx).map(k => col(k).as(p + k))): _*)
-      val j = side(p4, "a_").join(side(p1, "b_"), keys, "full_outer")
-      val bad = j.where(
-        exact.map(k => !col("a_" + k).eqNullSafe(col("b_" + k))).reduce(_ || _) ||
-          approx.map(k => col("a_" + k).isNull || col("b_" + k).isNull ||
-            abs(col("a_" + k) - col("b_" + k)) > abs(col("b_" + k)) * 1e-9 + 1e-9).reduce(_ || _))
+      val bad = mismatches(TierStore.scanTier(spark, s"$p4/$tier"), TierStore.scanTier(spark, s"$p1/$tier"),
+        keys, exact, approx)
       assert(bad.count() == 0, s"$tier differs between parallelism 4 and 1")
     }
 
@@ -157,24 +145,26 @@ class TierStoreSpec extends SparkSpec {
 
   test("retention ladder expires fine tiers earlier than coarse tiers") {
     val (src, turns) = fixture
-    val tiers = TierStore.build(spark, src, tmp("tiers2"), length($"text").cast("double"))
+    val root = tmp("tiers2")
+    TierStore.sync(spark, src, root, length($"text").cast("double"))
     val maxUs = turns.agg(max(unix_micros($"ts".cast("timestamp")))).head().getLong(0)
     val day = 86400000000L
+    def dayDirs(tier: String) = new java.io.File(s"$root/$tier").listFiles().filter(_.getName.startsWith("day="))
+    def bytesOnDisk(tier: String) = dayDirs(tier).flatMap(_.listFiles()).map(_.length).sum
+    val (dirs1m, bytes1m, dirs1d) = (dayDirs("1m").length, bytesOnDisk("1m"), dayDirs("1d").length)
     // keep 2 days of 1m, 10 days of 1h, everything for 1d
-    TierStore.applyRetention(tiers, maxUs, 2 * day, 10 * day, 1000 * day)
-    val lo1m = tiers.t1m.scan(spark).agg(min($"bucket_start")).head().getTimestamp(0)
-    val lo1h = tiers.t1h.scan(spark).agg(min($"bucket_start")).head().getTimestamp(0)
-    val lo1d = tiers.t1d.scan(spark).agg(min($"bucket_start")).head().getTimestamp(0)
+    for ((tier, ttl) <- Seq(("1m", 2 * day), ("1h", 10 * day), ("1d", 1000 * day)))
+      TierStore.expireDays(spark, s"$root/$tier", maxUs - ttl)
+    def lo(tier: String) =
+      TierStore.scanTier(spark, s"$root/$tier").agg(min($"bucket_start")).head().getTimestamp(0)
+    val (lo1m, lo1h, lo1d) = (lo("1m"), lo("1h"), lo("1d"))
     assert(lo1m.after(lo1h) || lo1m.equals(lo1h), s"1m ($lo1m) must not retain longer than 1h ($lo1h)")
     assert(!lo1d.after(lo1h), "1d keeps at least as much history as 1h")
-    assert(tiers.t1m.current.get.op == "expire")
 
-    // out-of-band janitor: physical reclamation frees the 1m tier's aged
-    // bytes (its retention bit hardest) and post-vacuum scans are unchanged
-    val before1m = tiers.t1m.scan(spark).count()
-    val freed = TierStore.vacuumRetention(tiers, minAgeMs = 0) // quiesced table
-    assert(freed.head._3 > 0, s"1m tier must free bytes, got $freed")
-    assert(tiers.t1m.scan(spark).count() == before1m)
-    assert(tiers.t1d.scan(spark).count() > 0)
+    // expiry is physical: the 1m tier (its retention bit hardest) lost day
+    // dirs and bytes on disk, and the 1d tier is untouched
+    assert(dayDirs("1m").length < dirs1m, s"1m day dirs: $dirs1m -> ${dayDirs("1m").length}")
+    assert(bytesOnDisk("1m") < bytes1m, s"1m bytes: $bytes1m -> ${bytesOnDisk("1m")}")
+    assert(dayDirs("1d").length == dirs1d)
   }
 }
