@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.{InputStreamReader, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -9,12 +7,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IceTable, Parquet}
+import graft.sources.{IceTable, MetaFiles, Parquet}
 
 /** Resumable tier build: raw IceTable → 1m-tier parquet, one event-time DAY
   * per work unit, each unit committed with a lineage-carrying checkpoint.
@@ -42,8 +40,9 @@ import graft.sources.{IceTable, Parquet}
   * bounded thread pool (`parallelism`) — on a 1000-executor cluster this
   * keeps the cluster busy while one day's final stage drains, and at years
   * of history it removes the serial per-day driver latency. All checkpoint
-  * and output I/O goes through the Hadoop FileSystem API, so the build
-  * works against HDFS/object storage, not just the local filesystem.
+  * and output I/O goes through the Hadoop FileSystem API (markers through
+  * sources.MetaFiles), so the build works against HDFS/object storage,
+  * not just the local filesystem.
   */
 object CheckpointedRollup {
 
@@ -64,12 +63,9 @@ object CheckpointedRollup {
   trait DaySource {
     def pendingDays: Seq[Long]
     def dayFingerprint(dayUs: Long): Long
-    def scanDay(spark: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame
     /** Scan several days as ONE relation (one Spark job for a whole batch
-      * of day units — see runUnits batching). Default: union of per-day
-      * scans; sources override with a single pruned scan. */
-    def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
-      daysUs.map(scanDay(spark, _)).reduce(_.unionByName(_))
+      * of day units — see runUnits batching). */
+    def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame
     /** Lineage id recorded in each marker (source snapshot id or 0). */
     def lineageId: Long
   }
@@ -88,10 +84,7 @@ object CheckpointedRollup {
         ((h * 31 + f.path.hashCode) * 31 + f.rows) * 31 + f.bytes
       }
     }
-    def scanDay(spark: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame =
-      table.scan(spark, dayUs, dayUs + DayUs - 1)
-        .where(col(tsCol) >= timestamp_micros(lit(dayUs)) && col(tsCol) < timestamp_micros(lit(dayUs + DayUs)))
-    override def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame = {
       // one stat-pruned scan over the batch's envelope; an OR of per-day
       // ranges keeps skipped (unchanged) days inside the envelope out
       val inDay = daysUs
@@ -108,7 +101,7 @@ object CheckpointedRollup {
     * upstream changes this fingerprint and invalidates it downstream. */
   final class DayDirSource(spark: SparkSession, dir: String) extends DaySource {
     private val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private def marker(dayUs: Long) = markerPath(dir, dayUs)
+    private val meta = new MetaFiles(fs)
     def pendingDays: Seq[Long] = {
       val ck = new Path(dir, "_checkpoints")
       if (!fs.exists(ck)) Nil
@@ -117,17 +110,12 @@ object CheckpointedRollup {
         .map(n => n.stripPrefix("day-").stripSuffix(".json").toLong)
         .toSeq.sorted
     }
-    def dayFingerprint(dayUs: Long): Long = {
-      val p = marker(dayUs)
-      if (!fs.exists(p)) 0L
-      else {
-        val n = mapper.readTree(readFully(fs, p))
+    def dayFingerprint(dayUs: Long): Long =
+      meta.read(markerPath(dir, dayUs)).map { json =>
+        val n = mapper.readTree(json)
         ((n.get("source_files_fp").asLong * 31 + n.get("rows").asLong) * 31 + n.get("bytes").asLong)
-      }
-    }
-    def scanDay(sparkS: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame =
-      Parquet.read(sparkS, s"$dir/day=$dayUs")
-    override def scanDays(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
+      }.getOrElse(0L)
+    def scanDays(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
       Parquet.read(sparkS, daysUs.map(d => s"$dir/day=$d"): _*)
     def lineageId: Long = 0L
   }
@@ -135,22 +123,10 @@ object CheckpointedRollup {
   private def markerPath(outDir: String, dayUs: Long) =
     new Path(outDir, s"_checkpoints/day-$dayUs.json")
 
-  private def readFully(fs: FileSystem, p: Path): String = {
-    val in = new InputStreamReader(fs.open(p), StandardCharsets.UTF_8)
-    try {
-      val sb = new StringBuilder
-      val buf = new Array[Char](4096)
-      var n = in.read(buf)
-      while (n >= 0) { sb.appendAll(buf, 0, n); n = in.read(buf) }
-      sb.toString
-    } finally in.close()
-  }
-
   def isDone(spark: SparkSession, outDir: String, dayUs: Long, fingerprint: Long): Boolean = {
     val p = markerPath(outDir, dayUs)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val n = mapper.readTree(readFully(fs, p))
+    new MetaFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration)).read(p).exists { json =>
+      val n = mapper.readTree(json)
       n.has("source_files_fp") && n.get("source_files_fp").asLong == fingerprint
     }
   }
@@ -191,9 +167,9 @@ object CheckpointedRollup {
     * its marker chains downstream) do not depend on which days shared its
     * batch.
     *
-    * Batch size: `unitBatch` > 0 fixes it; 0 sizes batches so the to-run
-    * days fill the `parallelism` pool in ONE wave, ceil(days /
-    * parallelism), capped at `MaxAutoBatch` days. A second wave would pay
+    * Batch size: batches are sized so the to-run days fill the
+    * `parallelism` pool in ONE wave, ceil(days / parallelism), capped at
+    * `MaxAutoBatch` days. A second wave would pay
     * every batch's fixed cost again; past the cap, build time was measured
     * flat across 5-9 days per batch at 140 days on 8 threads
     * (OPTIMIZATION_r06.md). Batches hold one day under `failAfter` (it
@@ -205,10 +181,10 @@ object CheckpointedRollup {
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       dayBucket: Column,
       failAfter: Option[Int] = None,
-      parallelism: Int = 1,
-      unitBatch: Int = 0): Seq[DayResult] = {
+      parallelism: Int = 1): Seq[DayResult] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(outDir).getFileSystem(conf)
+    val meta = new MetaFiles(fs)
     val snapId = source.lineageId
     fs.mkdirs(new Path(outDir, "_checkpoints"))
     val done = new AtomicInteger(0)
@@ -240,11 +216,7 @@ object CheckpointedRollup {
       node.put("rows", rows)
       node.put("bytes", bytes)
       node.put("wall_ms", wallMs)
-      val tmp = new Path(outDir, s"_checkpoints/.day-$dayUs.tmp")
-      val out = new OutputStreamWriter(fs.create(tmp, true), StandardCharsets.UTF_8)
-      try out.write(mapper.writeValueAsString(node)) finally out.close()
-      FileContext.getFileContext(new Path(outDir).toUri, conf)
-        .rename(tmp, markerPath(outDir, dayUs), Options.Rename.OVERWRITE)
+      meta.replace(markerPath(outDir, dayUs), mapper.writeValueAsString(node))
       done.incrementAndGet()
       DayResult(dayUs, rows, bytes, skipped = false)
     }
@@ -316,7 +288,6 @@ object CheckpointedRollup {
     val skippedResults = doneDays.map { case (d, _) => DayResult(d, 0L, 0L, skipped = true) }
     val batchSize =
       if (failAfter.isDefined) 1
-      else if (unitBatch > 0) unitBatch
       else math.max(1, math.min(MaxAutoBatch,
         math.ceil(runDays.size.toDouble / math.max(parallelism, 1)).toInt))
     val batches = runDays.grouped(batchSize).toSeq

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.operators.{CheckpointedRollup, Rollup}
+import graft.operators.{CheckpointedRollup, Rollup, TierStore}
 import graft.sources.{IceTable, TranscriptGen}
 
 /** Snapshot lineage, stat pruning, commit races, and crash-resume
@@ -52,14 +52,26 @@ class IceTableSpec extends SparkSpec {
   test("orphan data dir from a crashed commit never wedges later appends") {
     val t = IceTable(tmp("ice"))
     t.append(turnsDf.where($"turn_idx" % 2 === 0), "ts")
+    val snaps = java.nio.file.Paths.get(s"${t.root}/snapshots")
     // simulate a crash AFTER the data rename but BEFORE the snapshot claim:
     // an unreferenced UUID data dir exists, no JSON points at it
     val orphan = new java.io.File(s"${t.root}/data/d-dead-beef")
     assert(orphan.mkdirs())
+    // a crash before the link: a complete staged snapshot JSON for id 2
+    // that was never linked to v00002.json
+    Files.copy(snaps.resolve("v00001.json"), snaps.resolve(".v00002.json.tmp-crashed"))
+    assert(t.currentSnapshotId == 1)
     val id = t.append(turnsDf.where($"turn_idx" % 2 === 1), "ts")
     assert(id == 2, s"data dirs carry no ids — next claim is simply parent+1, got $id")
     // the orphan is invisible to scans
     assert(t.scan(spark).count() == turnsDf.count())
+    // a crash between the link and the temp delete: the staged file is
+    // still there beside the v00002.json it was linked to
+    Files.createLink(snaps.resolve(".v00002.json.tmp-linked"), snaps.resolve("v00002.json"))
+    assert(t.currentSnapshotId == 2)
+    val id3 = t.append(turnsDf.limit(5), "ts")
+    assert(id3 == 3 && t.snapshot(id3).get.parentId == 2)
+    assert(t.scan(spark).count() == turnsDf.count() + 5)
   }
 
   test("a claimed snapshot JSON above the CURRENT hint IS the table head (pointer heals)") {
@@ -67,9 +79,7 @@ class IceTableSpec extends SparkSpec {
     t.append(turnsDf.where($"turn_idx" % 2 === 0), "ts")
     val id2 = t.append(turnsDf.where($"turn_idx" % 2 === 1), "ts")
     // simulate a writer that crashed between its JSON claim and the CURRENT
-    // advance: wind the hint back below the committed claim (drop Hadoop's
-    // checksum sidecar too — we bypass the FS API on purpose here)
-    new java.io.File(s"${t.root}/.CURRENT.crc").delete()
+    // advance: wind the hint back below the committed claim
     java.nio.file.Files.write(java.nio.file.Paths.get(s"${t.root}/CURRENT"), "1".getBytes)
     assert(t.currentSnapshotId == id2, "listing-max must out-vote a stale CURRENT hint")
     assert(t.scan(spark).count() == turnsDf.count())
@@ -105,6 +115,13 @@ class IceTableSpec extends SparkSpec {
     val t = writers.head
     assert(t.currentSnapshotId == n)
     assert(t.scan(spark).count() == turnsDf.where($"turn_idx" % 12 < n).count())
+    // every writer replaced CURRENT and keys.json concurrently: both hold a
+    // complete value, and no staged file or sidecar is left beside them
+    val hint = Files.readString(java.nio.file.Paths.get(s"$root/CURRENT")).trim.toLong
+    assert(hint >= 1 && hint <= n, s"CURRENT: $hint")
+    val idx = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(s"$root/keys.json"))
+    assert(idx.get("up_to").asLong >= 1 && idx.get("up_to").asLong <= n, s"keys.json: $idx")
+    assert(new java.io.File(root).list().sorted.toSeq == Seq("CURRENT", "data", "keys.json", "snapshots"))
   }
 
   test("scanAt time-travels to any committed snapshot (expiry keeps files readable)") {
@@ -168,82 +185,44 @@ class IceTableSpec extends SparkSpec {
 
   test("cross-process claim race: exactly one of N concurrent claimants wins an id") {
     // drives tryClaimSnapshot DIRECTLY from distinct IceTable instances,
-    // bypassing the in-JVM commit lock (claimCommit's monitor) — the
-    // local-FS OS file lock is then the ONLY serialization, the same
-    // situation as N separate processes claiming one id. POSIX rename
-    // overwrites, so without the lock several claimants could each
+    // bypassing the in-JVM commit monitor (claimCommit's lockFor) — the
+    // claim's link(2) is then the ONLY serialization, the same situation
+    // as N separate processes claiming one id. POSIX rename overwrites, so
+    // a claim that could overwrite would let several claimants each
     // "succeed" and silently drop all but the last snapshot JSON.
     val root = tmp("ice")
     val n = 8
-    val tables = (0 until n).map(_ => IceTable(root))
-    tables.head.append(turnsDf.limit(5).coalesce(1), "ts") // v1 exists
-    val barrier = new java.util.concurrent.CyclicBarrier(n)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    val wins =
-      try {
-        val futures = tables.zipWithIndex.map { case (t, i) =>
-          pool.submit(new java.util.concurrent.Callable[Boolean] {
-            def call(): Boolean = {
-              val snap = t.Snapshot(id = 2L, parentId = 1L, op = s"claimant-$i", files = Seq.empty)
-              barrier.await()
-              t.tryClaimSnapshot(snap)
-            }
-          })
-        }
-        futures.map(_.get())
-      } finally pool.shutdown()
-    assert(wins.count(identity) == 1, s"exactly one claim of v2 may win, got $wins")
-    val winner = wins.indexOf(true)
-    val json = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/snapshots/v00002.json"))
-    assert(json.contains(s"claimant-$winner"), "the committed JSON must be the winner's, intact")
-    assert(new java.io.File(s"$root/snapshots/.commit.lock").exists(),
-      "the permanent per-table commit-lock file exists (never deleted - see claimLocalFs)")
-  }
-
-  test("atomicWrite: a rename whose data file landed before its .crc clashed counts as written") {
-    // the loser's state in the ChecksumFs .crc race (see retryAfterCrcClash):
-    // its data file already sits at dst, its staged file is gone, and the
-    // winner's stale .crc sits beside dst
-    val t = IceTable(tmp("ice"))
-    t.append(turnsDf.limit(5), "ts")
-    val fs = new org.apache.hadoop.fs.Path(t.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(t.root, "keys.json")
-    val staged = new org.apache.hadoop.fs.Path(t.root, ".keys.json.tmp-landed")
-    val landed = """{"up_to":1,"keys":{}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/keys.json"), landed)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/.keys.json.crc"), "stale")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"${t.root}/..keys.json.tmp-landed.crc"), "orphan")
-    // renaming the missing staged file again would throw FileNotFoundException
-    t.retryAfterCrcClash(staged, dst, attemptsLeft = 3)
-    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"${t.root}/keys.json")) == landed)
-    assert(!new java.io.File(s"${t.root}/.keys.json.crc").exists(), "the stale .crc must go")
-    assert(!new java.io.File(s"${t.root}/..keys.json.tmp-landed.crc").exists(), "the staged file's orphaned .crc must go")
-    assert(!fs.exists(staged))
-    // a staged file that is still there is renamed onto dst
-    val out = fs.create(staged, true)
-    try out.write("""{"up_to":0,"keys":{}}""".getBytes) finally out.close()
-    t.retryAfterCrcClash(staged, dst, attemptsLeft = 3)
-    assert(!fs.exists(staged) && java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"${t.root}/keys.json")) == """{"up_to":0,"keys":{}}""")
-  }
-
-  test("a table root deleted and recreated gets a commit lock on the new lock file") {
-    val root = tmp("ice")
-    IceTable(root).append(turnsDf.limit(5), "ts") // caches a lock channel
-    graft.Fs.deleteTreeQuietly(root)
-    IceTable(root).append(turnsDf.limit(5), "ts")
-    val p = java.nio.file.Paths.get(s"$root/snapshots/.commit.lock")
-    val held = IceTable.lockChannelFor(p).lock()
-    val other = java.nio.channels.FileChannel.open(p, java.nio.file.StandardOpenOption.WRITE)
-    try {
-      // the JVM's lock table is keyed by file identity: a second lock on the
-      // SAME file overlaps, while a lock on the deleted file would not
-      intercept[java.nio.channels.OverlappingFileLockException](other.tryLock())
-    } finally {
-      held.release()
-      other.close()
+    def race(): Unit = {
+      val tables = (0 until n).map(_ => IceTable(root))
+      tables.head.append(turnsDf.limit(5).coalesce(1), "ts") // v1 exists
+      val barrier = new java.util.concurrent.CyclicBarrier(n)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      val wins =
+        try {
+          val futures = tables.zipWithIndex.map { case (t, i) =>
+            pool.submit(new java.util.concurrent.Callable[Boolean] {
+              def call(): Boolean = {
+                val snap = t.Snapshot(id = 2L, parentId = 1L, op = s"claimant-$i", files = Seq.empty)
+                barrier.await()
+                t.tryClaimSnapshot(snap)
+              }
+            })
+          }
+          futures.map(_.get())
+        } finally pool.shutdown()
+      assert(wins.count(identity) == 1, s"exactly one claim of v2 may win, got $wins")
+      val winner = wins.indexOf(true)
+      val v2 = tables.head.snapshot(2L)
+      assert(v2.exists(s => s.op == s"claimant-$winner" && s.parentId == 1L && s.files.isEmpty),
+        s"the committed JSON must be the winner's, intact: $v2")
+      assert(new java.io.File(s"$root/snapshots").list().sorted.toSeq == Seq("v00001.json", "v00002.json"),
+        "snapshots/ holds only v*.json: no staged file and no lock file")
     }
+    race()
+    // a table root deleted and recreated: the claim holds no state outside
+    // the directory, so the race on the new root has the same outcome
+    graft.Fs.deleteTreeQuietly(root)
+    race()
   }
 
   test("batched day units: one job per batch, per-day markers, empty days stay scannable") {
@@ -262,7 +241,7 @@ class IceTableSpec extends SparkSpec {
     val outDir = tmp("tier-batched")
     val res = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
-      parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 3)
+      parallelism = 1, dayBucket = col("bucket_start"))
     assert(res.length == 3, s"3 pending days expected, got $res")
     val empty = res.find(_.rows == 0L)
     assert(empty.isDefined, s"the row-less middle day must commit with rows=0: $res")
@@ -271,14 +250,14 @@ class IceTableSpec extends SparkSpec {
     val src = new CheckpointedRollup.DayDirSource(spark, outDir)
     assert(src.pendingDays.length == 3)
     src.pendingDays.foreach { d =>
-      val df = src.scanDay(spark, d)
+      val df = src.scanDays(spark, Seq(d))
       assert(df.columns.contains("bucket_start"), s"day $d lost its schema")
     }
     assert(src.scanDays(spark, src.pendingDays).count() == 3) // 3 (conv, minute) buckets
     // rebuild is a metadata-only skip for all days, empty one included
     val again = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
-      parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 3)
+      parallelism = 1, dayBucket = col("bucket_start"))
     assert(again.forall(_.skipped), s"unchanged source must skip all days: $again")
   }
 
@@ -296,11 +275,56 @@ class IceTableSpec extends SparkSpec {
         raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute")
           .withColumn("bucket_start",
             when(col("max") > 5.0, lit(null)).otherwise(col("bucket_start"))),
-        parallelism = 1, dayBucket = col("bucket_start"), unitBatch = 2)
+        parallelism = 1, dayBucket = col("bucket_start"))
     }
     assert(e.getMessage.contains("null day bucket"), e.getMessage)
     val markers = new java.io.File(s"$outDir/_checkpoints").listFiles().filter(_.getName.startsWith("day-"))
     assert(markers.isEmpty, s"no day may commit: ${markers.map(_.getName).mkString(",")}")
+  }
+
+  test("metadata written through Hadoop's checksummed local FS stays usable") {
+    // Hadoop's local FileSystem writes a .crc sidecar beside every file;
+    // metadata is written and read with java.nio, so replacing a file
+    // written through Hadoop leaves its .crc stale. A reader that still
+    // consulted it would throw ChecksumException (and keys.json's reader
+    // would swallow that and rebuild the index from the log on every
+    // lookup)
+    val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
+    val early = withLen.where($"ts" < "2025-01-08")
+    val t = IceTable(tmp("ice-crc"))
+    assert(t.append(early, "ts", key = Some("epoch-0")) == 1)
+    val root = tmp("store-crc")
+    TierStore.sync(spark, t, root, $"text_len")
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def rewriteWithCrc(f: java.io.File, content: String): Unit = {
+      val out = local.create(new org.apache.hadoop.fs.Path(f.getPath), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+      assert(new java.io.File(f.getParent, s".${f.getName}.crc").exists(), s"no .crc beside $f")
+    }
+    rewriteWithCrc(new java.io.File(s"${t.root}/CURRENT"), "1")
+    // "probe" is in the index but not in the snapshot log: it survives only
+    // while the index is read, not rebuilt from the log
+    rewriteWithCrc(new java.io.File(s"${t.root}/keys.json"), """{"up_to":1,"keys":{"epoch-0":1,"probe":1}}""")
+    val markers = for {
+      tier <- Seq("1m", "1h", "1d")
+      f <- new java.io.File(s"$root/$tier/_checkpoints").listFiles() if f.getName.startsWith("day-")
+    } yield f
+    assert(markers.nonEmpty)
+    markers.foreach(f => rewriteWithCrc(f, Files.readString(f.toPath)))
+
+    // the append replaces CURRENT and keys.json beside their now-stale .crc
+    val late = withLen.where($"ts" >= "2025-01-06" && $"ts" < "2025-01-08")
+    assert(t.append(late, "ts", key = Some("epoch-1")) == 2)
+    val idx = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(s"${t.root}/keys.json"))
+    assert(idx.get("up_to").asLong == 2 && idx.get("keys").has("probe"), s"keys.json was rebuilt from the log: $idx")
+    // a keyed replay is a no-op
+    assert(t.append(early, "ts", key = Some("epoch-0")) == 1 && t.currentSnapshotId == 2)
+    // the sync rebuilds the touched days, replacing their markers beside a
+    // stale .crc, and skips the rest; a re-sync then skips every day
+    val (r1m, _, _) = TierStore.sync(spark, t, root, $"text_len")
+    assert(r1m.exists(_.skipped) && r1m.exists(!_.skipped), s"1m: $r1m")
+    val (a1m, a1h, a1d) = TierStore.sync(spark, t, root, $"text_len")
+    assert((a1m ++ a1h ++ a1d).forall(_.skipped), s"re-sync rebuilt: ${(a1m ++ a1h ++ a1d).filterNot(_.skipped)}")
   }
 
   test("checkpointed rollup resumes after crash with identical output") {

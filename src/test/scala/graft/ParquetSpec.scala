@@ -82,7 +82,7 @@ class ParquetSpec extends SparkSpec {
     val src = new CheckpointedRollup.DayDirSource(spark, dir)
     val days = src.pendingDays
     assert(days.size >= 2)
-    assertLikeSpark("tier day dir", Seq(s"$dir/day=${days.head}"))(src.scanDay(spark, days.head))
+    assertLikeSpark("tier day dir", Seq(s"$dir/day=${days.head}"))(src.scanDays(spark, Seq(days.head)))
     assertLikeSpark("tier day dirs", days.map(d => s"$dir/day=$d"))(src.scanDays(spark, days))
     val glob = s"$dir/day=*"
     val df = assertLikeSpark("day=* glob", Seq(glob))(TierStore.scanTier(spark, dir))
