@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
@@ -25,15 +26,18 @@ import graft.sources.{IceTable, MetaFiles, Parquet}
   * executed=/used= provenance on every egress
   * (/root/reference/scripts/daily-measures.R:242-251).
   *
-  * Resume semantics: a day is skipped iff its marker exists AND its
-  * source-file FINGERPRINT is unchanged — the fingerprint hashes the
-  * manifest entries (path, rows, bytes) of exactly the files overlapping
-  * that day. Appending a new snapshot therefore invalidates ONLY the days
-  * the new files touch (incremental tier build: O(changed days), not
-  * O(history)); a crashed run redoes only missing days. The marker also
-  * records the source snapshot id for lineage/audit. Output commit is
-  * write-to-temp + atomic rename, so a kill mid-day never leaves a
-  * half-visible day.
+  * Resume semantics: a day is skipped iff its source-file FINGERPRINT is
+  * unchanged since it was built — the fingerprint hashes the manifest
+  * entries (path, rows, bytes) of exactly the files overlapping that day —
+  * and either its marker holds that fingerprint, or retention removed the
+  * day and its tombstone (`_checkpoints/expired.json`, see
+  * TierStore.expireDays) holds it. Appending a new snapshot therefore
+  * invalidates ONLY the days the new files touch (incremental tier build:
+  * O(changed days), not O(history)); a crashed run redoes only missing
+  * days, and an expired day stays expired until its source changes. The
+  * marker also records the source snapshot id for lineage/audit. Output
+  * commit is write-to-temp + atomic rename, so a kill mid-day never leaves
+  * a half-visible day.
   *
   * Scale: each day scans ONLY the raw files overlapping that day (IceTable
   * stat pruning). Work units are INDEPENDENT Spark jobs submitted from a
@@ -70,10 +74,14 @@ object CheckpointedRollup {
     def lineageId: Long
   }
 
-  /** DaySource over an IceTable: manifest stats prune the scan to files
+  /** DaySource over an IceTable, pinned to the snapshot that is current
+    * when the source is built: days, fingerprints, scans and the lineage id
+    * all come from that one snapshot, so an append that lands mid-sync is
+    * left whole to the next sync. Manifest stats prune the scan to files
     * overlapping the day; fingerprints hash those files' manifest entries. */
   final class IceDaySource(table: IceTable, tsCol: String = "ts") extends DaySource {
-    private def files = table.currentLiveFiles
+    private val snap = table.current
+    private val files = snap.map(table.liveFiles).getOrElse(Nil)
     def pendingDays: Seq[Long] =
       files.flatMap(f => (f.minTsUs / DayUs) to (f.maxTsUs / DayUs)).distinct.sorted.map(_ * DayUs)
     def dayFingerprint(dayUs: Long): Long = {
@@ -90,9 +98,9 @@ object CheckpointedRollup {
       val inDay = daysUs
         .map(d => col(tsCol) >= timestamp_micros(lit(d)) && col(tsCol) < timestamp_micros(lit(d + DayUs)))
         .reduce(_ || _)
-      table.scan(spark, daysUs.min, daysUs.max + DayUs - 1).where(inDay)
+      table.scanFiles(spark, files, daysUs.min, daysUs.max + DayUs - 1).where(inDay)
     }
-    def lineageId: Long = table.currentSnapshotId
+    def lineageId: Long = snap.map(_.id).getOrElse(0L)
   }
 
   /** DaySource over a previous run's day-dir output: days come from the
@@ -123,12 +131,36 @@ object CheckpointedRollup {
   private def markerPath(outDir: String, dayUs: Long) =
     new Path(outDir, s"_checkpoints/day-$dayUs.json")
 
+  /** A tier's tombstone file. Its name is not `day-*.json`, so the day
+    * listings (`DayDirSource.pendingDays`) never see it. */
+  private def expiredPath(outDir: String) = new Path(outDir, "_checkpoints/expired.json")
+
+  /** The `source_files_fp` a day's marker holds; None without a marker. */
+  private def markerFp(meta: MetaFiles, outDir: String, dayUs: Long): Option[Long] =
+    meta.read(markerPath(outDir, dayUs)).map(mapper.readTree)
+      .filter(_.has("source_files_fp")).map(_.get("source_files_fp").asLong)
+
   def isDone(spark: SparkSession, outDir: String, dayUs: Long, fingerprint: Long): Boolean = {
     val p = markerPath(outDir, dayUs)
-    new MetaFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration)).read(p).exists { json =>
-      val n = mapper.readTree(json)
-      n.has("source_files_fp") && n.get("source_files_fp").asLong == fingerprint
-    }
+    markerFp(new MetaFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration)), outDir, dayUs)
+      .contains(fingerprint)
+  }
+
+  /** The tier's tombstones: dayUs → the source fingerprint the day's marker
+    * held when retention removed the day (empty when nothing was expired). */
+  private[operators] def expiredDays(meta: MetaFiles, outDir: String): Map[Long, Long] =
+    meta.read(expiredPath(outDir)).map { json =>
+      mapper.readTree(json).properties().asScala.map(e => e.getKey.toLong -> e.getValue.asLong).toMap
+    }.getOrElse(Map.empty)
+
+  /** Merge a tombstone for each of `days` (its marker's current source
+    * fingerprint) into the tier's tombstone file, replacing older entries
+    * for the same days. A day without a marker gets none. */
+  private[operators] def tombstone(meta: MetaFiles, outDir: String, days: Seq[Long]): Unit = {
+    val merged = expiredDays(meta, outDir) ++ days.flatMap(d => markerFp(meta, outDir, d).map(d -> _))
+    val node = mapper.createObjectNode()
+    merged.toSeq.sorted.foreach { case (d, fp) => node.put(d.toString, fp) }
+    meta.replace(expiredPath(outDir), mapper.writeValueAsString(node))
   }
 
   /** Run (or resume) a tier build over an IceTable source (the raw→1m
@@ -146,13 +178,14 @@ object CheckpointedRollup {
       col("bucket_start"), failAfter, parallelism)
 
   /** Run (or resume) a day-unit build: for each source day whose
-    * fingerprint changed (or has no marker), apply `transform` to that
-    * day's rows and commit the result dir + marker atomically. `failAfter`
-    * injects a crash after N completed units — used by the resume tests
-    * (only meaningful with parallelism=1). `parallelism` bounds how many
-    * unit jobs are in flight concurrently (independent Spark jobs; results
-    * are per-day and order-independent). Returns per-day results in day
-    * order.
+    * fingerprint changed (or has neither a marker nor a tombstone), apply
+    * `transform` to that day's rows and commit the result dir + marker
+    * atomically. `failAfter` injects a crash after N completed units —
+    * used by the resume tests (only meaningful with parallelism=1).
+    * `parallelism` bounds how many unit jobs are in flight concurrently
+    * (independent Spark jobs; results are per-day and order-independent).
+    * Returns per-day results in day order; a skipped day (marker or
+    * tombstone) comes back with `skipped = true`.
     *
     * `dayBucket` names an OUTPUT column whose event-time day identifies
     * the day unit every output row belongs to (e.g. `col("bucket_start")`
@@ -284,7 +317,10 @@ object CheckpointedRollup {
 
     val days = source.pendingDays
     val fps = days.map(d => d -> source.dayFingerprint(d))
-    val (doneDays, runDays) = fps.partition { case (d, fp) => isDone(spark, outDir, d, fp) }
+    val tombs = expiredDays(meta, outDir)
+    val (doneDays, runDays) = fps.partition { case (d, fp) =>
+      tombs.get(d).contains(fp) || isDone(spark, outDir, d, fp)
+    }
     val skippedResults = doneDays.map { case (d, _) => DayResult(d, 0L, 0L, skipped = true) }
     val batchSize =
       if (failAfter.isDefined) 1

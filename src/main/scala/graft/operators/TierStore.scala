@@ -1,9 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IceTable, Parquet}
+import graft.sources.{IceTable, MetaFiles, Parquet}
 
 /** The assembled north-star pipeline: raw transcripts IceTable →
   * continuous-aggregate day-dir tiers (1m → 1h → 1d), each tier row
@@ -22,7 +23,9 @@ import graft.sources.{IceTable, Parquet}
   * Retention ladder (the reference's post-infection windows generalized,
   * SURVEY.md §7.0): fine tiers expire early, coarse tiers live long —
   * `expireDays` physically drops a tier's day dirs (and their markers)
-  * older than its cutoff; no other tier is touched.
+  * older than its cutoff and leaves a tombstone per dropped day, so `sync`
+  * does not rebuild it while its source is unchanged (the raw source keeps
+  * every day); no other tier is touched.
   *
   * Scale: `sync` rebuilds only the days whose source changed, at every
   * tier (fingerprints chain raw → 1m → 1h → 1d); tier N+1 reads ONLY tier
@@ -74,15 +77,30 @@ object TierStore {
     Parquet.read(spark, s"$tierDir/day=*")
 
   /** Retention for an incremental store tier: physically drop day dirs (and
-    * their markers) entirely older than the cutoff. Returns dropped days. */
+    * their markers) entirely older than the cutoff, leaving a tombstone for
+    * each in `_checkpoints/expired.json`: the day and the source fingerprint
+    * its marker held. `sync` skips a tombstoned day while its fingerprint
+    * still matches (Delta Lake's `remove` action, per tier day). A late row
+    * changes the day's fingerprint, so the day is rebuilt at this tier and
+    * every tier above it, and the next expiry drops it again and overwrites
+    * its entry; data files are never deleted, so a fingerprint never returns
+    * to an old value and a stale entry is harmless. Deleting the file (say,
+    * after widening a retention window) lets the next `sync` rebuild every
+    * removed day whose source is still there.
+    *
+    * Step order: the tombstone, then the dir, then the marker. A crash at
+    * any point leaves the day skipped by `sync` (marker or tombstone) and
+    * still listed by its marker, so the next `expireDays` finishes it. The
+    * tombstone file is read, merged and replaced, so run one retention
+    * writer per tier. Returns dropped days. */
   def expireDays(spark: SparkSession, tierDir: String, cutoffUs: Long): Seq[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(tierDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = new CheckpointedRollup.DayDirSource(spark, tierDir)
-    val aged = src.pendingDays.filter(_ + 86400000000L <= cutoffUs)
+    val fs = new Path(tierDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val aged = new CheckpointedRollup.DayDirSource(spark, tierDir).pendingDays
+      .filter(_ + CheckpointedRollup.DayUs <= cutoffUs)
+    if (aged.nonEmpty) CheckpointedRollup.tombstone(new MetaFiles(fs), tierDir, aged)
     aged.foreach { dayUs =>
-      fs.delete(new org.apache.hadoop.fs.Path(tierDir, s"day=$dayUs"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(tierDir, s"_checkpoints/day-$dayUs.json"), false)
+      fs.delete(new Path(tierDir, s"day=$dayUs"), true)
+      fs.delete(new Path(tierDir, s"_checkpoints/day-$dayUs.json"), false)
     }
     aged
   }

@@ -338,10 +338,13 @@ final class IceTable(val root: String) {
     scanSnapshot(spark, snapshot(snapshotId), loUs, hiUs)
   }
 
-  private def scanSnapshot(spark: SparkSession, s: Option[Snapshot], loUs: Long, hiUs: Long): DataFrame = {
-    val files = s.map(liveFiles).getOrElse(Nil)
-      .filter(f => f.maxTsUs >= loUs && f.minTsUs <= hiUs)
-      .map(_.path)
+  private def scanSnapshot(spark: SparkSession, s: Option[Snapshot], loUs: Long, hiUs: Long): DataFrame =
+    scanFiles(spark, s.map(liveFiles).getOrElse(Nil), loUs, hiUs)
+
+  /** Scan a live file set the caller already resolved (a snapshot pinned
+    * for a whole read, as `IceDaySource` does), pruned the same way. */
+  private[graft] def scanFiles(spark: SparkSession, live: Seq[FileEntry], loUs: Long, hiUs: Long): DataFrame = {
+    val files = live.filter(f => f.maxTsUs >= loUs && f.minTsUs <= hiUs).map(_.path)
     if (files.isEmpty) spark.emptyDataFrame
     else Parquet.readFiles(spark, files)
   }

@@ -17,7 +17,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   *     sidecar is written or checked: a CLAIM hard-links the temp file to
   *     `dst` (POSIX `link(2)` fails atomically when `dst` exists, so it is
   *     a put-if-absent across threads and processes) and then deletes the
-  *     temp file; a REPLACE renames it over `dst` (`rename(2)`);
+  *     temp file; a REPLACE renames it over `dst` (`rename(2)`), after
+  *     deleting any stale `.crc` an older Hadoop writer left beside `dst`;
   *   - on any other filesystem, with `FileContext.rename` of the temp file,
   *     without overwrite for a claim (atomic on HDFS) and with `OVERWRITE`
   *     for a replace.
@@ -73,8 +74,15 @@ final class MetaFiles(fs: FileSystem) {
       }
     }
 
-  /** Publish `content` at `dst`, replacing any file there. */
+  /** Publish `content` at `dst`, replacing any file there. On the local
+    * filesystem this first deletes the `.<name>.crc` sidecar that Hadoop's
+    * checksummed local FS wrote beside an older `dst`, if one is there: it
+    * would not match the new content, and a reader going through Hadoop
+    * would fail with a ChecksumException. */
   def replace(dst: Path, content: String): Unit =
-    if (local) Files.move(stageLocal(dst, content), nio(dst), StandardCopyOption.ATOMIC_MOVE): Unit
-    else fc.rename(stageHadoop(dst, content), dst, Options.Rename.OVERWRITE)
+    if (local) {
+      val tmp = stageLocal(dst, content)
+      Files.deleteIfExists(nio(new Path(dst.getParent, s".${dst.getName}.crc")))
+      Files.move(tmp, nio(dst), StandardCopyOption.ATOMIC_MOVE): Unit
+    } else fc.rename(stageHadoop(dst, content), dst, Options.Rename.OVERWRITE)
 }

@@ -261,6 +261,26 @@ class IceTableSpec extends SparkSpec {
     assert(again.forall(_.skipped), s"unchanged source must skip all days: $again")
   }
 
+  test("IceDaySource pins one snapshot: an append after it is built is neither scanned nor cited") {
+    val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
+    val first = withLen.where($"ts" < "2025-01-08")
+    val t = IceTable(tmp("ice-pin"))
+    assert(t.append(first, "ts") == 1)
+    val source = new CheckpointedRollup.IceDaySource(t)
+    val days = source.pendingDays
+    val fps = days.map(source.dayFingerprint)
+    // the append overlaps the pinned days and adds new ones
+    assert(t.append(withLen.where($"ts" >= "2025-01-06" && $"ts" < "2025-01-10"), "ts") == 2)
+    assert(source.lineageId == 1)
+    assert(source.pendingDays == days && days.map(source.dayFingerprint) == fps)
+    val scanned = source.scanDays(spark, days).select(first.columns.map(col): _*)
+    assert(scanned.count() == first.count())
+    assert(scanned.exceptAll(first).isEmpty && first.exceptAll(scanned).isEmpty)
+    // a source built after the append sees it
+    val fresh = new CheckpointedRollup.IceDaySource(t)
+    assert(fresh.lineageId == 2 && fresh.pendingDays.size > days.size)
+  }
+
   test("batched day units: a null day bucket fails with a clear message before any day commits") {
     val rows = Seq(
       ("c1", "2025-02-01 10:00:00", 3.0),
@@ -284,11 +304,11 @@ class IceTableSpec extends SparkSpec {
 
   test("metadata written through Hadoop's checksummed local FS stays usable") {
     // Hadoop's local FileSystem writes a .crc sidecar beside every file;
-    // metadata is written and read with java.nio, so replacing a file
-    // written through Hadoop leaves its .crc stale. A reader that still
-    // consulted it would throw ChecksumException (and keys.json's reader
-    // would swallow that and rebuild the index from the log on every
-    // lookup)
+    // metadata is written and read with java.nio, so a replace must delete
+    // the sidecar of the file it replaces. A stale one makes any reader
+    // that goes through Hadoop throw ChecksumException (and keys.json's
+    // reader, were it such a reader, would swallow that and rebuild the
+    // index from the log on every lookup)
     val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
     val early = withLen.where($"ts" < "2025-01-08")
     val t = IceTable(tmp("ice-crc"))
@@ -325,6 +345,16 @@ class IceTableSpec extends SparkSpec {
     assert(r1m.exists(_.skipped) && r1m.exists(!_.skipped), s"1m: $r1m")
     val (a1m, a1h, a1d) = TierStore.sync(spark, t, root, $"text_len")
     assert((a1m ++ a1h ++ a1d).forall(_.skipped), s"re-sync rebuilt: ${(a1m ++ a1h ++ a1d).filterNot(_.skipped)}")
+    // every replaced file reads through Hadoop's checksummed FS, with no
+    // sidecar left beside it
+    val rebuiltMarker = s"$root/1m/_checkpoints/day-${r1m.find(!_.skipped).get.dayUs}.json"
+    for (f <- Seq(s"${t.root}/CURRENT", s"${t.root}/keys.json", rebuiltMarker)) {
+      val p = new org.apache.hadoop.fs.Path(f)
+      val in = local.open(p)
+      try assert(new String(in.readAllBytes(), "UTF-8") == Files.readString(java.nio.file.Paths.get(f)), f)
+      finally in.close()
+      assert(!local.exists(new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.crc")), s"stale .crc beside $f")
+    }
   }
 
   test("checkpointed rollup resumes after crash with identical output") {

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Gorilla, GorillaAgg}
 import graft.operators.{CheckpointedRollup, Rollup, TierStore}
@@ -104,7 +105,7 @@ class TierStoreSpec extends SparkSpec {
     assert(lo.getTime * 1000 >= cutoffUs - 86400000000L)
   }
 
-  test("sync batch sizes: parallelism 4 and 1 build equal tiers and markers; 1m expiry re-syncs only 1m") {
+  test("sync batch sizes: parallelism 4 and 1 build equal tiers and markers; 1m days lost from the store re-sync only 1m") {
     val src = IceTable(tmp("ice-waves"))
     src.append(TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
       .where($"ts" < "2025-01-16").withColumn("text_len", length($"text").cast("double")), "ts")
@@ -133,13 +134,16 @@ class TierStoreSpec extends SparkSpec {
       assert(bad.count() == 0, s"$tier differs between parallelism 4 and 1")
     }
 
-    // the fingerprint chain: 1m days dropped by retention are rebuilt from
-    // raw with identical markers, so 1h and 1d skip them
-    val days1m = r4._1.map(_.dayUs)
-    val dropped = TierStore.expireDays(spark, s"$p4/1m", days1m(3))
-    assert(dropped == days1m.take(3))
+    // the fingerprint chain: 1m days lost from the store (dir and marker
+    // gone, and no tombstone) are rebuilt from raw with identical markers,
+    // so 1h and 1d skip them
+    val lost = r4._1.map(_.dayUs).take(3)
+    lost.foreach { d =>
+      Fs.deleteTreeQuietly(s"$p4/1m/day=$d")
+      Files.delete(Paths.get(s"$p4/1m/_checkpoints/day-$d.json"))
+    }
     val (a1m, a1h, a1d) = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
-    assert(a1m.filterNot(_.skipped).map(_.dayUs) == dropped)
+    assert(a1m.filterNot(_.skipped).map(_.dayUs) == lost)
     assert(a1h.forall(_.skipped) && a1d.forall(_.skipped), s"1h/1d rebuilt: ${(a1h ++ a1d).filterNot(_.skipped)}")
   }
 
@@ -166,5 +170,113 @@ class TierStoreSpec extends SparkSpec {
     assert(dayDirs("1m").length < dirs1m, s"1m day dirs: $dirs1m -> ${dayDirs("1m").length}")
     assert(bytesOnDisk("1m") < bytes1m, s"1m bytes: $bytes1m -> ${bytesOnDisk("1m")}")
     assert(dayDirs("1d").length == dirs1d)
+  }
+
+  private val DayUs = 86400000000L
+  private type Results = (Seq[CheckpointedRollup.DayResult], Seq[CheckpointedRollup.DayResult], Seq[CheckpointedRollup.DayResult])
+
+  /** A store synced from the raw turns before 2025-01-12 (11 days): the
+    * source, the store root, the raw rows and the 1m days. */
+  private def syncedStore(name: String): (IceTable, String, DataFrame, Seq[Long]) = {
+    val raw = TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
+      .where($"ts" < "2025-01-12").withColumn("text_len", length($"text").cast("double")).cache()
+    val src = IceTable(tmp(s"ice-$name"))
+    src.append(raw, "ts")
+    val root = tmp(s"tiers-$name")
+    val (r1m, _, _) = sync(src, root)
+    assert(r1m.size >= 8, s"the fixture must span at least 8 days, got ${r1m.size}")
+    (src, root, raw, r1m.map(_.dayUs))
+  }
+
+  private def sync(src: IceTable, root: String): Results =
+    TierStore.sync(spark, src, root, $"text_len", parallelism = 4)
+
+  /** The days each tier rebuilt (1m, 1h, 1d). */
+  private def rebuilt(r: Results): Seq[Seq[Long]] =
+    Seq(r._1, r._2, r._3).map(_.filterNot(_.skipped).map(_.dayUs))
+
+  /** sum(n_rows) of the 1m, 1h and 1d tiers. */
+  private def tierRows(root: String): Seq[Long] =
+    Seq("1m", "1h", "1d").map(t => TierStore.scanTier(spark, s"$root/$t").agg(sum($"n_rows")).head().getLong(0))
+
+  private def lo1m(root: String): Long =
+    TierStore.scanTier(spark, s"$root/1m").agg(min(unix_micros($"bucket_start"))).head().getLong(0)
+
+  private def markerFile(root: String, tier: String, d: Long) = Paths.get(s"$root/$tier/_checkpoints/day-$d.json")
+
+  test("expired 1m days stay expired: a sync after expireDays rebuilds no day at any tier") {
+    val (src, root, raw, days) = syncedStore("sticks")
+    val cutoff = days(3)
+    val dropped = TierStore.expireDays(spark, s"$root/1m", cutoff)
+    assert(dropped == days.take(3))
+    val rows = tierRows(root)
+    assert(rows.tail == Seq(raw.count(), raw.count()))
+    val r = sync(src, root)
+    assert(rebuilt(r) == Seq(Nil, Nil, Nil), s"rebuilt after expiry: ${rebuilt(r)}")
+    // the tombstoned days come back as skipped results
+    assert(dropped.forall(d => r._1.exists(x => x.dayUs == d && x.skipped)), s"1m: ${r._1}")
+    assert(lo1m(root) >= cutoff)
+    assert(tierRows(root) == rows)
+  }
+
+  test("a late row into an expired 1m day rebuilds that day at 1m, 1h and 1d, and the next expiry sticks") {
+    val (src, root, raw, days) = syncedStore("late")
+    val cutoff = days(3)
+    assert(TierStore.expireDays(spark, s"$root/1m", cutoff) == days.take(3))
+    val day = days(1)
+    // the day's first turn, one second later: a new row inside that day
+    val late = raw.where(unix_micros($"ts") >= day && unix_micros($"ts") < day + DayUs)
+      .orderBy($"ts", $"conv_id").limit(1).withColumn("ts", $"ts" + expr("INTERVAL 1 SECOND"))
+    assert(late.count() == 1)
+    src.append(late, "ts")
+    val r = sync(src, root)
+    assert(rebuilt(r) == Seq(Seq(day), Seq(day), Seq(day)), s"rebuilt: ${rebuilt(r)}")
+    // 1h and 1d equal a direct rollup of the whole source
+    val all = raw.unionByName(late)
+    for ((tier, interval) <- Seq(("1h", "1 hour"), ("1d", "1 day"))) {
+      val bad = mismatches(TierStore.scanTier(spark, s"$root/$tier"),
+        Rollup.rollupRaw(all, $"conv_id", $"ts", $"text_len", interval), Seq("conv_id", "bucket_start"),
+        Seq("n_rows", "n_vals", "min", "max"), Seq("sum", "sum_sq", "sum_sin", "sum_cos"))
+      assert(bad.count() == 0, s"$tier differs from a direct rollup: ${bad.take(3).mkString("; ")}")
+    }
+    // the next expiry removes the rebuilt day again, and it stays removed
+    assert(TierStore.expireDays(spark, s"$root/1m", cutoff) == Seq(day))
+    val again = sync(src, root)
+    assert(rebuilt(again) == Seq(Nil, Nil, Nil), s"rebuilt after the second expiry: ${rebuilt(again)}")
+    assert(lo1m(root) >= cutoff)
+  }
+
+  test("an expiry interrupted after its tombstone: sync rebuilds nothing, the next expireDays finishes it") {
+    val (src, root, _, days) = syncedStore("crash")
+    val cutoff = days(3)
+    // keep what expireDays deletes for two days, and put it back after:
+    // day 0 as if the crash came right after the tombstone was written,
+    // day 1 as if it came after the day dir was deleted
+    val aside = Paths.get(tmp("aside"))
+    val (d0, d1) = (days(0), days(1))
+    Files.move(Paths.get(s"$root/1m/day=$d0"), aside.resolve("day"))
+    Seq(d0, d1).foreach(d => Files.copy(markerFile(root, "1m", d), aside.resolve(s"m$d")))
+    assert(TierStore.expireDays(spark, s"$root/1m", cutoff) == days.take(3))
+    Files.move(aside.resolve("day"), Paths.get(s"$root/1m/day=$d0"))
+    Seq(d0, d1).foreach(d => Files.copy(aside.resolve(s"m$d"), markerFile(root, "1m", d)))
+    assert(Files.exists(Paths.get(s"$root/1m/_checkpoints/expired.json")))
+
+    val r = sync(src, root)
+    assert(rebuilt(r) == Seq(Nil, Nil, Nil), s"rebuilt after an interrupted expiry: ${rebuilt(r)}")
+    assert(TierStore.expireDays(spark, s"$root/1m", cutoff) == Seq(d0, d1))
+    assert(Seq(d0, d1).forall(d => !Files.exists(markerFile(root, "1m", d))))
+    assert(!Files.exists(Paths.get(s"$root/1m/day=$d0")))
+    assert(rebuilt(sync(src, root)) == Seq(Nil, Nil, Nil))
+    assert(lo1m(root) >= cutoff)
+  }
+
+  test("deleting expired.json brings back the expired 1m days: the next sync rebuilds exactly them, at 1m only") {
+    val (src, root, _, days) = syncedStore("untomb")
+    val dropped = TierStore.expireDays(spark, s"$root/1m", days(3))
+    assert(dropped == days.take(3))
+    Files.delete(Paths.get(s"$root/1m/_checkpoints/expired.json"))
+    val r = sync(src, root)
+    assert(rebuilt(r) == Seq(dropped, Nil, Nil), s"rebuilt: ${rebuilt(r)}")
+    assert(lo1m(root) < days(1), "the 1m tier starts on its first day again")
   }
 }
