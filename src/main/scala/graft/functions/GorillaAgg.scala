@@ -28,12 +28,9 @@ object GorillaAgg {
       ts: Column,
       value: Column,
       interval: String): DataFrame = {
-    raw
-      .where(value.isNotNull && !isnan(value))
-      .groupBy(entity.as("conv_id"), window(ts, interval).as("w"))
-      .agg(gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double")).as("block"))
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
+    val block = gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double")).as("block")
+    graft.operators.Rollup
+      .bucketed(raw.where(value.isNotNull && !isnan(value)), entity.as("conv_id"), ts, interval, Nil, Seq(block))
       .withColumn("n_points", udf((b: Array[Byte]) => Gorilla.pointCount(b)).apply(col("block")))
       .withColumn("block_bytes", length(col("block")))
   }

@@ -69,16 +69,6 @@ object Dedup {
   def minhashSignature(shingles: Column, k: Int): Column =
     graft.plans.TextHashes.minHashSig(shingles, k)
 
-  /** LSH band keys: split the k-length signature into `bands` bands of
-    * k/bands rows; one hash key per band. Docs sharing ANY band key are
-    * candidates. */
-  def lshBandKeys(sig: Column, k: Int, bands: Int): Column = {
-    val rows = k / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rows + 1, lit(rows)).cast("array<string>"))).as("bucket")))
-  }
-
   /** MinHash+LSH near-dup pairs with exact-Jaccard verification.
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     *

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *     rows.
   *   - each coarser tier aggregates the PREVIOUS tier (×60 / ×24 smaller),
   *     so the cascade cost is dominated by raw→1m; never re-scan raw.
-  *   - heavy conv_ids are handled by `Skew.saltedRollup` (same block merge
-  *     over (conv_id, salt) sub-keys).
+  *   - heavy conv_ids are handled by `Skew.saltedRollupRaw` (same block
+  *     merge over (conv_id, salt) sub-keys).
   */
 object Rollup {
 
@@ -58,6 +58,26 @@ object Rollup {
       coalesce(sum(cos(theta)), lit(0.0)).as("sum_cos"))
   }
 
+  /** The one tumbling-window bucket rule: group by (`entity`,
+    * window(`time`, `interval`) as `w`, `extraKeys`), aggregate, and expose
+    * `w.start` as `bucket_start`. The grouping expressions are the
+    * exchange's hash keys, so callers pass `entity` exactly as it should
+    * group (a raw column aliased `conv_id`, a tier's `col("conv_id")`
+    * unaliased): any other expression moves rows between tasks and so
+    * changes the files a store writes. */
+  private[graft] def bucketed(
+      df: DataFrame,
+      entity: Column,
+      time: Column,
+      interval: String,
+      extraKeys: Seq[Column],
+      aggs: Seq[Column]): DataFrame =
+    df
+      .groupBy(entity +: window(time, interval).as("w") +: extraKeys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("bucket_start", col("w.start"))
+      .drop("w")
+
   /** raw → tier: one hash aggregate keyed (entity, event-time bucket).
     * `interval` e.g. "1 minute", "1 hour", "1 day". */
   def rollupRaw(
@@ -66,23 +86,7 @@ object Rollup {
       ts: Column,
       value: Column,
       interval: String): DataFrame =
-    rollupRawKeyed(raw, entity, ts, value, interval, Nil)
-
-  /** rollupRaw with extra grouping keys (e.g. a salt column — see Skew). */
-  private[graft] def rollupRawKeyed(
-      raw: DataFrame,
-      entity: Column,
-      ts: Column,
-      value: Column,
-      interval: String,
-      extraKeys: Seq[Column]): DataFrame = {
-    val aggs = blockAggs(value, todHours(ts))
-    raw
-      .groupBy(entity.as("conv_id") +: window(ts, interval).as("w") +: extraKeys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
-  }
+    bucketed(raw, entity.as("conv_id"), ts, interval, Nil, blockAggs(value, todHours(ts)))
 
   /** rollupRaw + a Gorilla block of each bucket's raw (ts µs, value) points
     * in the SAME aggregate — one scan, one shuffle, and no stat/gorilla
@@ -99,11 +103,7 @@ object Rollup {
       graft.functions.GorillaAgg
         .gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double"))
         .as("gblock")
-    raw
-      .groupBy(entity.as("conv_id"), window(ts, interval).as("w"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
+    bucketed(raw, entity.as("conv_id"), ts, interval, Nil, aggs)
   }
 
   /** Tier merge + a Gorilla block of the CHILD tier's (bucket µs, sum)
@@ -114,21 +114,12 @@ object Rollup {
       graft.functions.GorillaAgg
         .gorillaBlock(unix_micros(col("bucket_start").cast("timestamp")), col("sum"))
         .as("gblock")
-    tier
-      .groupBy(col("conv_id"), window(col("bucket_start"), interval).as("w"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
+    bucketed(tier, col("conv_id"), col("bucket_start"), interval, Nil, aggs)
   }
 
   /** tier → coarser tier: pure block merge — no raw data touched. */
-  def rollupTier(tier: DataFrame, interval: String): DataFrame = {
-    tier
-      .groupBy(col("conv_id"), window(col("bucket_start"), interval).as("w"))
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
-  }
+  def rollupTier(tier: DataFrame, interval: String): DataFrame =
+    bucketed(tier, col("conv_id"), col("bucket_start"), interval, Nil, mergeAggs)
 
   /** tier → arbitrary bucket expression (e.g. Monday/Sunday week anchors,
     * TimeBuckets.weekMonday/weekSunday — reference floor_date weeks,
@@ -204,45 +195,6 @@ object Rollup {
     rollupRaw(turns.toDF(), col("conv_id"), col("ts"), measure, interval).as[graft.model.TierRow]
   }
 
-  /** Full cascade from raw: returns (tier1m, tier1h, tier1d). Callers should
-    * persist tier1m if materializing all three. */
-  def cascade(
-      raw: DataFrame,
-      entity: Column,
-      ts: Column,
-      value: Column): (DataFrame, DataFrame, DataFrame) = {
-    val t1m = rollupRaw(raw, entity, ts, value, "1 minute")
-    val t1h = rollupTier(t1m, "1 hour")
-    val t1d = rollupTier(t1h, "1 day")
-    (t1m, t1h, t1d)
-  }
-
-  /** Plan-picking cascade: probe the data for mega-entities (one cheap
-    * hash-sampled pass, Skew.detectHeavyKeys) and choose accordingly —
-    *   - heavy keys found: salted two-phase 1m aggregate (hot conv_ids
-    *     spread over `salts` reducers; Skew.adaptiveSaltedRollupRaw), then
-    *     tier-on-tier merges — the mega-conversation-safe shape;
-    *   - none: the single-exchange co-partitioned chain (fastest when no
-    *     key dominates — the common transcripts shape).
-    * Results are identical mod FP summation order either way (the block
-    * merge is associative; property-tested in RollupSpec). */
-  def cascadeAuto(
-      raw: DataFrame,
-      entity: Column,
-      ts: Column,
-      value: Column,
-      rowThreshold: Long = 5000000L,
-      salts: Int = 16): (DataFrame, DataFrame, DataFrame) = {
-    val heavy = Skew.detectHeavyKeys(raw, entity, ts, rowThreshold)
-    if (heavy.isEmpty) cascadeCoPartitioned(raw, entity, ts, value)
-    else {
-      val t1m = Skew.adaptiveSaltedRollupRaw(raw, entity, ts, value, "1 minute", salts, heavy)
-      val t1h = rollupTier(t1m, "1 hour")
-      val t1d = rollupTier(t1h, "1 day")
-      (t1m, t1h, t1d)
-    }
-  }
-
   /** Single-shuffle cascade: repartition raw by entity ONCE, then every
     * tier aggregate runs shuffle-free — HashPartitioning(entity) satisfies
     * each aggregate's ClusteredDistribution(entity, bucket) because equal
@@ -251,13 +203,14 @@ object Rollup {
     * 1m→1h→1d chain fuses into ONE whole-stage-codegen span above one
     * Exchange (asserted in PlanSpec).
     *
-    * Trade-off vs `cascade`: this ships RAW rows through the single
-    * shuffle (no map-side combine), while the default ships partial blocks
-    * through three shuffles. When raw cardinality per 1m bucket is low
-    * (~1 turn/bucket — the transcripts shape), one raw shuffle beats
-    * 1m-tier-sized + two smaller shuffles; with dense buckets the default's
-    * map-side combine wins. Also: per-entity co-location concentrates a
-    * mega-entity in one task — prefer the salted path for extreme keys. */
+    * Trade-off: this ships RAW rows through the single shuffle, with no
+    * map-side combine, where chaining rollupRaw and rollupTier would ship
+    * partial blocks through one shuffle per tier. When raw cardinality per
+    * 1m bucket is low (~1 turn/bucket — the transcripts shape), one raw
+    * shuffle beats a 1m-tier-sized shuffle plus two smaller ones; with
+    * dense buckets the per-tier map-side combine wins. Also: per-entity
+    * co-location concentrates a mega-entity in one task — for extreme keys
+    * build the 1m tier with Skew.saltedRollupRaw instead. */
   def cascadeCoPartitioned(
       raw: DataFrame,
       entity: Column,

@@ -26,6 +26,9 @@ import org.apache.spark.sql.functions._
   * one (conv_id, bucket) pair is itself hot (mega-conversation inside one
   * day at the 1d tier). AQE skew-join handles the join side; this handles
   * the aggregation side, which AQE does not rebalance.
+  *
+  * Salting is explicit: the caller picks the salted rollup and its `salts`
+  * (q_tier_1m_salted does). Nothing samples the data for heavy keys.
   */
 object Skew {
 
@@ -33,50 +36,6 @@ object Skew {
     * event time) so re-runs and resumed partitions salt identically. */
   def saltCol(ts: Column, salts: Int): Column =
     pmod(xxhash64(ts), lit(salts.toLong))
-
-  /** Deterministic heavy-key detection on a hash sample: rows are sampled
-    * at 1/sampleMod by a row-attribute hash (reproducible — no RNG state),
-    * per-entity sample counts are scaled back up, and entities whose
-    * estimated row count exceeds `rowThreshold` are returned. One cheap
-    * narrow pass (sample filter pushes into the scan) + a tiny aggregate —
-    * the 100 TB replacement for the reference's full-table per-entity
-    * count (/root/reference/scripts/weekly-cardio-measures.R:347-352). */
-  def detectHeavyKeys(
-      raw: DataFrame,
-      entity: Column,
-      ts: Column,
-      rowThreshold: Long,
-      sampleMod: Long = 100L): DataFrame = {
-    raw
-      .where(pmod(xxhash64(lit("skw"), entity, ts), lit(sampleMod)) === 0)
-      .groupBy(entity.as("conv_id"))
-      .agg((count(lit(1)) * sampleMod).as("est_rows"))
-      .where(col("est_rows") >= rowThreshold)
-      .select(col("conv_id").as("_heavy_key"))
-  }
-
-  /** Selective salting: only detected heavy entities fan out over `salts`
-    * sub-keys (others keep salt 0), so the merge phase stays tiny while hot
-    * keys spread across reducers. Result identical (mod FP order) to the
-    * unsalted rollup. `heavyKeys` is broadcast — it is at most a few
-    * thousand entities by construction. */
-  def adaptiveSaltedRollupRaw(
-      raw: DataFrame,
-      entity: Column,
-      ts: Column,
-      value: Column,
-      interval: String,
-      salts: Int,
-      heavyKeys: DataFrame): DataFrame = {
-    val marked = raw.join(
-      broadcast(heavyKeys).withColumn("_is_heavy", lit(true)),
-      entity === col("_heavy_key"), "left")
-    val salt = when(col("_is_heavy"), saltCol(ts, salts)).otherwise(lit(0L)).as("_salt")
-    val partials = Rollup.rollupRawKeyed(marked, entity, ts, value, interval, Seq(salt))
-    partials
-      .groupBy(col("conv_id"), col("bucket_start"))
-      .agg(Rollup.mergeAggs.head, Rollup.mergeAggs.tail: _*)
-  }
 
   /** Salted raw → tier rollup; result is identical (mod FP order) to
     * Rollup.rollupRaw. */
@@ -87,8 +46,8 @@ object Skew {
       value: Column,
       interval: String,
       salts: Int): DataFrame = {
-    val partials = Rollup
-      .rollupRawKeyed(raw, entity, ts, value, interval, Seq(saltCol(ts, salts).as("_salt")))
+    val partials = Rollup.bucketed(raw, entity.as("conv_id"), ts, interval,
+      Seq(saltCol(ts, salts).as("_salt")), Rollup.blockAggs(value, Rollup.todHours(ts)))
     partials
       .groupBy(col("conv_id"), col("bucket_start"))
       .agg(Rollup.mergeAggs.head, Rollup.mergeAggs.tail: _*)

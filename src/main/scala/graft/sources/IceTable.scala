@@ -342,11 +342,15 @@ final class IceTable(val root: String) {
     scanFiles(spark, s.map(liveFiles).getOrElse(Nil), loUs, hiUs)
 
   /** Scan a live file set the caller already resolved (a snapshot pinned
-    * for a whole read, as `IceDaySource` does), pruned the same way. */
+    * for a whole read, as `IceDaySource` does), pruned the same way. When
+    * the range prunes every live file the result is still empty with the
+    * table's schema: that of the footer an unpruned scan would read (the
+    * first live file in path order), so no Spark job starts. */
   private[graft] def scanFiles(spark: SparkSession, live: Seq[FileEntry], loUs: Long, hiUs: Long): DataFrame = {
     val files = live.filter(f => f.maxTsUs >= loUs && f.minTsUs <= hiUs).map(_.path)
-    if (files.isEmpty) spark.emptyDataFrame
-    else Parquet.readFiles(spark, files)
+    if (files.nonEmpty) Parquet.readFiles(spark, files)
+    else if (live.nonEmpty) Parquet.readFiles(spark, Seq(live.map(_.path).min)).where(lit(false))
+    else spark.emptyDataFrame
   }
 
   /** Total (rows, bytes) in the current snapshot — table-level metrics. */

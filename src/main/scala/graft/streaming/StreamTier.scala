@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import graft.operators.Rollup
 
 /** Structured-Streaming construction of the 1m tier: readStream →
   * watermarked event-time window aggregate → append sink.
@@ -29,13 +30,22 @@ object StreamTier {
   /** The streaming analog of Rollup.rollupRaw: the SAME block aggregates
     * (shared with the batch path — no drift) behind a watermark. */
   def tierAggregate(stream: DataFrame, value: Column, interval: String, lateness: String): DataFrame = {
-    val aggs = graft.operators.Rollup.blockAggs(value, graft.operators.Rollup.todHours(col("ts")))
-    stream
-      .withWatermark("ts", lateness)
-      .groupBy(col("conv_id"), window(col("ts"), interval).as("w"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("bucket_start", col("w.start"))
-      .drop("w")
+    val aggs = Rollup.blockAggs(value, Rollup.todHours(col("ts")))
+    Rollup.bucketed(stream.withWatermark("ts", lateness), col("conv_id"), col("ts"), interval, Nil, aggs)
+  }
+
+  /** The transcripts parquet stream under `inputPath`, with `text_len`,
+    * aggregated to a tier by tierAggregate. */
+  private def tierStream(
+      spark: SparkSession,
+      inputPath: String,
+      value: Column,
+      interval: String,
+      lateness: String): DataFrame = {
+    val schema = graft.sources.Parquet.read(spark, inputPath).schema
+    val stream = spark.readStream.schema(schema).parquet(inputPath)
+      .withColumn("text_len", length(col("text")).cast("double"))
+    tierAggregate(stream, value, interval, lateness)
   }
 
   /** Stream the 1m tier INTO an IceTable — batch backfill and streaming
@@ -54,11 +64,7 @@ object StreamTier {
       value: Column,
       interval: String = "1 minute",
       lateness: String = "10 minutes"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = graft.sources.Parquet.read(spark, inputPath).schema
-    val stream = spark.readStream.schema(schema).parquet(inputPath)
-      .withColumn("text_len", length(col("text")).cast("double"))
-    val tiered = tierAggregate(stream, value, interval, lateness)
-    tiered.writeStream
+    tierStream(spark, inputPath, value, interval, lateness).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -79,11 +85,7 @@ object StreamTier {
       value: Column,
       interval: String = "1 minute",
       lateness: String = "10 minutes"): DataStreamWriter[Row] = {
-    val schema = graft.sources.Parquet.read(spark, inputPath).schema
-    val stream = spark.readStream.schema(schema).parquet(inputPath)
-    val withVal = stream.withColumn("text_len", length(col("text")).cast("double"))
-    tierAggregate(withVal, value, interval, lateness)
-      .writeStream
+    tierStream(spark, inputPath, value, interval, lateness).writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
   }

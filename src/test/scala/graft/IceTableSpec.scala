@@ -150,6 +150,19 @@ class IceTableSpec extends SparkSpec {
     assert(pruned.inputFiles.length < t.scan(spark).inputFiles.length)
   }
 
+  test("a scan pruned to no file keeps the table's schema") {
+    val t = IceTable(tmp("ice"))
+    val id1 = t.append(turnsDf, "ts")
+    val pastUs = t.liveFiles(id1).map(_.maxTsUs).max + 1
+    val full = t.scan(spark)
+    for (empty <- Seq(t.scan(spark, loUs = pastUs), t.scanAt(spark, id1, loUs = pastUs))) {
+      assert(empty.schema == full.schema)
+      assert(empty.count() == 0)
+      assert(empty.inputFiles.isEmpty)
+      assert(empty.where($"ts" >= "2025-01-15").count() == 0)
+    }
+  }
+
   test("append manifests are delta: snapshot JSON entries stay O(new files) across N appends") {
     val t = IceTable(tmp("ice"))
     val days = (10 to 19).map(d => turnsDf.where($"ts" >= f"2025-01-$d%02d" && $"ts" < f"2025-01-${d + 1}%02d"))

@@ -67,8 +67,8 @@ class PlanSpec extends SparkSpec {
     val finalPlan = p.linesIterator.takeWhile(!_.contains("Initial Plan")).toSeq
     val nExch = finalPlan.count(l => l.contains("Exchange") && !l.contains("Reused"))
     assert(nExch == 1, s"expected a single exchange, got $nExch:\n${finalPlan.mkString("\n").take(3000)}")
-    // and it matches the default cascade's results (mod FP summation order)
-    val (_, _, ref) = Rollup.cascade(ev, col("user_id"), col("ts"), col("value"))
+    // and it matches the direct raw→1d rollup (mod FP summation order)
+    val ref = Rollup.rollupRaw(ev, col("user_id"), col("ts"), col("value"), "1 day")
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("conv_id"), col("bucket_start"), col("n_rows"), col("n_vals"),
         round(col("sum"), 6), col("min"), col("max"), round(col("sum_sin"), 9))

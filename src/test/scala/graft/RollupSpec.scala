@@ -35,27 +35,22 @@ class RollupSpec extends SparkSpec {
   }
 
   test("cascade consistency: raw→1d equals raw→1m→1h→1d") {
-    val direct = Rollup.rollupRaw(measured, $"conv_id", $"ts", $"text_len", "1 day")
-    val (t1m, _, cascaded) = Rollup.cascade(measured, $"conv_id", $"ts", $"text_len")
-    assert(canon(direct) == canon(cascaded))
+    def direct(interval: String) = Rollup.rollupRaw(measured, $"conv_id", $"ts", $"text_len", interval)
+    // the co-partitioned cascade: each tier equals the direct raw rollup
+    val (t1m, t1h, t1d) = Rollup.cascadeCoPartitioned(measured, $"conv_id", $"ts", $"text_len")
     assert(t1m.count() > 0)
+    assert(canon(t1m) == canon(direct("1 minute")))
+    assert(canon(t1h) == canon(direct("1 hour")))
+    assert(canon(t1d) == canon(direct("1 day")))
+    // tier-on-tier merges with a shuffle per tier reach the same 1d rows
+    val chained = Rollup.rollupTier(Rollup.rollupTier(direct("1 minute"), "1 hour"), "1 day")
+    assert(canon(chained) == canon(direct("1 day")))
   }
 
   test("salted rollup equals unsalted rollup") {
     val plain = Rollup.rollupRaw(measured, $"conv_id", $"ts", $"text_len", "1 hour")
     val salted = Skew.saltedRollupRaw(measured, $"conv_id", $"ts", $"text_len", "1 hour", salts = 7)
     assert(canon(plain) == canon(salted))
-  }
-
-  test("adaptive salting: detects the mega-conversation, result equals plain rollup") {
-    val heavy = Skew.detectHeavyKeys(measured, $"conv_id", $"ts", rowThreshold = 300L, sampleMod = 10L)
-    val heavyKeys = heavy.as[String].collect().toSet
-    // the generator's mega-conversation (20× turns) must be detected
-    assert(heavyKeys.contains("conv00000000"), s"detected: $heavyKeys")
-    val adaptive = Skew.adaptiveSaltedRollupRaw(
-      measured, $"conv_id", $"ts", $"text_len", "1 hour", salts = 5, heavyKeys = heavy)
-    val plain = Rollup.rollupRaw(measured, $"conv_id", $"ts", $"text_len", "1 hour")
-    assert(canon(adaptive) == canon(plain))
   }
 
   test("NaN measures are normalized to null before accumulation (P9)") {
@@ -93,22 +88,6 @@ class RollupSpec extends SparkSpec {
     val theta = 0.5 * 2 * math.Pi / 24
     val expSd = math.sqrt(-2 * math.log(math.cos(theta))) * 24 / (2 * math.Pi)
     assert(math.abs(row.getAs[Double]("circ_sd_h") - expSd) < 1e-6)
-  }
-
-  test("cascadeAuto picks the salted plan for mega-entities and matches the plain cascade") {
-    // fixture has 1 mega conv at 20x — a threshold below its row count makes
-    // detectHeavyKeys fire and route through the salted two-phase plan
-    val heavyThreshold = 100L
-    import graft.operators.Skew
-    assert(Skew.detectHeavyKeys(measured, $"conv_id", $"ts", heavyThreshold).count() >= 1)
-    val (_, _, auto) = Rollup.cascadeAuto(measured, $"conv_id", $"ts", $"text_len",
-      rowThreshold = heavyThreshold, salts = 4)
-    val (_, _, plain) = Rollup.cascade(measured, $"conv_id", $"ts", $"text_len")
-    assert(canon(auto) == canon(plain))
-    // and with an unreachable threshold it matches too (co-partitioned path)
-    val (_, _, cop) = Rollup.cascadeAuto(measured, $"conv_id", $"ts", $"text_len",
-      rowThreshold = Long.MaxValue)
-    assert(canon(cop) == canon(plain))
   }
 
   test("typed Dataset API: rollupTurns returns Dataset[TierRow] matching the DataFrame path") {
@@ -153,7 +132,7 @@ class RollupSpec extends SparkSpec {
     val t = TranscriptGen.turns(spark, nConvs = 15L, withDuplicates = false)
     val before = t.orderBy("conv_id", "turn_idx").select("text").as[String].collect()
     // run a full cascade (must not mutate source), then re-read raw in stable order
-    Rollup.cascade(TranscriptGen.withMeasures(t.toDF), $"conv_id", $"ts", $"text_len")._3.count()
+    Rollup.cascadeCoPartitioned(TranscriptGen.withMeasures(t.toDF), $"conv_id", $"ts", $"text_len")._3.count()
     val after = TranscriptGen.turns(spark, nConvs = 15L, withDuplicates = false)
       .orderBy("conv_id", "turn_idx").select("text").as[String].collect()
     assert(java.util.Arrays.equals(
