@@ -9,6 +9,9 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
@@ -40,20 +43,21 @@ import graft.sources.{IceTable, MetaFiles, Parquet}
   * a half-visible day.
   *
   * Scale: each day scans ONLY the raw files overlapping that day (IceTable
-  * stat pruning). Work units are INDEPENDENT Spark jobs submitted from a
-  * bounded thread pool (`parallelism`) — on a 1000-executor cluster this
-  * keeps the cluster busy while one day's final stage drains, and at years
-  * of history it removes the serial per-day driver latency. All checkpoint
-  * and output I/O goes through the Hadoop FileSystem API (markers through
-  * sources.MetaFiles), so the build works against HDFS/object storage,
-  * not just the local filesystem.
+  * stat pruning). Up to `MaxAutoBatch` to-run days share one batch, one
+  * chain of Spark jobs, so a few days' build pays one plan, one set of
+  * tasks and one write; past the cap, batches are INDEPENDENT job chains
+  * submitted from a bounded thread pool (`parallelism`), which at years of
+  * history keeps the cluster busy while one batch's final stage drains.
+  * All checkpoint and output I/O goes through the Hadoop FileSystem API
+  * (markers through sources.MetaFiles), so the build works against
+  * HDFS/object storage, not just the local filesystem.
   */
 object CheckpointedRollup {
 
   private val mapper = new ObjectMapper()
   private[operators] val DayUs = 86400000000L
-  /** Largest auto-sized day batch (see `runUnits`). */
-  private val MaxAutoBatch = 8
+  /** Most days in one batch (see `runUnits`). */
+  private[graft] val MaxAutoBatch = 8
 
   final case class DayResult(dayUs: Long, rows: Long, bytes: Long, skipped: Boolean)
 
@@ -182,31 +186,34 @@ object CheckpointedRollup {
     * `transform` to that day's rows and commit the result dir + marker
     * atomically. `failAfter` injects a crash after N completed units —
     * used by the resume tests (only meaningful with parallelism=1).
-    * `parallelism` bounds how many unit jobs are in flight concurrently
-    * (independent Spark jobs; results are per-day and order-independent).
+    * `parallelism` bounds how many batches are in flight concurrently
+    * (independent job chains; results are per-day and order-independent).
     * Returns per-day results in day order; a skipped day (marker or
     * tombstone) comes back with `skipped = true`.
     *
     * `dayBucket` names an OUTPUT column whose event-time day identifies
     * the day unit every output row belongs to (e.g. `col("bucket_start")`
     * for tier rollups — 1m/1h/1d windows never straddle a day). To-run
-    * days are grouped into BATCHES that execute as ONE Spark job each
+    * days are grouped into BATCHES that execute as ONE write each
     * (dynamic day partitioning splits the output), amortizing the per-job
     * fixed cost (plan + submit + commit) across the batch — while each day
     * still commits individually (atomic rename + marker), so visibility,
     * fingerprints and resume stay day-grained; a crash mid-batch redoes
-    * only that batch's uncommitted days. Rows are written in a fixed order
-    * per task, so at a fixed task layout a day's files (and the byte count
-    * its marker chains downstream) do not depend on which days shared its
+    * only that batch's uncommitted days. Each day is one file, written by
+    * one task in a fixed row order, so a day's file (and the byte count its
+    * marker chains downstream) does not depend on which days shared its
     * batch.
     *
-    * Batch size: batches are sized so the to-run days fill the
-    * `parallelism` pool in ONE wave, ceil(days / parallelism), capped at
-    * `MaxAutoBatch` days. A second wave would pay
-    * every batch's fixed cost again; past the cap, build time was measured
-    * flat across 5-9 days per batch at 140 days on 8 threads
-    * (OPTIMIZATION_r06.md). Batches hold one day under `failAfter` (it
-    * counts day units). */
+    * Batch size: to-run days are cut into batches of `MaxAutoBatch` days,
+    * whatever `parallelism` is, and the pool runs batches side by side only
+    * past the cap. Every batch pays its own plans, tasks and commits, and
+    * the cap was measured flat across 5-9 days per batch at 140 days on 8
+    * threads (OPTIMIZATION_r06.md); splitting 8 days into 4 concurrent
+    * 2-day batches only multiplied that fixed cost on a CPU-bound driver
+    * (24 jobs against 9 for a 3-tier build of 8 days). The batch output is
+    * distributed by day before the write, so each day is written by one
+    * task into one file. Batches hold one day under `failAfter` (it counts
+    * day units). */
   def runUnits(
       spark: SparkSession,
       source: DaySource,
@@ -234,8 +241,12 @@ object CheckpointedRollup {
       val rows = status.iterator
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          // read options on the session's loaded conf, one per reader (its
+          // close releases them): the one-argument ParquetFileReader.open
+          // builds default options, whose fresh Hadoop Configuration
+          // re-parses its XML resources on every call
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+            HadoopReadOptions.builder(conf).build())
           try r.getRecordCount finally r.close()
         }.sum
       // day dirs are flat, so the one listing serves both the footer walk
@@ -254,7 +265,18 @@ object CheckpointedRollup {
       DayResult(dayUs, rows, bytes, skipped = false)
     }
 
+    // every job of a batch carries the description store/<tier>/batch=<first
+    // day>, so the Spark UI and any listener can attribute it; the thread's
+    // previous description comes back afterwards
+    val tier = new Path(outDir).getName
     def runBatch(batch: Seq[(Long, Long)]): Seq[DayResult] = { // (dayUs, fp)
+      val sc = spark.sparkContext
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"store/$tier/batch=${batch.head._1}")
+      try writeBatch(batch) finally sc.setJobDescription(callerDescription)
+    }
+
+    def writeBatch(batch: Seq[(Long, Long)]): Seq[DayResult] = {
       failAfter.foreach(k =>
         if (done.get() >= k) throw new RuntimeException(s"injected failure after $k units"))
       val t0 = System.nanoTime()
@@ -267,11 +289,13 @@ object CheckpointedRollup {
       // floor-div day of the bucket column (exact in double: |µs| < 2^53);
       // the value doubles as the committed day-dir suffix
       val us = unix_micros(dayBucket.cast("timestamp"))
-      // each task writes its rows of a day in one fixed order, so a day's
-      // files do not depend on which days share its batch: their byte
-      // count chains into the downstream fingerprints (DayDirSource)
+      // one task writes all of a day's rows, in one fixed order, so each
+      // day is one file whose bytes do not depend on which days share its
+      // batch or how AQE sizes the tasks: the byte count chains into the
+      // downstream fingerprints (DayDirSource)
       val withDay = out.withColumn("day",
         floor(us / lit(DayUs.toDouble)).cast("long") * lit(DayUs))
+        .repartition(col("day"))
         .sortWithinPartitions((col("day") +: out.schema.fields.toSeq
           .filter(f => RowOrdering.isOrderable(f.dataType)).map(f => col(f.name))): _*)
       val tmpDir = new Path(outDir, s".batch-${batch.head._1}.tmp")
@@ -293,19 +317,15 @@ object CheckpointedRollup {
       val results = batch.map { case (dayUs, fp) =>
         val dayDir = new Path(outDir, s"day=$dayUs")
         val src = new Path(tmpDir, s"day=$dayUs")
+        // a pending day can hold zero output rows (a source file span
+        // covering a row-less day): commit a SCHEMA-BEARING empty parquet
+        // file, written on the driver with no Spark job — a bare mkdirs
+        // would make any later single-day scan of this day fail schema
+        // inference
+        if (!written.contains(dayUs)) Parquet.writeEmpty(spark, src.toString, out.schema)
         if (fs.exists(dayDir)) fs.delete(dayDir, true)
-        if (written.contains(dayUs)) {
-          if (!fs.rename(src, dayDir))
-            throw new IllegalStateException(s"checkpoint commit: rename $src -> $dayDir failed")
-        } else {
-          // a pending day can hold zero output rows (a source file span
-          // covering a row-less day): commit a SCHEMA-BEARING empty
-          // parquet dir — a bare mkdirs would make any later single-day
-          // scan of this day fail schema inference
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), out.schema)
-            .write.mode("overwrite").parquet(dayDir.toString)
-        }
+        if (!fs.rename(src, dayDir))
+          throw new IllegalStateException(s"checkpoint commit: rename $src -> $dayDir failed")
         // wall_ms = this day's amortized share of its batch job (the
         // job is indivisible; recording the full batch wall per day
         // would overstate summed per-day wall by up to batchSize×)
@@ -322,11 +342,7 @@ object CheckpointedRollup {
       tombs.get(d).contains(fp) || isDone(spark, outDir, d, fp)
     }
     val skippedResults = doneDays.map { case (d, _) => DayResult(d, 0L, 0L, skipped = true) }
-    val batchSize =
-      if (failAfter.isDefined) 1
-      else math.max(1, math.min(MaxAutoBatch,
-        math.ceil(runDays.size.toDouble / math.max(parallelism, 1)).toInt))
-    val batches = runDays.grouped(batchSize).toSeq
+    val batches = runDays.grouped(if (failAfter.isDefined) 1 else MaxAutoBatch).toSeq
 
     val ran: Seq[DayResult] =
       if (parallelism <= 1) batches.flatMap(runBatch)

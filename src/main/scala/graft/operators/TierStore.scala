@@ -54,11 +54,12 @@ object TierStore {
     import CheckpointedRollup.{runUnits, DayDirSource, IceDaySource}
     val dirs = TierDirs(s"$root/1m", s"$root/1h", s"$root/1d")
     // dayBucket = bucket_start: 1m/1h/1d windows never straddle a day, so
-    // runUnits batches a tier's to-run days into one wave of `parallelism`
-    // jobs (see runUnits) while each day still commits and fingerprints
-    // individually. Every tier's scans (raw files, upstream day dirs) take
-    // their schema from a parquet footer (sources.Parquet), so no batch
-    // starts a schema-inference job before its write.
+    // runUnits writes up to MaxAutoBatch of a tier's to-run days in one
+    // batch, one job chain (see runUnits), while each day still commits
+    // and fingerprints individually; `parallelism` only runs batches side
+    // by side past the cap. Every tier's scans (raw files, upstream day
+    // dirs) take their schema from a parquet footer (sources.Parquet), so
+    // no batch starts a schema-inference job before its write.
     val r1m = runUnits(spark, new IceDaySource(source), dirs.t1m,
       raw => Rollup.rollupRawWithGorilla(
         raw.withColumn("_v", value), col("conv_id"), col("ts"), col("_v"), "1 minute"),

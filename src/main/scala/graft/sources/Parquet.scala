@@ -1,9 +1,13 @@
 package graft.sources
 
+import java.util.UUID
+
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -29,9 +33,17 @@ object Parquet {
     * back to plain `spark.read.parquet` when `mergeSchema` is on or no
     * footer can be read, so errors (a missing path, no data files) are
     * Spark's own. Finding the footer lists every path once on the driver,
-    * as Spark's file index does again when the DataFrame is built. */
-  def read(spark: SparkSession, paths: String*): DataFrame =
-    open(spark, paths, footerSchema(spark, paths))
+    * as Spark's file index does again when the DataFrame is built.
+    *
+    * Globs are expanded here, as Spark would expand them, and Spark gets
+    * the matched paths: given one glob path, Spark's streaming-sink probe
+    * (`FileStreamSink.hasMetadata`) would stat the pattern itself and log
+    * a WARN with a stack trace. A glob that matches nothing is passed on
+    * as written, so Spark reports the missing path. */
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    val expanded = globbed(spark, paths)
+    open(spark, expanded, footerSchema(spark, expanded))
+  }
 
   /** `read` for paths already known to be parquet DATA files (no
     * directories, globs or summary files), such as a table's live files:
@@ -45,9 +57,9 @@ object Parquet {
       qualified.minByOption(_.toString).map(f => f.getFileSystem(conf).getFileStatus(f))
     })
 
-  /** The schema Spark infers for `paths` with `mergeSchema` off, read from
-    * one footer on the driver; None when `mergeSchema` is on or no footer
-    * can be read. */
+  /** The schema Spark infers for `paths` (files or directories; `read`
+    * expands globs first) with `mergeSchema` off, read from one footer on
+    * the driver; None when `mergeSchema` is on or no footer can be read. */
   def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
     schemaFrom(spark) { conf =>
       // Spark's choice (ParquetUtils.inferSchema; its splitFiles is
@@ -56,13 +68,42 @@ object Parquet {
       val leaves = paths.flatMap { p =>
         val path = new Path(p)
         val fs = path.getFileSystem(conf)
-        roots(fs, path).flatMap(leafFiles(fs, _)).map(f => fs.makeQualified(f.getPath).toString -> f)
+        leafFiles(fs, fs.getFileStatus(path)).map(f => fs.makeQualified(f.getPath).toString -> f)
       }.sortBy(_._1).map(_._2)
       def named(n: String) = leaves.find(_.getPath.getName == n)
       named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
         .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
         .orElse(leaves.find(f => !Summaries.contains(f.getPath.getName)))
     }
+
+  /** Write a row-less parquet file holding `schema` into the new dir `dir`,
+    * on the driver: the file a Spark write of an empty DataFrame leaves,
+    * through the same writer (so the footer carries Spark's row-metadata
+    * key and `read` infers `schema`), without a Spark job. */
+  def writeEmpty(spark: SparkSession, dir: String, schema: StructType): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    factory.newInstance(new Path(dir, name).toString, schema, ctx).close()
+  }
+
+  /** `paths` with each glob replaced by the paths it matches (qualified,
+    * as Spark's `DataSource` globs them); a glob matching nothing stays. */
+  private def globbed(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.flatMap { p =>
+      val path = new Path(p)
+      if (!isGlob(path)) Seq(p)
+      else {
+        val fs = path.getFileSystem(conf)
+        val matched = Option(fs.globStatus(path)).toSeq.flatten.map(s => fs.makeQualified(s.getPath).toString)
+        if (matched.isEmpty) Seq(p) else matched
+      }
+    }
+  }
+
+  private def isGlob(path: Path): Boolean = path.toString.exists("{}[]*?\\".contains(_))
 
   private val Summaries =
     Set(ParquetFileWriter.PARQUET_METADATA_FILE, ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
@@ -90,11 +131,6 @@ object Parquet {
       }
     }.toOption.flatten
   }
-
-  private def roots(fs: FileSystem, path: Path): Seq[FileStatus] =
-    if (path.toString.exists("{}[]*?\\".contains(_)))
-      Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Nil)
-    else Seq(fs.getFileStatus(path))
 
   private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
     if (st.isDirectory)

@@ -252,20 +252,29 @@ class IceTableSpec extends SparkSpec {
     val t = IceTable(tmp("ice-empty"))
     t.append(rows.coalesce(1).sortWithinPartitions("ts"), "ts")
     val outDir = tmp("tier-batched")
-    val res = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
+    val (res, jobs) = jobsDuring(CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
       raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
-      parallelism = 1, dayBucket = col("bucket_start"))
+      parallelism = 1, dayBucket = col("bucket_start")))
     assert(res.length == 3, s"3 pending days expected, got $res")
     val empty = res.find(_.rows == 0L)
     assert(empty.isDefined, s"the row-less middle day must commit with rows=0: $res")
+    // every job belongs to the batch's one write (one SQL execution, named
+    // after the batch): committing the empty day started none
+    val batchName = s"store/${new java.io.File(outDir).getName}/batch=${res.head.dayUs}"
+    assert(jobs.nonEmpty && jobs.forall(j => description(j) == batchName), jobs.map(description))
+    val execIds = jobs.map(j => Option(j.getProperty("spark.sql.execution.id")))
+    assert(execIds.distinct.size == 1 && execIds.head.isDefined, s"SQL executions of the jobs: $execIds")
     // per-day markers exist and single-day re-scan of EVERY day (incl. the
-    // empty one) succeeds with the tier schema
+    // empty one) succeeds with the tier schema, the one Spark infers
     val src = new CheckpointedRollup.DayDirSource(spark, outDir)
     assert(src.pendingDays.length == 3)
-    src.pendingDays.foreach { d =>
+    val schemas = src.pendingDays.map { d =>
       val df = src.scanDays(spark, Seq(d))
       assert(df.columns.contains("bucket_start"), s"day $d lost its schema")
+      assert(df.schema == spark.read.parquet(s"$outDir/day=$d").schema, s"day $d: schema differs from Spark's")
+      df.schema
     }
+    assert(schemas.distinct.size == 1, s"the empty day's schema differs: $schemas")
     assert(src.scanDays(spark, src.pendingDays).count() == 3) // 3 (conv, minute) buckets
     // rebuild is a metadata-only skip for all days, empty one included
     val again = CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +28,34 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** `body`'s result and the local properties of each Spark job started
+    * while it ran, in start order. A marker job run afterwards flushes the
+    * listener bus: events arrive in order, so once the marker's start is
+    * seen, every earlier job's has been too. */
+  def jobsDuring[T](body: => T): (T, Seq[Properties]) = {
+    val started = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).getOrElse(new Properties()))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
+      def isMarker(p: Properties) = p.getProperty("spark.job.description") == marker
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(started.asScala.exists(isMarker), "the listener never saw the marker job")
+      (r, started.asScala.toSeq.filterNot(isMarker))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The description of a job, from its local properties ("" if none). */
+  def description(job: Properties): String = Option(job.getProperty("spark.job.description")).getOrElse("")
 
   /** Rows of the full outer join of `a` and `b` on `keys` that differ: an
     * `exact` column not null-safe equal, or an `approx` column null on

@@ -105,46 +105,115 @@ class TierStoreSpec extends SparkSpec {
     assert(lo.getTime * 1000 >= cutoffUs - 86400000000L)
   }
 
-  test("sync batch sizes: parallelism 4 and 1 build equal tiers and markers; 1m days lost from the store re-sync only 1m") {
-    val src = IceTable(tmp("ice-waves"))
-    src.append(TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
-      .where($"ts" < "2025-01-16").withColumn("text_len", length($"text").cast("double")), "ts")
-    val (p4, p1) = (tmp("tiers-p4"), tmp("tiers-p1"))
-    val r4 = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
-    val r1 = TierStore.sync(spark, src, p1, $"text_len", parallelism = 1)
-    assert(r4._1.size >= 8, s"the fixture must span at least 8 days, got ${r4._1.size}")
-    assert(Seq(r4, r1).forall(r => Seq(r._1, r._2, r._3).forall(_.forall(!_.skipped))))
+  private val Tiers = Seq("1m", "1h", "1d")
 
-    def marker(root: String, tier: String, dayUs: Long) = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new java.io.File(s"$root/$tier/_checkpoints/day-$dayUs.json"))
-    val keys = Seq("conv_id", "bucket_start")
-    val exact = Seq("n_rows", "n_vals", "min", "max", "gblock")
-    val approx = Seq("sum", "sum_sq", "sum_sin", "sum_cos")
-    for (tier <- Seq("1m", "1h", "1d")) {
-      val days = new CheckpointedRollup.DayDirSource(spark, s"$p4/$tier").pendingDays
-      assert(days == new CheckpointedRollup.DayDirSource(spark, s"$p1/$tier").pendingDays, tier)
-      // 1m markers also share the raw-file fingerprint (same source table)
-      val fields = Seq("rows", "bucket_lo_us", "bucket_hi_us") ++ (if (tier == "1m") Seq("source_files_fp") else Nil)
-      for (d <- days; f <- fields)
-        assert(marker(p4, tier, d).get(f).asLong == marker(p1, tier, d).get(f).asLong, s"$tier day $d marker $f")
-      // row-for-row equal; float sums within 1e-9 relative (summation order
-      // follows the batch's partitioning)
-      val bad = mismatches(TierStore.scanTier(spark, s"$p4/$tier"), TierStore.scanTier(spark, s"$p1/$tier"),
-        keys, exact, approx)
-      assert(bad.count() == 0, s"$tier differs between parallelism 4 and 1")
+  /** Every committed day dir's files: each must hold exactly one parquet
+    * file; its bytes, by "<tier>/day=<d>". */
+  private def dayFiles(root: String): Map[String, Seq[Byte]] =
+    Tiers.flatMap { tier =>
+      new java.io.File(s"$root/$tier").listFiles().filter(_.getName.startsWith("day=")).map { dir =>
+        val parquet = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(parquet.length == 1, s"$tier/${dir.getName} holds ${parquet.length} parquet files")
+        s"$tier/${dir.getName}" -> Files.readAllBytes(parquet.head.toPath).toSeq
+      }
+    }.toMap
+
+  /** Every day marker of `root` without its `wall_ms`, by "<tier>/<day>". */
+  private def markers(root: String): Map[String, String] =
+    Tiers.flatMap { tier =>
+      new CheckpointedRollup.DayDirSource(spark, s"$root/$tier").pendingDays.map { d =>
+        val m = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(markerFile(root, tier, d).toFile).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        assert(m.remove("wall_ms") != null, s"$tier day $d: no wall_ms")
+        s"$tier/$d" -> m.toString
+      }
+    }.toMap
+
+  /** Sync `src` into new roots at parallelism 4 and 1; the results and the
+    * jobs of each. */
+  private def syncBoth(src: IceTable, name: String): Seq[(String, Results, Seq[java.util.Properties])] =
+    Seq(4, 1).map { p =>
+      val root = tmp(s"tiers-$name-p$p")
+      val (r, jobs) = jobsDuring(TierStore.sync(spark, src, root, $"text_len", parallelism = p))
+      assert(Seq(r._1, r._2, r._3).forall(_.forall(!_.skipped)))
+      (root, r, jobs)
     }
 
-    // the fingerprint chain: 1m days lost from the store (dir and marker
-    // gone, and no tombstone) are rebuilt from raw with identical markers,
-    // so 1h and 1d skip them
-    val lost = r4._1.map(_.dayUs).take(3)
-    lost.foreach { d =>
-      Fs.deleteTreeQuietly(s"$p4/1m/day=$d")
-      Files.delete(Paths.get(s"$p4/1m/_checkpoints/day-$d.json"))
+  /** The two roots hold byte-identical day files and equal markers (but for
+    * `wall_ms`). */
+  private def assertSameStore(a: String, b: String): Unit = {
+    val (fa, fb) = (dayFiles(a), dayFiles(b))
+    assert(fa.keySet == fb.keySet)
+    fa.keys.foreach(k => assert(fa(k) == fb(k), s"$k: day files differ"))
+    assert(markers(a) == markers(b))
+  }
+
+  /** `body` with AQE's partition coalescing off: a batch's final stage then
+    * keeps `spark.sql.shuffle.partitions` tasks, and a day's rows reach
+    * several of them unless the write distributes its rows by day. */
+  private def uncoalesced[T](body: => T): T = {
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try body finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+  }
+
+  test("one write per tier: up to MaxAutoBatch days sync as one batch at parallelism 4 and 1, one byte-identical file per day; 1m days lost from the store re-sync only 1m") {
+    uncoalesced {
+      val src = IceTable(tmp("ice-waves"))
+      src.append(TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
+        .where($"ts" < "2025-01-09").withColumn("text_len", length($"text").cast("double")), "ts")
+      val Seq((p4, r4, jobs4), (p1, _, jobs1)) = syncBoth(src, "one")
+      val days = r4._1.map(_.dayUs)
+      assert(days.size >= 4 && days.size <= CheckpointedRollup.MaxAutoBatch, s"${days.size} days")
+      // every tier runs ONE batch: its jobs carry one name and belong to one
+      // SQL execution, the batch's write
+      for ((jobs, p) <- Seq((jobs4, 4), (jobs1, 1))) {
+        assert(jobs.map(description).distinct.sorted == Tiers.map(t => s"store/$t/batch=${days.head}").sorted,
+          s"parallelism $p: ${jobs.map(description)}")
+        for (t <- Tiers) {
+          val execs = jobs.filter(j => description(j).startsWith(s"store/$t/")).map(_.getProperty("spark.sql.execution.id"))
+          assert(execs.distinct.size == 1 && execs.head != null, s"parallelism $p, $t: SQL executions $execs")
+        }
+      }
+      assertSameStore(p4, p1)
+
+      // the fingerprint chain: 1m days lost from the store (dir and marker
+      // gone, and no tombstone) are rebuilt from raw with identical markers,
+      // so 1h and 1d skip them
+      val marks = markers(p4)
+      val lost = days.take(3)
+      lost.foreach { d =>
+        Fs.deleteTreeQuietly(s"$p4/1m/day=$d")
+        Files.delete(markerFile(p4, "1m", d))
+      }
+      val (a1m, a1h, a1d) = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
+      assert(a1m.filterNot(_.skipped).map(_.dayUs) == lost)
+      assert(a1h.forall(_.skipped) && a1d.forall(_.skipped), s"1h/1d rebuilt: ${(a1h ++ a1d).filterNot(_.skipped)}")
+      assert(markers(p4) == marks)
     }
-    val (a1m, a1h, a1d) = TierStore.sync(spark, src, p4, $"text_len", parallelism = 4)
-    assert(a1m.filterNot(_.skipped).map(_.dayUs) == lost)
-    assert(a1h.forall(_.skipped) && a1d.forall(_.skipped), s"1h/1d rebuilt: ${(a1h ++ a1d).filterNot(_.skipped)}")
+  }
+
+  test("more than MaxAutoBatch days split into batches of MaxAutoBatch; every job of a sync is named after its tier and batch") {
+    val raw = TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false).toDF
+      .where($"ts" < "2025-01-16").withColumn("text_len", length($"text").cast("double"))
+    val src = IceTable(tmp("ice-batches"))
+    src.append(raw, "ts")
+    val Seq((p4, r4, jobs4), (p1, _, jobs1)) = syncBoth(src, "many")
+    val days = r4._1.map(_.dayUs)
+    assert(days.size > CheckpointedRollup.MaxAutoBatch, s"${days.size} days")
+    // every tier's days (1h and 1d take theirs from the markers below, so
+    // they are the 1m days) cut into batches of MaxAutoBatch, each named
+    // after its first day
+    val names = for (t <- Tiers; b <- days.grouped(CheckpointedRollup.MaxAutoBatch)) yield s"store/$t/batch=${b.head}"
+    assert(names.size >= 6)
+    for ((jobs, p) <- Seq((jobs4, 4), (jobs1, 1)))
+      assert(jobs.map(description).distinct.sorted == names.sorted, s"parallelism $p: ${jobs.map(description)}")
+    assertSameStore(p4, p1)
+    for ((tier, interval) <- Seq(("1m", "1 minute"), ("1h", "1 hour"), ("1d", "1 day"))) {
+      val bad = mismatches(TierStore.scanTier(spark, s"$p4/$tier"),
+        Rollup.rollupRaw(raw, $"conv_id", $"ts", $"text_len", interval), Seq("conv_id", "bucket_start"),
+        Seq("n_rows", "n_vals", "min", "max"), Seq("sum", "sum_sq", "sum_sin", "sum_cos"))
+      assert(bad.count() == 0, s"$tier differs from a direct rollup: ${bad.take(3).mkString("; ")}")
+    }
   }
 
   test("retention ladder expires fine tiers earlier than coarse tiers") {
