@@ -572,11 +572,9 @@ object Queries {
     // W4 first-match latency (REM-onset analog): first 'purchase' − first event.
     "q_first_latency" -> ((
       (s: SparkSession, dir: String) =>
-        events(s, dir)
-          .groupBy(col("user_id").as("conv_id"))
-          .agg(
-            (min(when(col("event_type") === "purchase", unix_micros(col("ts").cast("timestamp"))))
-              - min(unix_micros(col("ts").cast("timestamp")))).as("latency_us")),
+        Episodes.firstMatchLatency(events(s, dir), Seq(col("user_id")), col("ts"),
+          from = lit(true), until = col("event_type") === "purchase")
+          .select(col("user_id").as("conv_id"), col("latency_us")),
       Some(
         """SELECT user_id AS conv_id,
           |  min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) - min(epoch_us(ts)) AS latency_us

@@ -180,11 +180,6 @@ object Gorilla {
     (ts, vs)
   }
 
-  def decodeSeq(block: Array[Byte]): Seq[(Long, Double)] = {
-    val (ts, vs) = decode(block)
-    ts.zip(vs).toSeq
-  }
-
   def pointCount(block: Array[Byte]): Int =
     if (block.isEmpty) 0
     else ((block(0) & 0xFF) << 24 | (block(1) & 0xFF) << 16 | (block(2) & 0xFF) << 8 | (block(3) & 0xFF))

@@ -3,12 +3,10 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** One decoded point (named fields for a readable exploded schema). */
-final case class GPoint(ts_us: Long, v: Double)
-
 /** Gorilla tier-compression surface. The aggregate itself is the native
   * Catalyst `plans.GorillaBlockAgg` (TypedImperativeAggregate — primitive
-  * update path, partial buffers serialized with exactly the live slots). */
+  * update path, partial buffers serialized with exactly the live slots).
+  * Tier values are read back through `plans.GorillaExplode`. */
 object GorillaAgg {
 
   /** Column-level aggregate: gorilla block of (unix_micros(ts), value).
@@ -34,10 +32,4 @@ object GorillaAgg {
       .withColumn("n_points", udf((b: Array[Byte]) => Gorilla.pointCount(b)).apply(col("block")))
       .withColumn("block_bytes", length(col("block")))
   }
-
-  /** Decode a block column to array<struct<ts_us,v>> (explode to re-expand).
-    * Scala UDF at the decode edge only — encode/merge stay in the
-    * aggregate; hot rollup paths never decode. */
-  def decodeUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((b: Array[Byte]) => Gorilla.decodeSeq(b).map { case (t, v) => GPoint(t, v) })
 }

@@ -80,15 +80,4 @@ object MetricRegistry {
     val as = aggs(values, metrics)
     df.groupBy(keys: _*).agg(as.head, as.tail: _*)
   }
-
-  /** Unpivot a summarize() result to long concept rows
-    * (entity, bucket, concept, nval_num) — the reference's output data model
-    * (/root/reference/scripts/weekly-cardio-measures.R:525-553). */
-  def toConceptRows(wide: DataFrame, keyCols: Seq[String], prefix: String): DataFrame = {
-    val metricCols = wide.columns.filterNot(keyCols.contains)
-    val stacked = metricCols.map(m =>
-      s"'$prefix$m', cast(`$m` as double)").mkString(", ")
-    wide.select(keyCols.map(col) :+
-      expr(s"stack(${metricCols.length}, $stacked) as (concept, nval_num)"): _*)
-  }
 }

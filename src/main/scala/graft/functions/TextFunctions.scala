@@ -15,32 +15,17 @@ object TextFunctions {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish subword count: word-boundary pieces + digit runs + punctuation
     * singles, approximated by a regex count — a cheap stand-in for real BPE
     * when sizing training corpora. */
   def subwordCount(text: Column): Column =
     size(filter(split(text, "(?<=[\\s\\p{Punct}])|(?=[\\s\\p{Punct}])"), t => length(trim(t)) > 0))
 
-  /** Ratio of tokens found in `stopwords` (lowercased compare). */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(lower(text))
-    val hits = size(filter(toks, t => t.isInCollection(stopwords)))
-    when(size(toks) > 0, hits.cast("double") / size(toks)).otherwise(lit(0.0))
-  }
-
-  /** Distinct-token ratio — low values indicate boilerplate/repetition. */
-  def distinctTokenRatio(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) > 0, size(array_distinct(toks)).cast("double") / size(toks)).otherwise(lit(0.0))
-  }
-
   /** All three token stats from ONE tokenizer run: struct(n_tokens,
-    * distinct_ratio, stopword_ratio). Composing tokenCount +
-    * distinctTokenRatio + stopwordRatio re-runs the trim+regex-split per
-    * stat (conditional subtrees escape Catalyst subexpression
-    * elimination), and stopwordRatio re-tokenizes the LOWERED text besides
+    * distinct_ratio, stopword_ratio). One tokenizer run per stat re-runs
+    * the trim+regex-split per stat (conditional subtrees escape Catalyst
+    * subexpression elimination), and a stopword ratio over
+    * `tokens(lower(text))` re-tokenizes the LOWERED text besides
     * — here the token array is let-bound as a one-element-transform lambda
     * argument (evaluated once, references are cheap reads) and the lowered
     * tokens come from `transform(toks, lower)` (lower commutes with
@@ -69,8 +54,8 @@ object TextFunctions {
     * used to filter web corpora (C4/Gopher-style rules, public literature).
     *
     * The token arrays are LET-BOUND via a one-element transform() so each
-    * tokenization runs once per row: composing tokenCount +
-    * distinctTokenRatio + stopwordRatio as separate Columns repeated the
+    * tokenization runs once per row: composing the token count, distinct
+    * ratio and stopword ratio as separate Columns repeated the
     * split() subtree ~7× (conditional subtrees escape subexpression
     * elimination — same pathology as the old langId). Lambda-bound `tk`
     * references are field reads on a materialized struct: free. */
@@ -132,18 +117,4 @@ object TextFunctions {
     * text — exact-dup detection robust to formatting. */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Polynomial rolling hash of the normalized text (base 31 mod 1e9+7 —
-    * modular, not wrapping, because Spark 4 runs ANSI mode by default and
-    * errors on Long overflow) — an order-sensitive document fingerprint
-    * that, unlike md5, can be computed incrementally over chunks. Pure
-    * expression: aggregate over the character array. */
-  def rollingHash(text: Column): Column = {
-    val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
-    val chars = split(norm, "")
-    aggregate(
-      filter(chars, c => length(c) > 0),
-      lit(0L),
-      (acc, c) => pmod(acc * lit(31L) + ascii(c).cast("long"), lit(1000000007L)))
-  }
 }

@@ -37,17 +37,12 @@ object TimeBuckets {
   def epochIdx(ts: Column, stepSeconds: Long): Column =
     floor(unix_timestamp(ts.cast("timestamp")) / stepSeconds).cast("long")
 
-  /** Retention-window predicate: keep rows at/after anchor + k months —
-    * the reference's post-infection filter
-    * (/root/reference/scripts/sleepSD.R:216,226;
-    * /root/reference/scripts/functions/calcMetrics.R:58-66). Month addition
-    * is calendar-aware with end-of-month clamping (matches lubridate
-    * `%m+%`-style and DuckDB `+ INTERVAL k MONTH`). */
-  def afterRetention(ts: Column, anchor: Column, months: Int): Column =
-    afterRetentionInterval(ts, anchor, s"$months MONTH")
-
-  /** Generalized retention predicate with an arbitrary SQL interval literal
-    * (e.g. "14 DAY", "3 MONTH"). */
+  /** Retention-window predicate: keep rows at/after anchor + `interval`,
+    * a SQL interval literal (e.g. "14 DAY", "3 MONTH") — the reference's
+    * post-infection filter (scripts/sleepSD.R:216,226;
+    * scripts/functions/calcMetrics.R:58-66). Month
+    * addition is calendar-aware with end-of-month clamping (matches
+    * lubridate `%m+%`-style and DuckDB `+ INTERVAL k MONTH`). */
   def afterRetentionInterval(ts: Column, anchor: Column, interval: String): Column =
     ts >= anchor + expr(s"INTERVAL $interval")
 }

@@ -74,8 +74,9 @@ object CheckpointedRollup {
     /** Scan several days as ONE relation (one Spark job for a whole batch
       * of day units — see runUnits batching). */
     def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame
-    /** Lineage id recorded in each marker (source snapshot id or 0). */
-    def lineageId: Long
+    /** Lineage id recorded in a day's marker: the IceTable snapshot id
+      * the day was built from, or 0 when unknown. */
+    def lineageId(dayUs: Long): Long
   }
 
   /** DaySource over an IceTable, pinned to the snapshot that is current
@@ -104,16 +105,20 @@ object CheckpointedRollup {
         .reduce(_ || _)
       table.scanFiles(spark, files, daysUs.min, daysUs.max + DayUs - 1).where(inDay)
     }
-    def lineageId: Long = snap.map(_.id).getOrElse(0L)
+    def lineageId(dayUs: Long): Long = snap.map(_.id).getOrElse(0L)
   }
 
   /** DaySource over a previous run's day-dir output: days come from the
     * markers, and each day's fingerprint CHAINS the upstream marker's
     * source fingerprint with its row/byte metrics — so rebuilding a day
-    * upstream changes this fingerprint and invalidates it downstream. */
+    * upstream changes this fingerprint and invalidates it downstream. A
+    * day's lineage id is the upstream marker's `source_snapshot_id`, kept
+    * from the read its fingerprint makes, so the raw snapshot that built a
+    * day reaches every tier above it. */
   final class DayDirSource(spark: SparkSession, dir: String) extends DaySource {
     private val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val meta = new MetaFiles(fs)
+    private val lineage = scala.collection.concurrent.TrieMap.empty[Long, Long]
     def pendingDays: Seq[Long] = {
       val ck = new Path(dir, "_checkpoints")
       if (!fs.exists(ck)) Nil
@@ -125,11 +130,12 @@ object CheckpointedRollup {
     def dayFingerprint(dayUs: Long): Long =
       meta.read(markerPath(dir, dayUs)).map { json =>
         val n = mapper.readTree(json)
+        lineage.put(dayUs, n.path("source_snapshot_id").asLong(0L))
         ((n.get("source_files_fp").asLong * 31 + n.get("rows").asLong) * 31 + n.get("bytes").asLong)
       }.getOrElse(0L)
     def scanDays(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
       Parquet.read(sparkS, daysUs.map(d => s"$dir/day=$d"): _*)
-    def lineageId: Long = 0L
+    def lineageId(dayUs: Long): Long = lineage.getOrElse(dayUs, 0L)
   }
 
   private def markerPath(outDir: String, dayUs: Long) =
@@ -225,7 +231,6 @@ object CheckpointedRollup {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(outDir).getFileSystem(conf)
     val meta = new MetaFiles(fs)
-    val snapId = source.lineageId
     fs.mkdirs(new Path(outDir, "_checkpoints"))
     val done = new AtomicInteger(0)
 
@@ -253,7 +258,7 @@ object CheckpointedRollup {
       // and the byte total (getContentSummary re-walked the tree per day)
       val bytes = status.iterator.map(_.getLen).sum
       val node = mapper.createObjectNode()
-      node.put("source_snapshot_id", snapId)
+      node.put("source_snapshot_id", source.lineageId(dayUs))
       node.put("source_files_fp", fp)
       node.put("bucket_lo_us", dayUs)
       node.put("bucket_hi_us", dayUs + DayUs - 1)

@@ -31,32 +31,6 @@ object Dedup {
     df.groupBy(TextFunctions.fingerprint(text).as("fp"))
       .agg(min(id).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** Character n-gram (shingle) set, distinct. Short texts (<n chars) get
-    * the whole string as a single shingle. */
-  def ngramSet(text: Column, n: Int): Column =
-    when(length(text) < n, array(text)).otherwise(
-      array_distinct(transform(sequence(lit(1), length(text) - (n - 1)), i => text.substr(i, lit(n)))))
-
-  /** Word n-gram (w-shingle) set, distinct — Broder-style document
-    * shingling. Far more discriminative than character n-grams on natural
-    * text (and on repetitive corpora: random-pair char-3-gram Jaccard here
-    * is ~0.45, word-3-gram ~0.001), which keeps LSH buckets small. Texts
-    * shorter than n tokens shingle to the whole normalized text. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = TextFunctions.tokens(lower(text))
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n))))))
-  }
-
-  /** Jaccard similarity of two shingle sets. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni > 0, inter / uni).otherwise(lit(0.0))
-  }
-
   /** MinHash signature: k independent permutations approximated by seeded
     * xxhash64; sig[i] = min over shingles of xxhash64(shingle, i).
     *
@@ -136,6 +110,11 @@ object Dedup {
     * a block self-join with the size-ratio bound in the join condition and
     * the codegen'd merge-walk verify (SetOps.sortedJaccard) in the output.
     *
+    * Takes SORTED distinct 64-bit shingle hashes (array&lt;long&gt;, e.g.
+    * `TextHashes.charShingleHashes` / `wordShingleHashes`) — no per-row
+    * string-shingle materialization, which for multi-KB documents
+    * allocates thousands of short strings per row before any join work.
+    *
     * Blocks larger than `maxBlockSize` are DROPPED (a B-member block yields
     * B² candidate pairs — the standard hot-block guard; same contract as
     * minhashLshPairs.maxBucketSize). Choose the cap above the expected
@@ -143,22 +122,6 @@ object Dedup {
     * to disable. When blocking keys are unavailable or blocks can grow
     * unboundedly, prefer `prefixJaccardPairs` (exact, no key needed, no B²
     * term). Output: (blockKeys..., id_a, id_b, jaccard). */
-  def blockedJaccardPairs(
-      docs: DataFrame,
-      id: Column,
-      shingles: Column,
-      threshold: Double,
-      blockKeys: Seq[(String, Column)],
-      maxBlockSize: Int = 1024): DataFrame =
-    blockedJaccardPairsHashed(docs, id,
-      sort_array(transform(shingles, s => xxhash64(s))), threshold, blockKeys, maxBlockSize)
-
-  /** [[blockedJaccardPairs]] taking SORTED 64-bit shingle hashes directly
-    * (array&lt;long&gt;, e.g. `TextHashes.charShingleHashes` /
-    * `wordShingleHashes`) — skips the per-row string-shingle
-    * materialization, which for multi-KB documents allocates thousands of
-    * short strings per row before any join work and measured as the
-    * dominant cost of the blocked-Jaccard pipeline. */
   def blockedJaccardPairsHashed(
       docs: DataFrame,
       id: Column,
@@ -167,9 +130,8 @@ object Dedup {
       blockKeys: Seq[(String, Column)],
       maxBlockSize: Int = 1024): DataFrame = {
     val keyNames = blockKeys.map(_._1)
-    val hashed = shingleHashes
     val base = docs.select(
-      (id.as("id") +: hashed.as("sh") +: blockKeys.map { case (n, c) => c.as(n) }): _*)
+      (id.as("id") +: shingleHashes.as("sh") +: blockKeys.map { case (n, c) => c.as(n) }): _*)
       .withColumn("n", size(col("sh")))
     // block-size guard: per-block count aggregate, applied as a left-semi
     // join with NO broadcast hint — distinct block keys are unbounded at
@@ -228,7 +190,8 @@ object Dedup {
     * array_intersect/array_union pair is ~5× slower on the verify join).
     *
     * `docs` must have one row per id; `shingles` must be DISTINCT elements
-    * (array_distinct — ngramSet/wordShingles guarantee it). `blockKeys`
+    * (array_distinct, or the sorted distinct hashes of
+    * `TextHashes.wordShingleHashes`). `blockKeys`
     * optionally restricts pairs to equal key values (e.g. same source) and
     * carries those columns into the output.
     * Output: (blockKeys..., id_a, id_b, jaccard). */
@@ -337,13 +300,5 @@ object Dedup {
       .join(fp.select(col("id").as("id_b"), col("fp").as("fp_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), hamming64(col("fp_a"), col("fp_b")).as("hamming"))
       .where(col("hamming") <= maxHamming)
-  }
-
-  /** Embedding-cosine similarity (Array[Float]/Array[Double] columns). */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (s, x) => s + x)
-    val na = sqrt(aggregate(a, lit(0.0), (s, x) => s + x.cast("double") * x.cast("double")))
-    val nb = sqrt(aggregate(b, lit(0.0), (s, x) => s + x.cast("double") * x.cast("double")))
-    when(na > 0 && nb > 0, dot / (na * nb)).otherwise(lit(0.0))
   }
 }

@@ -84,22 +84,4 @@ object Episodes {
           - min(when(from, unix_micros(ts.cast("timestamp"))))).as("latency_us"))
       .withColumn("latency_secs", col("latency_us") / 1e6)
   }
-
-  /** Episode (maximal same-value run) identification: assigns a run id per
-    * consecutive stretch of equal `value` — the building block for
-    * run-length semantics (no reference analog needed it explicitly, but
-    * NumAwakenings/SRI derive from it). Classic gaps-and-islands:
-    * run_id = row_number − row_number within value partition. */
-  def withRunId(
-      df: DataFrame,
-      parts: Seq[Column],
-      order: Seq[Column],
-      value: Column): DataFrame = {
-    val all = w(parts, order)
-    val byVal = w(parts :+ value, order)
-    df.withColumn("_rn_all", row_number().over(all))
-      .withColumn("_rn_val", row_number().over(byVal))
-      .withColumn("run_key", col("_rn_all") - col("_rn_val"))
-      .drop("_rn_all", "_rn_val")
-  }
 }

@@ -72,45 +72,33 @@ object GapFill {
   }
 
   private val wAsc = Window.partitionBy(col("conv_id")).orderBy(col("bucket_start").asc)
-  private val wDesc = Window.partitionBy(col("conv_id")).orderBy(col("bucket_start").desc)
 
   /** Last-observation-carried-forward over the grid. */
   def locf(c: Column): Column = last(c, ignoreNulls = true)
     .over(wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
-  /** Next-observation-carried-backward (for interpolation endpoints):
-    * first non-null at-or-after the current row = running `last` over the
-    * DESCENDING order. The tempting single-sort alternative — a FOLLOWING
-    * frame over the ascending order — is O(partition²): Spark's
-    * UnboundedFollowing frame re-evaluates the aggregate from scratch for
-    * every row (only PRECEDING-anchored frames grow incrementally), which
-    * measured 46s vs ~2s for the interp query at bench scale once the
-    * bench action stopped letting Catalyst prune the windows. Two O(n log
-    * n) sorts beat one O(n²) frame at every scale that matters. */
-  def nocb(c: Column): Column = last(c, ignoreNulls = true)
-    .over(wDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
   /** Linear interpolation of `valueCol` across null runs on the dense grid.
     * Uses bucket epoch seconds as the x axis; endpoints (leading/trailing
     * null runs) fall back to LOCF/NOCB of the nearest value.
-    * Delegates to [[interpolatedFrom]] with the grid itself as the
-    * observation source. */
-  def interpolated(grid: DataFrame, valueCol: String): DataFrame =
-    interpolatedFrom(grid, valueCol, grid)
-
-  /** [[interpolated]] with the NON-NULL observations supplied as a separate
-    * (usually far cheaper) relation `obs` — e.g. the pre-densify tier the
-    * grid was built from. Replaces the second, DESCENDING sort pass the
-    * NOCB endpoints needed (two full per-entity sorts of the dense grid)
-    * with one ascending pass plus an equi-join against the run-indexed
-    * observations: the ascending pass also counts non-null values seen
-    * (`g`), the k-th non-null row of `obs` carries run index k, and the
-    * next observation after any grid row is exactly run index g+1 — an
+    *
+    * The NON-NULL observations come as a separate (usually far cheaper)
+    * relation `obs` — e.g. the pre-densify tier the grid was built from,
+    * or the grid itself. That replaces the second, DESCENDING sort pass
+    * the NOCB endpoints would need (two full per-entity sorts of the dense
+    * grid) with one ascending pass plus an equi-join against the
+    * run-indexed observations: the ascending pass also counts non-null
+    * values seen (`g`), the k-th non-null row of `obs` carries run index
+    * k, and the next observation after any grid row is exactly run index
+    * g+1 — an
     * equi-join on (conv_id, g+1) over a tier-sized table (auto-broadcast
     * at small scale; at scale an equi-join of grid vs tier, still strictly
     * cheaper than re-sorting the grid descending). Result-identical to the
-    * two-sort form (pinned by RollupSpec parity spec): the lerp consumes
-    * the same prev/next (value, x) doubles through the same expression.
+    * two-sort form (test oracle `Oracles.interpolatedTwoSort`, pinned by
+    * RollupSpec): the lerp consumes the same prev/next (value, x) doubles
+    * through the same expression. The tempting NOCB over a FOLLOWING
+    * frame of the ascending order is O(partition²): Spark re-evaluates an
+    * UnboundedFollowing frame from scratch for every row (46 s against
+    * ~2 s for the interp query at bench scale; PlanSpec guards it).
     *
     * `obs` must contain exactly the grid's non-null `valueCol` rows as
     * (conv_id, bucket_start, valueCol) — true by construction when `obs`
@@ -147,25 +135,5 @@ object GapFill {
           .when(nextX === prevX, prevV)
           .otherwise(lerp))
       .drop("_pv", "_px", "_g", "_fc", "_gn", "_nv", "_nx")
-  }
-
-  /** The literal two-sort (ascending LOCF + descending NOCB) reference
-    * form of [[interpolated]] — kept as the executable specification the
-    * join form is parity-pinned against (RollupSpec). */
-  private[graft] def interpolatedTwoSort(grid: DataFrame, valueCol: String): DataFrame = {
-    val x = unix_timestamp(col("bucket_start")).cast("double")
-    val v = col(valueCol)
-    val prevV = locf(v)
-    val nextV = nocb(v)
-    val prevX = locf(when(v.isNotNull, x))
-    val nextX = nocb(when(v.isNotNull, x))
-    val lerp = prevV + (nextV - prevV) * (x - prevX) / (nextX - prevX)
-    grid.withColumn(
-      s"${valueCol}_interp",
-      when(v.isNotNull, v)
-        .when(prevV.isNull, nextV)          // leading gap
-        .when(nextV.isNull, prevV)          // trailing gap
-        .when(nextX === prevX, prevV)
-        .otherwise(lerp))
   }
 }

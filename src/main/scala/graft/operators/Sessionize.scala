@@ -7,16 +7,13 @@ import org.apache.spark.sql.functions._
   * times are within `gap` of the previous row belong to one session — the
   * transcripts-native episode operator (a "conversation sitting"), built on
   * Spark's session_window (a built-in, per the compose-first contract: no
-  * custom state needed; the same expression works in batch AND Structured
-  * Streaming, where it becomes merging session state behind a watermark).
+  * custom state needed).
   *
   * The reference has no session operator (its episodes arrive pre-cut as
   * LogIds, /root/reference/scripts/daily-measures.R:92-125); this supplies
   * the cutting step for raw event streams.
   *
   * Scale: one shuffle on the entity key; session merging is per-key local.
-  * Mega-entities bound state by their own event count within the gap
-  * horizon, not by history (closed sessions emit and evict in streaming).
   */
 object Sessionize {
 
@@ -36,24 +33,6 @@ object Sessionize {
     val all = base ++ aggs
     df.groupBy(entity.as("conv_id"), session_window(ts, gap).as("w"))
       .agg(all.head, all.tail: _*)
-      .drop("w")
-  }
-
-  /** Structured-Streaming form: the SAME session_window expression behind a
-    * watermark — session state merges as events arrive and a session emits
-    * (append mode) once the watermark passes its end, which also evicts its
-    * state (bounded by open sessions, not history). */
-  def sessionsStream(
-      stream: DataFrame,
-      entity: Column,
-      tsCol: String,
-      gap: String,
-      lateness: String): DataFrame = {
-    val ts = col(tsCol)
-    stream
-      .withWatermark(tsCol, lateness)
-      .groupBy(entity.as("conv_id"), session_window(ts, gap).as("w"))
-      .agg(count(lit(1)).as("n_events"), min(ts).as("session_start"), max(ts).as("last_ts"))
       .drop("w")
   }
 }

@@ -23,7 +23,8 @@ object Similarity {
 
   /** Cosine similarity between an embedding column and a literal query
     * vector (broadcast as a column literal). Uses the native codegen'd
-    * CosineSim expression (bit-identical to Dedup.cosine — CosineSimSpec). */
+    * CosineSim expression (bit-identical to the composed built-in form,
+    * test oracle `Oracles.cosine` — CosineSimSpec). */
   def cosineToQuery(emb: Column, query: Seq[Float]): Column =
     graft.plans.CosineSim.cosineSim(emb, typedlit(query))
 
@@ -37,35 +38,15 @@ object Similarity {
     * a hash mapped to [-1, 1). Computed ONCE on the driver with the exact
     * Catalyst xxhash64 (seed 42, same type layout as the former column
     * expression), so signatures are bit-identical to the hash-per-element
-    * form while the per-row work becomes pure multiply-add. */
+    * form while the per-row work becomes pure multiply-add. The packed
+    * signature's bit parity with the readable HOF form (test oracle
+    * `Oracles.rhpSignature`) is pinned by DedupSpec. */
   private[graft] def planeComponent(p: Int, d: Int): Double = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     val h = XxHash64(Seq(Literal("hp"), Literal(p), Literal(d)), 42L)
       .eval(null).asInstanceOf[Long]
     val m = ((h % 2000001L) + 2000001L) % 2000001L // pmod
     (m - 1000000L).toDouble / 1e6
-  }
-
-  /** The nPlanes × dims hyperplane matrix as a literal column — broadcast
-    * with the plan, never recomputed per row (the hash-per-(row, plane,
-    * dim) form measured ~7.7M driver-seeded hashes per 5k-vector query). */
-  def planeMatrix(nPlanes: Int, dims: Int): Column =
-    typedlit((0 until nPlanes).map(p => (0 until dims).map(d => planeComponent(p, d))))
-
-  /** `nPlanes`-bit random-hyperplane signature of an embedding: bit p =
-    * sign(dot(plane_p, v)). Returned as array<int> of 0/1. `dims` must be
-    * the embedding length (trailing dims beyond the matrix are not used).
-    * This HOF composition is the READABLE REFERENCE form; the production
-    * path (`lshTopK`) uses the native `RhpSigPacked`, whose bit-parity
-    * with this form is pinned by spec. */
-  def rhpSignature(emb: Column, nPlanes: Int, dims: Int): Column = {
-    val planes = planeMatrix(nPlanes, dims)
-    transform(sequence(lit(0), lit(nPlanes - 1)), p => {
-      val dot = aggregate(
-        zip_with(emb, element_at(planes, p + 1), (x, w) => x.cast("double") * w),
-        lit(0.0), (s, x) => s + x)
-      when(dot >= 0, 1).otherwise(0)
-    })
   }
 
   /** LSH-bucketed ANN: top-k neighbours per query id, candidates limited to
@@ -83,8 +64,7 @@ object Similarity {
     *
     * `nPlanes` must be in 1..63: the production signature is packed into a
     * single long (RhpSigPacked) — one sign bit per plane plus the sign bit
-    * of the long itself kept clear. Larger signatures would need the
-    * array-valued `rhpSignature` form. */
+    * of the long itself kept clear. */
   def lshTopK(
       df: DataFrame,
       id: Column,

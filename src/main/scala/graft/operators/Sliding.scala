@@ -23,40 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object Sliding {
 
-  /** Add sliding stats over the previous `width` buckets (inclusive).
-    * `stepSeconds` is the bucket stride (86400 for daily, 604800 weekly).
-    * Emits `<name>_mean/_sd/_n` per value column plus `window_complete`. */
-  def slidingStats(
-      tier: DataFrame,
-      entity: Column,
-      bucket: Column,
-      stepSeconds: Long,
-      width: Int,
-      values: Seq[(String, Column)],
-      requireComplete: Boolean = true): DataFrame = {
-    val idx = graft.functions.TimeBuckets.epochIdx(bucket, stepSeconds)
-    val base = tier.withColumn("_bidx", idx)
-    val wr = Window.partitionBy(entity).orderBy(col("_bidx"))
-      .rangeBetween(-(width - 1).toLong, 0L)
-    val withStats = values.foldLeft(base) { case (df, (name, c)) =>
-      df.withColumn(s"${name}_mean", avg(c).over(wr))
-        .withColumn(s"${name}_sd", stddev_samp(c).over(wr))
-        .withColumn(s"${name}_n", count(c).over(wr))
-    }
-    // buckets are unique per entity, so count==width ⇔ every bucket present
-    // (an endpoint-only check would wrongly pass windows with interior gaps)
-    val complete = count(lit(1)).over(wr) === width
-    val out = withStats.withColumn("window_complete", complete)
-    (if (requireComplete) out.where(col("window_complete")) else out).drop("_bidx")
-  }
-
-  /** Order-insensitive sliding stats over INTEGER-quantized values: the
-    * bit-stable-by-construction form of [[slidingStats]] for LongType value
-    * columns (e.g. micro-unit quantizations of a tier measure).
+  /** Sliding stats over the previous `width` buckets (inclusive) of
+    * INTEGER-quantized values (LongType value columns, e.g. micro-unit
+    * quantizations of a tier measure). `stepSeconds` is the bucket stride
+    * (86400 for daily, 604800 weekly). Only complete windows are kept.
     *
-    * `avg`/`stddev_samp` over windowed DOUBLES depend on the engine's
-    * summation order and stddev algorithm — different engines (or different
-    * versions of one engine) disagree in the last ulp, and the stddev's
+    * Order-insensitive by construction: `avg`/`stddev_samp` over windowed
+    * DOUBLES depend on the engine's summation order and stddev algorithm —
+    * different engines (or different versions of one engine) disagree in
+    * the last ulp, and the stddev's
     * cancellation amplifies that past any rounding that is still faithful.
     * Here the windowed sums Σx and Σx² are EXACT integer arithmetic
     * (order-insensitive in any engine), and the only floating-point ops are
@@ -80,8 +55,9 @@ object Sliding {
     * (bound: |x|·width < 2^63 — |x| ≤ ~3.5e17 at width 26).
     *
     * Emits `<name>_mean`/`<name>_sd` (double, in the quantized unit) and
-    * `<name>_n` per value column, plus `window_complete`. An equivalent
-    * oracle must spell the IDENTICAL op sequence, e.g. for width 3:
+    * `<name>_n` per value column, plus `window_complete` (true on every
+    * kept row). An equivalent oracle must spell the IDENTICAL op sequence,
+    * e.g. for width 3:
     * {{{
     *   CAST(sum(x) OVER w AS BIGINT)                        AS s,
     *   CAST(sum(CAST(x AS HUGEINT) * x) OVER w AS DOUBLE)   AS qd,
@@ -95,8 +71,7 @@ object Sliding {
       bucket: Column,
       stepSeconds: Long,
       width: Int,
-      values: Seq[(String, Column)],
-      requireComplete: Boolean = true): DataFrame = {
+      values: Seq[(String, Column)]): DataFrame = {
     require(width >= 2, s"width must be >= 2 for a sample sd, got $width")
     val idx = graft.functions.TimeBuckets.epochIdx(bucket, stepSeconds)
     val base = tier.withColumn("_bidx", idx)
@@ -117,8 +92,10 @@ object Sliding {
             sqrt(greatest((q - s * s / lit(nD)) / lit(nD - 1.0), lit(0.0)))))
         .withColumn(s"${name}_n", n)
     }
+    // buckets are unique per entity, so count==width ⇔ every bucket present
+    // (an endpoint-only check would wrongly pass windows with interior gaps)
     val complete = count(lit(1)).over(wr) === width
-    val out = withStats.withColumn("window_complete", complete)
-    (if (requireComplete) out.where(col("window_complete")) else out).drop("_bidx")
+    withStats.withColumn("window_complete", complete)
+      .where(col("window_complete")).drop("_bidx")
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SRI-style lag-agreement over a dense regular grid — the reference's
@@ -13,48 +12,21 @@ import org.apache.spark.sql.functions._
   * (/root/reference/scripts/sri.R:102-141).
   *
   * Two surfaces:
-  *  - `episodeGrid` — the faithful reference shape: (entity, start, end,
-  *    status) episodes densified to ticks with keep-last overlap dedup;
-  *  - `activityRegularity` — the transcripts instantiation: status = "any
-  *    turn in this tick", measuring day-over-day conversation regularity.
+  *  - `episodeSri` — the faithful reference shape: (entity, start, end,
+  *    status) episodes to ticks with keep-last overlap dedup;
+  *  - `activityRegularity` (and its per-bucket integer counts,
+  *    `activityRegularityBucketedCounts`) — the transcripts instantiation:
+  *    status = "any turn in this tick", measuring day-over-day
+  *    conversation regularity.
   *
-  * Scale: the grid explode is TWO-LEVEL — day chunks first, then ticks
-  * within a chunk (the reference's per-day grid shape, sri.R:47-54) — so the
-  * fan-out of any single Generate call is bounded by ticksPerDay, never by
-  * the whole entity span (a 3-year 30s-tick span would otherwise be one
-  * ~3.2M-element array in one task). Every stage shuffles on the same
-  * entity key, so Catalyst reuses one exchange across dedup/fill/lag;
-  * mega-entities are bounded by span × ticksPerDay, not by turn count (the
-  * grid is the same size however many raw turns fall in it).
+  * Scale: neither surface materializes the dense grid. A tick can disagree
+  * with its lag partner only where at least one side carries a non-fill
+  * status, so both count disagreements over the sparse support with a
+  * constant 2-fan explode (`lagDisagreements`): O(active ticks), not
+  * O(span/tick). The dense-grid form survives only as the test oracle
+  * both are pinned against.
   */
 object Sri {
-
-  /** Two-level dense tick grid: input (e, lo, hi) tick spans → one row per
-    * (e, tick) for every tick in [lo, hi]. Level 1 explodes day-sized chunk
-    * indices, level 2 the ticks within a chunk clipped to the span — so no
-    * single Generate materializes a whole span. Negative (pre-1970) ticks
-    * are handled: chunk indexing floor-divides, so a chunk always starts
-    * at/below `lo` (truncation would start above it and silently drop the
-    * ticks in between). */
-  private def denseTickGrid(span: DataFrame, tickSeconds: Int): DataFrame = {
-    val chunk = math.max(86400L / tickSeconds, 1L) // ≈ one day of ticks
-    span
-      .selectExpr("e", "lo", "hi",
-        s"explode(sequence(cast(floor(lo / $chunk.0D) as bigint), " +
-          s"cast(floor(hi / $chunk.0D) as bigint))) AS c")
-      .selectExpr("e",
-        s"explode(sequence(greatest(lo, c * $chunk), least(hi, c * $chunk + ${chunk - 1}))) AS tick")
-  }
-
-  /** Reference SRI score over a status series: 200·mean(agree)−100. */
-  private def score(statusOrdered: DataFrame, entity: Column, lagTicks: Int): DataFrame = {
-    val w = Window.partitionBy(entity).orderBy(col("tick"))
-    statusOrdered
-      .withColumn("_prev", lag(col("status"), lagTicks).over(w))
-      .where(col("_prev").isNotNull)
-      .groupBy(entity.as("conv_id"))
-      .agg((lit(200.0) * avg((col("status") === col("_prev")).cast("double")) - 100.0).as("sri"))
-  }
 
   /** Faithful reference pipeline over (entity, episode_start, episode_end,
     * status) episodes: explode to ticks, keep-last per tick (overlapping
@@ -72,10 +44,11 @@ object Sri {
     * difference between scanning activity and scanning time itself). The
     * keep-last dedup runs BEFORE the support filter, so a later source
     * overriding a tick to `fillStatus` removes it from the support exactly
-    * as the dense grid would. Result-identical to [[episodeSriDense]]
-    * (spec-pinned; the score's (T−D)/T arithmetic is exact-integer in
-    * double, so the forms agree bit-for-bit mod the documented 200·x−100
-    * association, absorbed by callers' 6-decimal rounding). */
+    * as the dense grid would. Result-identical to the dense-grid form
+    * (test oracle `Oracles.episodeSriDense`; the score's (T−D)/T
+    * arithmetic is exact-integer in double, so the forms agree bit-for-bit
+    * mod the documented 200·x−100 association, absorbed by callers'
+    * 6-decimal rounding). */
   def episodeSri(
       episodes: DataFrame,
       entity: Column,
@@ -160,7 +133,7 @@ object Sri {
     graft.functions.TimeBuckets.epochIdx(ts, tickSeconds)
 
   /** Episode ticks after keep-last overlap dedup (sri.R:27-39). */
-  private def dedupedEpisodeTicks(
+  private[graft] def dedupedEpisodeTicks(
       episodes: DataFrame,
       entity: Column,
       start: Column,
@@ -183,28 +156,6 @@ object Sri {
     ticks
       .groupBy(col("e"), col("tick"))
       .agg(max_by(col("st"), col("src")).as("st"))
-  }
-
-  /** The literal dense-grid reference form of [[episodeSri]] (materializes
-    * the per-entity tick grid, left-joins the deduped episodes, lags). Kept
-    * as the executable specification the sparse form is pinned against —
-    * use `episodeSri` in production. */
-  private[graft] def episodeSriDense(
-      episodes: DataFrame,
-      entity: Column,
-      start: Column,
-      end: Column,
-      status: Column,
-      srcOrder: Column,
-      tickSeconds: Int,
-      lagTicks: Int,
-      fillStatus: Int = 0): DataFrame = {
-    val deduped = dedupedEpisodeTicks(episodes, entity, start, end, status, srcOrder, tickSeconds)
-    val span = deduped.groupBy(col("e")).agg(min("tick").as("lo"), max("tick").as("hi"))
-    val filled = denseTickGrid(span, tickSeconds)
-      .join(deduped, Seq("e", "tick"), "left")
-      .withColumn("status", coalesce(col("st"), lit(fillStatus)))
-    score(filled.select(col("e"), col("tick"), col("status")), col("e"), lagTicks)
   }
 
   /** Active tick set + span per entity (shared by the sparse SRI forms).
@@ -249,29 +200,15 @@ object Sri {
       fillStatus = 0, bucketOf = bucketOf)
   }
 
-  /** Bucketed variant of activityRegularity (e.g. daily/weekly SRI series):
-    * per (entity, bucket-of-tick) score over the compared ticks in that
-    * bucket. Sparse form — buckets with zero disagreements still emit
-    * (sri=100) via an arithmetic per-bucket compared-tick count. */
-  def activityRegularityBucketed(
-      turns: DataFrame,
-      entity: Column,
-      ts: Column,
-      tickSeconds: Int,
-      lagTicks: Int,
-      bucketSeconds: Long): DataFrame =
-    activityRegularityBucketedCounts(turns, entity, ts, tickSeconds, lagTicks, bucketSeconds)
-      .select(col("conv_id"), col("bucket_start"),
-        (lit(200.0) * (col("cmp_ticks") - col("disagree")) / col("cmp_ticks") - 100.0).as("sri"))
-
-  /** [[activityRegularityBucketed]] with the underlying EXACT INTEGER
-    * counts exposed instead of the derived float score: per (entity,
-    * bucket) the number of compared ticks (`cmp_ticks`) and of lag
-    * disagreements (`disagree`). Callers that need bit-stable downstream
-    * arithmetic (integer-domain sliding stats, cross-engine oracles)
-    * derive their own score from these integers — any fixed FP op sequence
-    * over them is deterministic in every engine, unlike aggregate-computed
-    * floats. */
+  /** Bucketed activity regularity (e.g. a daily SRI series) as EXACT
+    * INTEGER counts: per (entity, bucket-of-tick) the number of compared
+    * ticks (`cmp_ticks`) and of lag disagreements (`disagree`). Buckets
+    * with zero disagreements still emit, via an arithmetic per-bucket
+    * compared-tick count. Callers derive their own score from these
+    * integers (200·(cmp_ticks − disagree)/cmp_ticks − 100, or an integer
+    * micro-unit form for bit-stable sliding stats) — any fixed FP op
+    * sequence over them is deterministic in every engine, unlike
+    * aggregate-computed floats. */
   def activityRegularityBucketedCounts(
       turns: DataFrame,
       entity: Column,

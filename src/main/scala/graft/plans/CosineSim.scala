@@ -10,18 +10,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: cosine similarity of two float/double array
   * columns, with whole-stage codegen (`doGenCode`) — the hot-path form of
-  * Dedup.cosine for 10^9-vector similarity scans.
+  * the composed zip_with/aggregate cosine for 10^9-vector similarity
+  * scans.
   *
   * Why an Expression instead of the zip_with/aggregate composition: the
   * built-in higher-order functions allocate a lambda frame per element and
   * box Float→Double per element; this expression compiles to a tight
   * primitive loop over the two ArrayData buffers (one pass, three
   * accumulators, no allocation). Same preference order the build contract
-  * gives: compose built-ins where semantics allow (Dedup.cosine remains the
-  * reference implementation and the oracle), drop to a custom Expression
-  * where the scan is hot.
+  * gives: compose built-ins where semantics allow (the composed form
+  * remains the reference implementation, as the test oracle
+  * `Oracles.cosine`), drop to a custom Expression where the scan is hot.
   *
-  * Semantics match Dedup.cosine exactly: null if either side is null,
+  * Semantics match the composed form exactly: null if either side is null,
   * 0.0 if either norm is zero, lengths validated equal at runtime.
   */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {

@@ -15,11 +15,12 @@ import graft.functions.Gorilla
   * (/root/reference/scripts/functions/sri.R:27-54 seq+unnest analog) for
   * compressed tier replay.
   *
-  * Why a Generator instead of the decode UDF + explode: the UDF path
-  * converts Array[Byte] to external Scala, materializes a full
-  * Seq[GPoint], converts every element back to Catalyst, THEN explodes;
-  * this Generator decodes once and streams InternalRows directly — no
-  * external conversion, no intermediate array-of-structs allocation.
+  * Why a Generator instead of a decode UDF + explode: a UDF would convert
+  * Array[Byte] to external Scala, materialize a full sequence of points,
+  * convert every element back to Catalyst, THEN explode; this Generator
+  * decodes once and streams InternalRows directly — no external
+  * conversion, no intermediate array-of-structs allocation. It is the one
+  * way to read tier values back (also as SQL `gorilla_explode`).
   * CodegenFallback is fine here: generators sit at the decode EDGE, never
   * inside the hot rollup path (SURVEY.md §4 custom-work inventory). */
 case class GorillaExplode(child: Expression)

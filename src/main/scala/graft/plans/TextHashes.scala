@@ -107,10 +107,11 @@ object TextHashes {
     * in ONE pass: lowercase, trim, whitespace-split, join each n-window
     * with single spaces, hash, sort, dedupe.
     *
-    * Semantics are exactly `sort_array(transform(wordShingles(text, n),
-    * s => xxhash64(s)))` (Dedup.wordShingles: texts shorter than n tokens
-    * shingle to the whole normalized text; empty text → [xxhash64("")]) —
-    * except duplicates are dropped on the HASH rather than the string,
+    * Semantics are exactly `sort_array(transform(shingles, s =>
+    * xxhash64(s)))` over the distinct word n-grams of
+    * `tokens(lower(text))`, each joined with single spaces (texts shorter
+    * than n tokens shingle to the whole normalized text; empty text →
+    * [xxhash64("")]) — except duplicates are dropped on the HASH rather than the string,
     * indistinguishable below a 64-bit collision within one document. The
     * composed form re-evaluates the tokenizer inside every HOF lambda
     * iteration (no CSE in lambdas — measured as the dominant cost of the
@@ -147,8 +148,9 @@ object TextHashes {
     * before any join work, and HOF lambdas defeat CSE).
     *
     * Semantics are exactly `sort_array(transform(ngramSet(lower(text), n),
-    * s => xxhash64(s)))` (Dedup.ngramSet: texts shorter than n chars
-    * shingle to the whole lowered string — no trim, no tokenization),
+    * s => xxhash64(s)))` (the test oracle `Oracles.ngramSet`: texts
+    * shorter than n chars shingle to the whole lowered string — no trim,
+    * no tokenization),
     * except duplicates are dropped on the HASH rather than the string —
     * indistinguishable below a 64-bit collision within one document
     * (pinned by DedupSpec's native-vs-composed parity check). Zero
@@ -170,77 +172,6 @@ object TextHashes {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, t =>
         s"${ev.value} = graft.plans.TextHashes.charShingleHashesCompute($t, $n);")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** 64-bit SimHash of a token array (Charikar 2002): per-bit majority vote
-    * over token hashes — one string hash per token, bit votes from its 64
-    * bits, packed with the same `votes[i] > 0 → bit i` rule as the fold
-    * form. Empty input → 0L. */
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
-
-    override def dataType: DataType = LongType
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"simhash64 expects array<string>, got $t")
-    }
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val votes = new Array[Long](64)
-      var j = 0
-      val n = arr.numElements()
-      while (j < n) {
-        if (!arr.isNullAt(j)) {
-          val h = hashString(arr.getUTF8String(j))
-          var i = 0
-          while (i < 64) {
-            votes(i) += (((h >> i) & 1L) * 2L - 1L) // bit → +1 / -1
-            i += 1
-          }
-        }
-        j += 1
-      }
-      var fp = 0L
-      var i = 0
-      while (i < 64) {
-        if (votes(i) > 0L) fp |= (1L << i)
-        i += 1
-      }
-      fp
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val votes = ctx.addMutableState("long[]", "shVotes", v => s"$v = new long[64];")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val h = ctx.freshName("h")
-        val fp = ctx.freshName("fp")
-        s"""
-           |java.util.Arrays.fill($votes, 0L);
-           |final int $n = $a.numElements();
-           |for (int $j = 0; $j < $n; $j++) {
-           |  if (!$a.isNullAt($j)) {
-           |    final long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-           |      .hashUTF8String($a.getUTF8String($j), ${Seed}L);
-           |    for (int $i = 0; $i < 64; $i++) {
-           |      $votes[$i] += ((($h >> $i) & 1L) * 2L - 1L);
-           |    }
-           |  }
-           |}
-           |long $fp = 0L;
-           |for (int $i = 0; $i < 64; $i++) {
-           |  if ($votes[$i] > 0L) $fp |= (1L << $i);
-           |}
-           |${ev.value} = $fp;
-         """.stripMargin
-      })
-    }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -287,9 +218,11 @@ object TextHashes {
     new GenericArrayData(java.util.Arrays.copyOf(hashes, uniq))
   }
 
-  /** text → 64-bit SimHash in ONE pass — the tokenizing sibling of
-    * [[SimHash64Expr]]. The composed `simHash64(tokens(lower(text)))`
-    * materializes the token array (regex split, one UTF8String per token
+  /** text → 64-bit SimHash in ONE pass: per-bit majority vote over token
+    * hashes (Charikar 2002) — one string hash per token, bit votes from its
+    * 64 bits, `votes[i] > 0 → bit i`. The composed form over
+    * `tokens(lower(text))` (test oracle `Oracles.simHash64`) materializes
+    * the token array (regex split, one UTF8String per token
     * in an ArrayData) before the vote loop; here the lowered-trimmed
     * string's bytes are scanned directly for ASCII-whitespace runs (Java's
     * `\s` class is ASCII-only, and ASCII bytes never occur inside UTF-8
@@ -419,9 +352,6 @@ object TextHashes {
   /** Column surfaces. */
   def minHashSig(shingles: Column, k: Int): Column =
     Bridge.column(MinHashSig(Bridge.expression(shingles), k))
-
-  def simHash64(tokens: Column): Column =
-    Bridge.column(SimHash64Expr(Bridge.expression(tokens)))
 
   def simHashText(text: Column): Column =
     Bridge.column(SimHashText(Bridge.expression(text)))

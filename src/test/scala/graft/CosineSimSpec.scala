@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
 import graft.plans.CosineSim
 
 /** Native CosineSim expression: equivalence with the composed built-in
@@ -16,7 +15,7 @@ class CosineSimSpec extends SparkSpec {
     val both = emb.select(
       $"vec_id",
       CosineSim.cosineSim($"embedding", typedlit(q)).as("fast"),
-      Dedup.cosine($"embedding", typedlit(q)).as("ref"))
+      Oracles.cosine($"embedding", typedlit(q)).as("ref"))
     assert(both.where($"fast" =!= $"ref").count() == 0)
     assert(both.where($"fast".isNull =!= $"ref".isNull).count() == 0)
   }

@@ -35,7 +35,7 @@ class CsvSideTableSpec extends SparkSpec {
 
     val kept = rows
       .join(broadcast(anchors), Seq("conv_id"))
-      .where(TimeBuckets.afterRetention($"ts", $"anchor", 0))
+      .where(TimeBuckets.afterRetentionInterval($"ts", $"anchor", "0 MONTH"))
     assert(kept.select("v").as[Double].collect().toSet == Set(2.0, 3.0))
 
     // CSV sink round-trip (S4)

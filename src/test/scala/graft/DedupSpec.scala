@@ -31,10 +31,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram jaccard: near-dup scores high, unrelated scores low") {
-    val g = docs.select($"doc_id", Dedup.ngramSet(lower($"text"), 3).as("ng"))
+    val g = docs.select($"doc_id", Oracles.ngramSet(lower($"text"), 3).as("ng"))
     val pairs = g.as("a").join(g.as("b"), $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("ia"), $"b.doc_id".as("ib"),
-        Dedup.jaccard($"a.ng", $"b.ng").as("j"))
+        Oracles.jaccard($"a.ng", $"b.ng").as("j"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(pairs((0L, 1L)) == 1.0)
     assert(pairs((0L, 2L)) > 0.8)
@@ -50,11 +50,11 @@ class DedupSpec extends SparkSpec {
     }
     val all = docs.union(extra.toDF("doc_id", "text")).where(length($"text") > 0)
     val g = all.select($"doc_id",
-      transform(Dedup.ngramSet(lower($"text"), 3), sh => xxhash64(sh)).as("ng"))
+      transform(Oracles.ngramSet(lower($"text"), 3), sh => xxhash64(sh)).as("ng"))
     for (t <- Seq(0.5, 0.7, 0.9)) {
       val brute = g.as("a").join(g.as("b"), $"a.doc_id" < $"b.doc_id")
         .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
-          Dedup.jaccard($"a.ng", $"b.ng").as("j"))
+          Oracles.jaccard($"a.ng", $"b.ng").as("j"))
         .where($"j" >= t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val fast = Dedup.prefixJaccardPairs(g, $"doc_id", $"ng", t)
@@ -66,7 +66,7 @@ class DedupSpec extends SparkSpec {
     // block keys restrict pairs to equal keys
     val withSrc = all.withColumn("src", ($"doc_id" % 2).cast("int"))
       .select($"doc_id", $"src",
-        transform(Dedup.ngramSet(lower($"text"), 3), sh => xxhash64(sh)).as("ng"))
+        transform(Oracles.ngramSet(lower($"text"), 3), sh => xxhash64(sh)).as("ng"))
     val blocked = Dedup.prefixJaccardPairs(withSrc, $"doc_id", $"ng", 0.5,
       blockKeys = Seq("src" -> $"src")).collect()
     assert(blocked.nonEmpty)
@@ -82,19 +82,21 @@ class DedupSpec extends SparkSpec {
     }
     val all = docs.union(extra.toDF("doc_id", "text")).where(length($"text") > 0)
       .withColumn("src", ($"doc_id" % 2).cast("int"))
-    val g = all.select($"doc_id", $"src", Dedup.ngramSet(lower($"text"), 3).as("ng"))
+    val g = all.select($"doc_id", $"src", Oracles.ngramSet(lower($"text"), 3).as("ng"))
     val brute = g.as("a").join(g.as("b"),
       $"a.doc_id" < $"b.doc_id" && $"a.src" === $"b.src")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"), Dedup.jaccard($"a.ng", $"b.ng").as("j"))
+      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"), Oracles.jaccard($"a.ng", $"b.ng").as("j"))
       .where($"j" >= 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fast = Dedup.blockedJaccardPairs(all, $"doc_id", Dedup.ngramSet(lower($"text"), 3), 0.5,
+    // the string shingles hashed and sorted, as charShingleHashes emits them
+    val hashed = sort_array(transform(Oracles.ngramSet(lower($"text"), 3), s => xxhash64(s)))
+    val fast = Dedup.blockedJaccardPairsHashed(all, $"doc_id", hashed, 0.5,
       blockKeys = Seq("src" -> $"src"))
       .collect().map(r =>
         (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))).toSet
     assert(fast == brute && brute.nonEmpty)
     // cap: with maxBlockSize below the block population, blocks drop out
-    val capped = Dedup.blockedJaccardPairs(all, $"doc_id", Dedup.ngramSet(lower($"text"), 3), 0.5,
+    val capped = Dedup.blockedJaccardPairsHashed(all, $"doc_id", hashed, 0.5,
       blockKeys = Seq("src" -> $"src"), maxBlockSize = 2)
     assert(capped.count() == 0, "both blocks exceed the cap of 2 → no pairs")
   }
@@ -108,7 +110,7 @@ class DedupSpec extends SparkSpec {
       (22L, "日本語のテキストです 日本語")).toDF("doc_id", "text"))
     val rows = multi.select(
       graft.plans.TextHashes.charShingleHashes($"text", 3).as("nat"),
-      sort_array(transform(Dedup.ngramSet(lower($"text"), 3), s => xxhash64(s))).as("comp"))
+      sort_array(transform(Oracles.ngramSet(lower($"text"), 3), s => xxhash64(s))).as("comp"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
@@ -126,7 +128,7 @@ class DedupSpec extends SparkSpec {
         .select($"doc_id" + 1000, $"text").toDF("doc_id", "text"))
     val cmp = sample.select(
       graft.plans.TextHashes.simHashText($"text").as("one"),
-      graft.plans.TextHashes.simHash64(TextFunctions.tokens(lower($"text"))).as("two"))
+      Oracles.simHash64(TextFunctions.tokens(lower($"text"))).as("two"))
     assert(cmp.where($"one" =!= $"two").count() == 0)
   }
 
@@ -187,16 +189,9 @@ class DedupSpec extends SparkSpec {
 
   test("token count / quality handle empty text") {
     val r = docs.where($"doc_id" === 7)
-      .select(TextFunctions.tokenCount($"text"), TextFunctions.qualityScore($"text")).head()
+      .select(size(TextFunctions.tokens($"text")), TextFunctions.qualityScore($"text")).head()
     assert(r.getInt(0) == 0)
     assert(!r.isNullAt(1))
-  }
-
-  test("rollingHash is deterministic and whitespace-normalized") {
-    val h = docs.select($"doc_id", TextFunctions.rollingHash($"text").as("h"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(h(0L) == h(3L), "case/whitespace variants share the rolling hash")
-    assert(h(0L) != h(2L))
   }
 
   test("embedding cosine + brute-force top-k vs hand computation") {
@@ -218,7 +213,7 @@ class DedupSpec extends SparkSpec {
     val planes = Array.tabulate(nPlanes, dims)((p, d) => Similarity.planeComponent(p, d))
     val rows = emb.select(
       graft.plans.RhpSigPacked.rhpSigPacked($"embedding", planes).as("packed"),
-      Similarity.rhpSignature($"embedding", nPlanes, dims).as("bits")).collect()
+      Oracles.rhpSignature($"embedding", nPlanes, dims).as("bits")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val packed = r.getLong(0)

@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.MetricRegistry
-import graft.multimodal.Multimodal
 import graft.operators.{GapFill, Rollup}
 import graft.sources.TranscriptGen
 
-/** Metric registry, gap-fill interpolation, multimodal plumbing, streaming
-  * tier = batch tier. */
+/** Metric registry, gap-fill interpolation, streaming tier = batch tier. */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -38,14 +36,6 @@ class EngineSpec extends SparkSpec {
     assert(math.abs(if (m > 12) m - 24 else m) < 1e-9)
   }
 
-  test("concept-row unpivot produces (concept, nval_num) long rows") {
-    val df = Seq(("c1", 2.0)).toDF("k", "v")
-    val wide = MetricRegistry.summarize(df, Seq($"k"), Seq("v" -> $"v"), Seq("mean", "count"))
-    val long = MetricRegistry.toConceptRows(wide, Seq("k"), "summary:daily:")
-    val got = long.collect().map(r => r.getAs[String]("concept") -> r.getAs[Double]("nval_num")).toMap
-    assert(got == Map("summary:daily:v_mean" -> 2.0, "summary:daily:v_count" -> 1.0))
-  }
-
   test("gap-fill linear interpolation: interior lerp, edge LOCF/NOCB") {
     val tier = Seq(
       ("c1", "2025-01-01 00:00:00", Some(10.0)),
@@ -55,22 +45,9 @@ class EngineSpec extends SparkSpec {
       .toDF("conv_id", "tss", "m")
       .select($"conv_id", to_timestamp($"tss").as("bucket_start"),
         $"m".cast("double").as("m"), lit(1L).as("n_rows"))
-    val got = GapFill.interpolated(tier, "m")
+    val got = GapFill.interpolatedFrom(tier, "m", tier)
       .orderBy("bucket_start").select("m_interp").as[Double].collect()
     assert(got.toSeq == Seq(10.0, 20.0, 30.0, 40.0))
-  }
-
-  test("multimodal: features are deterministic, frames bounded, bytes pruned from metadata scan") {
-    val media = Multimodal.synthMedia(spark, 200L).cache()
-    val f1 = Multimodal.extractFeatures(media).orderBy("media_id").collect()
-    val f2 = Multimodal.extractFeatures(media).orderBy("media_id").collect()
-    assert(f1.map(_.feature.toSeq).toSeq == f2.map(_.feature.toSeq).toSeq)
-    assert(f1.forall(_.feature.length == 16))
-    val frames = Multimodal.sampleFrames(media, everyMs = 10000L)
-    val perMedia = frames.groupBy("media_id").count().agg(max("count")).head().getLong(0)
-    assert(perMedia <= 6, "frame fan-out bounded by duration/everyMs")
-    val stats = Multimodal.metadataStats(media)
-    assert(stats.count() == 3)
   }
 
   test("streaming writes into the shared tier IceTable (foreachBatch append snapshots)") {
@@ -119,41 +96,6 @@ class EngineSpec extends SparkSpec {
       val b = batchMap((r.getString(0), r.get(1)))
       assert(b.getLong(2) == r.getLong(2) && b.getDouble(3) == r.getDouble(3))
     }
-  }
-
-  test("streaming dedup: cross-micro-batch duplicates dropped within the watermark horizon") {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamDedup
-    // two parquet FILES = two micro-batches (maxFilesPerTrigger=1), each
-    // carrying one copy of every row — duplicate suppression must span
-    // batches through the keyed state, not just within one batch
-    val rows = Seq(
-      (1L, "2025-01-01 10:00:00", "hello world"),
-      (2L, "2025-01-01 10:05:00", "Hello   WORLD"), // same normalized content, different key
-      (3L, "2025-01-01 10:10:00", "something else"))
-      .toDF("conv_id", "ts", "text")
-      .select($"conv_id", to_timestamp($"ts").as("ts"), $"text")
-    val dir = java.nio.file.Files.createTempDirectory("stream-dedup").toString
-    rows.coalesce(1).write.parquet(s"$dir/f1")
-    rows.coalesce(1).write.parquet(s"$dir/f2") // exact replay of every row
-    val schema = rows.schema
-    def run(name: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-      val st = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/f*")
-      val q = f(st).writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow()).format("memory").queryName(name).start()
-      q.processAllAvailable(); q.stop()
-      spark.table(name)
-    }
-    // exact keys: the 3 distinct rows survive, the replayed copies drop
-    val exact = run("sd_exact")(StreamDedup.dropDupes(_, "ts", "1 hour", Seq("conv_id", "ts", "text")))
-    assert(exact.count() == 3 && exact.select($"conv_id").distinct().count() == 3)
-    // content canonicalization: rows 1 and 2 share a normalized fingerprint
-    // → 2 survivors total (one per content), batch-canonical parity
-    val content = run("sd_content")(StreamDedup.dropDupContent(_, "ts", "1 hour", $"text"))
-    assert(content.count() == 2)
-    val batchFps = rows.select(graft.functions.TextFunctions.fingerprint($"text")).distinct().count()
-    assert(content.select($"content_fp").distinct().count() == batchFps)
   }
 
   test("streaming 1m tier over sf0.01 events equals the batch tier in FULL (row-for-row)") {

@@ -293,14 +293,14 @@ class IceTableSpec extends SparkSpec {
     val fps = days.map(source.dayFingerprint)
     // the append overlaps the pinned days and adds new ones
     assert(t.append(withLen.where($"ts" >= "2025-01-06" && $"ts" < "2025-01-10"), "ts") == 2)
-    assert(source.lineageId == 1)
+    assert(days.forall(source.lineageId(_) == 1))
     assert(source.pendingDays == days && days.map(source.dayFingerprint) == fps)
     val scanned = source.scanDays(spark, days).select(first.columns.map(col): _*)
     assert(scanned.count() == first.count())
     assert(scanned.exceptAll(first).isEmpty && first.exceptAll(scanned).isEmpty)
     // a source built after the append sees it
     val fresh = new CheckpointedRollup.IceDaySource(t)
-    assert(fresh.lineageId == 2 && fresh.pendingDays.size > days.size)
+    assert(fresh.pendingDays.forall(fresh.lineageId(_) == 2) && fresh.pendingDays.size > days.size)
   }
 
   test("batched day units: a null day bucket fails with a clear message before any day commits") {

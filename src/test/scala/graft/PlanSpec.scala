@@ -139,7 +139,7 @@ class PlanSpec extends SparkSpec {
     val nScan = p.linesIterator.count(_.contains("Scan parquet"))
     assert(nScan <= 3, s"sparse SRI must not re-derive the active set per branch, got $nScan scans")
     // bucketed form adds only the bucket-index Generate (also bounded)
-    val bkt = Sri.activityRegularityBucketed(ev, col("user_id"), col("ts"), 300, 288, 86400L)
+    val bkt = Sri.activityRegularityBucketedCounts(ev, col("user_id"), col("ts"), 300, 288, 86400L)
     val nGenB = plan(bkt).linesIterator.count(_.contains("Generate "))
     assert(nGenB == 2, s"bucketed sparse SRI explodes bucket indices + 2-fan sides, got $nGenB")
   }

@@ -55,14 +55,6 @@ class ReferenceParitySpec extends SparkSpec {
     assert(none.isNullAt(none.fieldIndex("latency_secs")))
   }
 
-  test("run-id assignment segments maximal equal-value runs") {
-    val runs = Episodes.withRunId(seqDf("llwllww"), Seq($"conv_id", $"log_id"), Seq($"idx"), $"v")
-      .select($"idx", $"v", $"run_key").orderBy("idx").collect()
-    val keys = runs.map(r => (r.getString(1), r.getInt(2) /* run_key as int? */)).toSeq
-    val distinctRuns = runs.map(r => (r.getString(1), r.get(2))).distinct
-    assert(distinctRuns.length == 4, s"llw|ll|ww → 4 runs, got $distinctRuns")
-  }
-
   test("F1 sliding 3-bucket SD + completeness: incomplete head windows dropped (sleepSD.R:66-94)") {
     // weekly buckets with one missing week: completeness must drop the
     // window that spans the gap (range semantics, not rows)
@@ -70,11 +62,12 @@ class ReferenceParitySpec extends SparkSpec {
       ("c1", "2025-01-06", 1.0), ("c1", "2025-01-13", 2.0), ("c1", "2025-01-20", 3.0),
       /* gap 01-27 */ ("c1", "2025-02-03", 4.0), ("c1", "2025-02-10", 5.0), ("c1", "2025-02-17", 6.0))
       .toDF("conv_id", "wk", "m").withColumn("wk", to_date($"wk"))
-    val got = Sliding.slidingStats(weeks, $"conv_id", $"wk", 604800L, 3, Seq("m" -> $"m"))
+      .withColumn("m_us", round($"m" * lit(1e6)).cast("long")) // micro-units, as q_sliding_3d
+    val got = Sliding.slidingStatsExact(weeks, $"conv_id", $"wk", 604800L, 3, Seq("m" -> $"m_us"))
       .select($"wk".cast("string"), $"m_sd", $"m_n").orderBy("wk").collect()
     // complete windows: [06,13,20] ending 01-20 and [03,10,17] ending 02-17
     assert(got.map(_.getString(0)).toSeq == Seq("2025-01-20", "2025-02-17"))
-    assert(math.abs(got.head.getAs[Double]("m_sd") - 1.0) < 1e-12) // sd(1,2,3)=1
+    assert(math.abs(got.head.getAs[Double]("m_sd") / 1e6 - 1.0) < 1e-12) // sd(1,2,3)=1
   }
 
   test("P7 retention: calendar-month arithmetic incl. end-of-month clamp (sleepSD.R:216)") {
@@ -83,7 +76,7 @@ class ReferenceParitySpec extends SparkSpec {
       ("2024-11-30 12:00:00", "2025-03-01 00:00:00"))
       .toDF("anchor", "ts")
       .select(to_timestamp($"anchor").as("anchor"), to_timestamp($"ts").as("ts"))
-    val kept = df.where(TimeBuckets.afterRetention($"ts", $"anchor", 3)).collect()
+    val kept = df.where(TimeBuckets.afterRetentionInterval($"ts", $"anchor", "3 MONTH")).collect()
     assert(kept.length == 1 && kept.head.getAs[java.sql.Timestamp]("ts").toString.startsWith("2025-03-01"))
   }
 
@@ -143,7 +136,7 @@ class ReferenceParitySpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getAs[Double]("sri")).toMap
     val sparse = scores(Sri.episodeSri(eps, $"conv_id", $"start", $"end", $"status", $"src",
       tickSeconds = 30, lagTicks = 2880))
-    val dense = scores(Sri.episodeSriDense(eps, $"conv_id", $"start", $"end", $"status", $"src",
+    val dense = scores(Oracles.episodeSriDense(eps, $"conv_id", $"start", $"end", $"status", $"src",
       tickSeconds = 30, lagTicks = 2880))
     assert(sparse.keySet == dense.keySet && sparse.keySet == Set("c1", "c2"))
     sparse.keySet.foreach { e =>
@@ -171,7 +164,7 @@ class ReferenceParitySpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getAs[Double]("sri")).toMap
     val sparse = scores(Sri.episodeSri(eps, $"conv_id", $"start", $"end", $"status", $"src",
       tickSeconds = 30, lagTicks = 2880))
-    val dense = scores(Sri.episodeSriDense(eps, $"conv_id", $"start", $"end", $"status", $"src",
+    val dense = scores(Oracles.episodeSriDense(eps, $"conv_id", $"start", $"end", $"status", $"src",
       tickSeconds = 30, lagTicks = 2880))
     assert(sparse.keySet == dense.keySet && sparse.keySet == Set("p1", "p2"))
     sparse.keySet.foreach { e =>
@@ -188,8 +181,14 @@ class ReferenceParitySpec extends SparkSpec {
       m <- 0 until 60 by 5
     } yield ("c1", f"2025-01-0${day + 1}%d $hour%02d:$m%02d:00"))
       .toDF("conv_id", "tss").withColumn("ts", to_timestamp($"tss"))
-    val daily = Sri.activityRegularityBucketed(turns, $"conv_id", $"ts",
+    // the daily score from the operator's exact counts, in double and as
+    // the micro-unit integer q_sri_daily_sliding slides over
+    val daily = Sri.activityRegularityBucketedCounts(turns, $"conv_id", $"ts",
       tickSeconds = 300, lagTicks = 288, bucketSeconds = 86400L)
+      .select($"conv_id", $"bucket_start",
+        (lit(200.0) * ($"cmp_ticks" - $"disagree") / $"cmp_ticks" - 100.0).as("sri"),
+        floor((lit(100000000L) * ($"cmp_ticks" - lit(2L) * $"disagree")).cast("double")
+          / $"cmp_ticks").cast("long").as("sri_us"))
     val scores = daily.orderBy("bucket_start")
       .select($"bucket_start".cast("date").cast("string"), $"sri")
       .as[(String, Double)].collect().toMap
@@ -199,10 +198,16 @@ class ReferenceParitySpec extends SparkSpec {
     assert(scores("2025-01-02") == 100.0)
     assert(scores("2025-01-03") < 100.0 && scores("2025-01-04") < 100.0)
     // composition: sliding 2-day mean over the daily SRI series (F3)
-    val slid = Sliding.slidingStats(daily, $"conv_id", $"bucket_start", 86400L, 2, Seq("sri" -> $"sri"))
+    val slid = Sliding.slidingStatsExact(daily, $"conv_id", $"bucket_start", 86400L, 2,
+      Seq("sri" -> $"sri_us"))
     val last = slid.orderBy($"bucket_start".desc).select($"sri_mean").as[Double].head()
+    val us = daily.select($"bucket_start".cast("date").cast("string"), $"sri_us")
+      .as[(String, Long)].collect().toMap
+    val expectedUs = (us("2025-01-03") + us("2025-01-04")) / 2.0
+    assert(math.abs(last - expectedUs) < 1e-9, s"sliding mean $last vs $expectedUs")
+    // and the micro-unit mean is the double scores' mean, floored to 1e-6
     val expected = (scores("2025-01-03") + scores("2025-01-04")) / 2.0
-    assert(math.abs(last - expected) < 1e-9, s"sliding mean $last vs $expected")
+    assert(math.abs(last / 1e6 - expected) < 1e-6, s"sliding mean ${last / 1e6} vs $expected")
   }
 
   test("D2 keep-last per tick: overlapping episodes resolve to latest source (functions/sri.R:37-39)") {

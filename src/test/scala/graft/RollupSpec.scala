@@ -123,7 +123,7 @@ class RollupSpec extends SparkSpec {
       .select($"conv_id", $"bucket_start", $"m_interp", $"is_gap")
       .orderBy("conv_id", "bucket_start").collect().toSeq
     val join2 = canon(GapFill.interpolatedFrom(grid, "m", tier))
-    val ref = canon(GapFill.interpolatedTwoSort(grid, "m"))
+    val ref = canon(Oracles.interpolatedTwoSort(grid, "m"))
     assert(join2 == ref) // Row equality is bit-exact on doubles
     grid.unpersist()
   }

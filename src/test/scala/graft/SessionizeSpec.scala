@@ -32,63 +32,6 @@ class SessionizeSpec extends SparkSpec {
       s"exact-gap successor must merge to match the oracle's <= semantics, got $got sessions")
   }
 
-  test("streaming sessions equal batch sessions (append mode, watermark-closed)") {
-    import graft.sources.TranscriptGen
-    val dir = java.nio.file.Files.createTempDirectory("sess-in").toString
-    val turns = TranscriptGen.turns(spark, nConvs = 10L, withDuplicates = false).toDF
-    turns.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(turns.schema).parquet(dir)
-    val q = graft.operators.Sessionize
-      .sessionsStream(stream, $"conv_id", "ts", "30 minutes", "10 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("sess_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("sess_stream")
-      .select($"conv_id", $"session_start", $"last_ts", $"n_events").collect()
-    val batch = graft.operators.Sessionize.sessions(turns, $"conv_id", $"ts", "30 minutes")
-      .select($"conv_id", $"session_start", $"last_ts", $"n_events").collect()
-      .map(r => (r.getString(0), r.get(1)) -> r).toMap
-    // append emits only watermark-closed sessions — the emitted set must be
-    // a prefix of the batch result, identical row-for-row
-    assert(streamed.nonEmpty)
-    streamed.foreach { r =>
-      val b = batch((r.getString(0), r.get(1)))
-      assert(b.get(2) == r.get(2) && b.getLong(3) == r.getLong(3))
-    }
-  }
-
-  test("stateful streaming turn gaps equal the batch lag, ACROSS micro-batches") {
-    import graft.model.Turn
-    import graft.sources.TranscriptGen
-    val base = java.nio.file.Files.createTempDirectory("gaps-in").toString
-    val turns = TranscriptGen.turns(spark, nConvs = 8L, withDuplicates = false).toDF.cache()
-    // two time-ordered files → with maxFilesPerTrigger=1, two micro-batches:
-    // the second batch's first gap per conversation MUST come from state
-    turns.where($"turn_idx" < 15).coalesce(1).write.parquet(s"$base/f1")
-    Thread.sleep(1100) // distinct modification times → deterministic file order
-    turns.where($"turn_idx" >= 15).coalesce(1).write.parquet(s"$base/f2")
-    val schema = turns.schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/f*/")
-      .withWatermark("ts", "0 seconds")
-      .as[Turn]
-    val q = graft.streaming.StatefulMeasures.turnGaps(stream)
-      .writeStream.outputMode("append").format("memory").queryName("gaps_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("gaps_stream")
-      .select($"conv_id", $"turn_idx", $"turn_gap_secs")
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> Option(r.get(2))).toMap
-    val batch = TranscriptGen.withMeasures(turns)
-      .select($"conv_id", $"turn_idx", $"turn_gap_secs")
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> Option(r.get(2))).toMap
-    assert(streamed.size == batch.size && streamed.nonEmpty)
-    batch.foreach { case (k, v) => assert(streamed(k) == v, s"$k: ${streamed(k)} vs $v") }
-    // and a cross-batch gap really was exercised (turn 15 has a non-null gap)
-    assert(streamed.exists { case ((_, idx), g) => idx == 15 && g.isDefined })
-  }
-
   test("sessions never span entities") {
     val df = Seq(("a", "2025-01-01 10:00:00"), ("b", "2025-01-01 10:05:00"))
       .toDF("u", "t").withColumn("ts", to_timestamp($"t"))

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{Gorilla, GorillaAgg}
 import graft.operators.{CheckpointedRollup, Rollup, TierStore}
 import graft.sources.{IceTable, TranscriptGen}
 
@@ -46,13 +45,6 @@ class TierStoreSpec extends SparkSpec {
       .orderBy("conv_id", "ts_us", "v").collect()
     assert(replayed.length == raw.length)
     assert(replayed.sameElements(raw))
-
-    // the Generator and the UDF decode path agree
-    val viaUdf = t1m
-      .select($"conv_id", explode(GorillaAgg.decodeUdf($"gblock")).as("p"))
-      .select($"conv_id", $"p.ts_us", $"p.v")
-      .orderBy("conv_id", "ts_us", "v").collect()
-    assert(viaUdf.sameElements(replayed))
   }
 
   test("incremental sync: appending raw data rebuilds ONLY the touched days at EVERY tier") {
@@ -103,6 +95,31 @@ class TierStoreSpec extends SparkSpec {
     assert(dropped.nonEmpty)
     val lo = TierStore.scanTier(spark, s"$root/1m").agg(min($"bucket_start")).head().getTimestamp(0)
     assert(lo.getTime * 1000 >= cutoffUs - 86400000000L)
+  }
+
+  test("lineage: the snapshot that appends to raw day X is the source_snapshot_id of X's 1m, 1h and 1d markers") {
+    val src = IceTable(tmp("ice-lineage"))
+    val turns = TranscriptGen.turns(spark, nConvs = 6L, withDuplicates = false)
+      .toDF.withColumn("text_len", length($"text").cast("double")).cache()
+    // day X = the last day with turns: its rows land in a second snapshot
+    val x = turns.agg(max(date_trunc("day", $"ts"))).head().getTimestamp(0)
+    val xUs = x.getTime * 1000
+    val first = src.append(turns.where($"ts" < x), "ts")
+    val root = tmp("tiers-lineage")
+    TierStore.sync(spark, src, root, $"text_len")
+    val second = src.append(turns.where($"ts" >= x), "ts")
+    assert(second > first)
+    val (r1m, r1h, r1d) = TierStore.sync(spark, src, root, $"text_len")
+    for (r <- Seq(r1m, r1h, r1d)) assert(r.filter(!_.skipped).map(_.dayUs) == Seq(xUs))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def snapshotOf(tier: String, d: Long): Long =
+      mapper.readTree(markerFile(root, tier, d).toFile).get("source_snapshot_id").asLong
+    for (tier <- Tiers) {
+      assert(snapshotOf(tier, xUs) == second, s"$tier day X")
+      // the days the first snapshot built keep its id at every tier
+      val older = r1m.filter(_.skipped).map(_.dayUs)
+      assert(older.nonEmpty && older.forall(snapshotOf(tier, _) == first), s"$tier older days")
+    }
   }
 
   private val Tiers = Seq("1m", "1h", "1d")
