@@ -9,13 +9,6 @@ import org.apache.spark.sql.functions._
   * Tier values are read back through `plans.GorillaExplode`. */
 object GorillaAgg {
 
-  /** Column-level aggregate: gorilla block of (unix_micros(ts), value).
-    * Null/NaN input rows are skipped inside the aggregate, so no pre-filter
-    * is needed and it fuses with stat-block aggregates in one
-    * groupBy().agg(...) (one scan, one shuffle — TierStore). */
-  def gorillaBlock(tsUs: Column, value: Column): Column =
-    graft.plans.GorillaBlockAgg.gorillaBlock(tsUs, value)
-
   /** Build a Gorilla-compressed tier: one block per (entity, bucket), plus
     * point count and block size (bytes/point is the BASELINE.md compression
     * metric). Null measures are skipped (na.rm parity — nulls are not
@@ -26,7 +19,8 @@ object GorillaAgg {
       ts: Column,
       value: Column,
       interval: String): DataFrame = {
-    val block = gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double")).as("block")
+    val block = graft.plans.GorillaBlockAgg
+      .gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double")).as("block")
     graft.operators.Rollup
       .bucketed(raw.where(value.isNotNull && !isnan(value)), entity.as("conv_id"), ts, interval, Nil, Seq(block))
       .withColumn("n_points", udf((b: Array[Byte]) => Gorilla.pointCount(b)).apply(col("block")))

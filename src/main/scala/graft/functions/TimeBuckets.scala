@@ -22,9 +22,6 @@ object TimeBuckets {
   def weekSunday(ts: Column): Column =
     date_trunc("week", ts + expr("INTERVAL 1 DAY")) - expr("INTERVAL 1 DAY")
 
-  /** Day bucket as a timestamp (00:00). */
-  def day(ts: Column): Column = date_trunc("day", ts)
-
   /** Epoch bucket INDEX of a timestamp at a fixed stride: FLOOR division,
     * not truncate-toward-zero — pre-1970 timestamps (negative epoch) must
     * land in the bucket BELOW, consistently with integer floor-div. The

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -21,13 +20,14 @@ import graft.sources.{IceTable, MetaFiles, Parquet}
 /** Resumable tier build: raw IceTable → 1m-tier parquet, one event-time DAY
   * per work unit, each unit committed with a lineage-carrying checkpoint.
   *
-  * Checkpoint JSON per day: {source_snapshot_id, bucket_lo_us, bucket_hi_us,
-  * rows, bytes, wall_ms} (wall_ms = the day's amortized share of its batch
-  * job under day-unit batching) — exactly the north rule's "per-partition
-  * checkpoints carrying lineage (source snapshot-id, bucket range) and
-  * row/byte metrics", and the engine analog of the reference's
+  * Checkpoint JSON per day: {source_snapshot_id, source_files_fp,
+  * bucket_lo_us, bucket_hi_us, rows, bytes} — exactly the north rule's
+  * "per-partition checkpoints carrying lineage (source snapshot-id, bucket
+  * range) and row/byte metrics", and the engine analog of the reference's
   * executed=/used= provenance on every egress
   * (/root/reference/scripts/daily-measures.R:242-251).
+  * Every field is a function of the source and the committed day files,
+  * so two builds over one source write byte-identical markers.
   *
   * Resume semantics: a day is skipped iff its source-file FINGERPRINT is
   * unchanged since it was built — the fingerprint hashes the manifest
@@ -36,11 +36,14 @@ import graft.sources.{IceTable, MetaFiles, Parquet}
   * day and its tombstone (`_checkpoints/expired.json`, see
   * TierStore.expireDays) holds it. Appending a new snapshot therefore
   * invalidates ONLY the days the new files touch (incremental tier build:
-  * O(changed days), not O(history)); a crashed run redoes only missing
-  * days, and an expired day stays expired until its source changes. The
-  * marker also records the source snapshot id for lineage/audit. Output
-  * commit is write-to-temp + atomic rename, so a kill mid-day never leaves
-  * a half-visible day.
+  * O(changed days), not O(history)), and an expired day stays expired
+  * until its source changes. A run that fails (a task error, a killed
+  * process) keeps every day it committed: a batch's days commit one by one
+  * after its write, so the re-run skips the batches that finished and
+  * redoes the rest, and the store it leaves is the one an uninterrupted
+  * run writes. The marker also records the source snapshot id for
+  * lineage/audit. Output commit is write-to-temp + atomic rename, so a
+  * kill mid-day never leaves a half-visible day.
   *
   * Scale: each day scans ONLY the raw files overlapping that day (IceTable
   * stat pruning). Up to `MaxAutoBatch` to-run days share one batch, one
@@ -150,12 +153,6 @@ object CheckpointedRollup {
     meta.read(markerPath(outDir, dayUs)).map(mapper.readTree)
       .filter(_.has("source_files_fp")).map(_.get("source_files_fp").asLong)
 
-  def isDone(spark: SparkSession, outDir: String, dayUs: Long, fingerprint: Long): Boolean = {
-    val p = markerPath(outDir, dayUs)
-    markerFp(new MetaFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration)), outDir, dayUs)
-      .contains(fingerprint)
-  }
-
   /** The tier's tombstones: dayUs → the source fingerprint the day's marker
     * held when retention removed the day (empty when nothing was expired). */
   private[operators] def expiredDays(meta: MetaFiles, outDir: String): Map[Long, Long] =
@@ -173,27 +170,12 @@ object CheckpointedRollup {
     meta.replace(expiredPath(outDir), mapper.writeValueAsString(node))
   }
 
-  /** Run (or resume) a tier build over an IceTable source (the raw→1m
-    * form; see `runUnits` for the generic DaySource + transform form). */
-  def run(
-      spark: SparkSession,
-      source: IceTable,
-      outDir: String,
-      value: Column,
-      interval: String = "1 minute",
-      failAfter: Option[Int] = None,
-      parallelism: Int = 1): Seq[DayResult] =
-    runUnits(spark, new IceDaySource(source), outDir,
-      raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), value, interval),
-      col("bucket_start"), failAfter, parallelism)
-
   /** Run (or resume) a day-unit build: for each source day whose
     * fingerprint changed (or has neither a marker nor a tombstone), apply
     * `transform` to that day's rows and commit the result dir + marker
-    * atomically. `failAfter` injects a crash after N completed units —
-    * used by the resume tests (only meaningful with parallelism=1).
-    * `parallelism` bounds how many batches are in flight concurrently
-    * (independent job chains; results are per-day and order-independent).
+    * atomically. `parallelism` bounds how many batches are in flight
+    * concurrently (independent job chains; results are per-day and
+    * order-independent).
     * Returns per-day results in day order; a skipped day (marker or
     * tombstone) comes back with `skipped = true`.
     *
@@ -218,21 +200,18 @@ object CheckpointedRollup {
     * 2-day batches only multiplied that fixed cost on a CPU-bound driver
     * (24 jobs against 9 for a 3-tier build of 8 days). The batch output is
     * distributed by day before the write, so each day is written by one
-    * task into one file. Batches hold one day under `failAfter` (it counts
-    * day units). */
+    * task into one file. */
   def runUnits(
       spark: SparkSession,
       source: DaySource,
       outDir: String,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       dayBucket: Column,
-      failAfter: Option[Int] = None,
       parallelism: Int = 1): Seq[DayResult] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(outDir).getFileSystem(conf)
     val meta = new MetaFiles(fs)
     fs.mkdirs(new Path(outDir, "_checkpoints"))
-    val done = new AtomicInteger(0)
 
     // commit one completed (already renamed-into-place) day: row count from
     // the COMMITTED files' parquet footers — metadata-only (no data
@@ -240,7 +219,7 @@ object CheckpointedRollup {
     // under task retries/speculation, where each successful attempt's
     // partial scan would inflate observed metrics. The marker rows value
     // chains into dayFingerprint, so it must be durable-exact.
-    def commitDay(dayUs: Long, fp: Long, wallMs: Long): DayResult = {
+    def commitDay(dayUs: Long, fp: Long): DayResult = {
       val dayDir = new Path(outDir, s"day=$dayUs")
       val status = fs.listStatus(dayDir)
       val rows = status.iterator
@@ -264,9 +243,7 @@ object CheckpointedRollup {
       node.put("bucket_hi_us", dayUs + DayUs - 1)
       node.put("rows", rows)
       node.put("bytes", bytes)
-      node.put("wall_ms", wallMs)
       meta.replace(markerPath(outDir, dayUs), mapper.writeValueAsString(node))
-      done.incrementAndGet()
       DayResult(dayUs, rows, bytes, skipped = false)
     }
 
@@ -282,9 +259,6 @@ object CheckpointedRollup {
     }
 
     def writeBatch(batch: Seq[(Long, Long)]): Seq[DayResult] = {
-      failAfter.foreach(k =>
-        if (done.get() >= k) throw new RuntimeException(s"injected failure after $k units"))
-      val t0 = System.nanoTime()
       val out = transform(source.scanDays(spark, batch.map(_._1)))
       // case-INSENSITIVE reservation check: Spark resolves columns
       // case-insensitively by default, so a transform column 'Day'
@@ -318,7 +292,6 @@ object CheckpointedRollup {
       val stray = written -- batch.map(_._1).toSet
       require(stray.isEmpty,
         s"runUnits batching: transform emitted rows outside the batch's days: ${stray.mkString(",")}")
-      val wallShareMs = (System.nanoTime() - t0) / 1000000 / batch.size
       val results = batch.map { case (dayUs, fp) =>
         val dayDir = new Path(outDir, s"day=$dayUs")
         val src = new Path(tmpDir, s"day=$dayUs")
@@ -331,10 +304,7 @@ object CheckpointedRollup {
         if (fs.exists(dayDir)) fs.delete(dayDir, true)
         if (!fs.rename(src, dayDir))
           throw new IllegalStateException(s"checkpoint commit: rename $src -> $dayDir failed")
-        // wall_ms = this day's amortized share of its batch job (the
-        // job is indivisible; recording the full batch wall per day
-        // would overstate summed per-day wall by up to batchSize×)
-        commitDay(dayUs, fp, wallShareMs)
+        commitDay(dayUs, fp)
       }
       fs.delete(tmpDir, true)
       results
@@ -344,10 +314,10 @@ object CheckpointedRollup {
     val fps = days.map(d => d -> source.dayFingerprint(d))
     val tombs = expiredDays(meta, outDir)
     val (doneDays, runDays) = fps.partition { case (d, fp) =>
-      tombs.get(d).contains(fp) || isDone(spark, outDir, d, fp)
+      tombs.get(d).contains(fp) || markerFp(meta, outDir, d).contains(fp)
     }
     val skippedResults = doneDays.map { case (d, _) => DayResult(d, 0L, 0L, skipped = true) }
-    val batches = runDays.grouped(if (failAfter.isDefined) 1 else MaxAutoBatch).toSeq
+    val batches = runDays.grouped(MaxAutoBatch).toSeq
 
     val ran: Seq[DayResult] =
       if (parallelism <= 1) batches.flatMap(runBatch)

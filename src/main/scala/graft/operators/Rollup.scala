@@ -100,7 +100,7 @@ object Rollup {
       value: Column,
       interval: String): DataFrame = {
     val aggs = blockAggs(value, todHours(ts)) :+
-      graft.functions.GorillaAgg
+      graft.plans.GorillaBlockAgg
         .gorillaBlock(unix_micros(ts.cast("timestamp")), value.cast("double"))
         .as("gblock")
     bucketed(raw, entity.as("conv_id"), ts, interval, Nil, aggs)
@@ -111,7 +111,7 @@ object Rollup {
     * level down, still one aggregate (see rollupRawWithGorilla). */
   def rollupTierWithGorilla(tier: DataFrame, interval: String): DataFrame = {
     val aggs = mergeAggs :+
-      graft.functions.GorillaAgg
+      graft.plans.GorillaBlockAgg
         .gorillaBlock(unix_micros(col("bucket_start").cast("timestamp")), col("sum"))
         .as("gblock")
     bucketed(tier, col("conv_id"), col("bucket_start"), interval, Nil, aggs)

@@ -130,7 +130,10 @@ case class GorillaBlockAgg(
 
 object GorillaBlockAgg {
   /** Column-level aggregate: gorilla block of (tsUs, value). Inputs are
-    * coerced to (bigint, double) here, at Column level. */
+    * coerced to (bigint, double) here, at Column level. Null/NaN input
+    * rows are skipped inside the aggregate, so no pre-filter is needed and
+    * it fuses with stat-block aggregates in one groupBy().agg(...) (one
+    * scan, one shuffle — TierStore). */
   def gorillaBlock(tsUs: Column, value: Column): Column =
     Bridge.column(
       GorillaBlockAgg(

@@ -2,11 +2,11 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Minimal Iceberg-SHAPED table layer (not the Iceberg library — no Iceberg
@@ -31,16 +31,15 @@ import org.apache.spark.sql.functions._
   * distance to the base as `chain_len`, so the base-or-delta decision reads
   * only the parent snapshot, never the chain). N daily appends therefore
   * write O(N) cumulative manifest entries, not the O(N²) a
-  * full-list-per-snapshot log accumulates. A `keys.json` index makes keyed
-  * idempotency lookups O(1) amortized instead of an O(snapshots) chain
-  * walk per streaming epoch (see `syncKeyIndex`).
+  * full-list-per-snapshot log accumulates.
   *
   * Layout: root/data/d-<uuid>/part-*.parquet, root/snapshots/v<id>.json,
-  * root/keys.json (idempotency index), root/CURRENT (text file with latest
-  * id; a derived convenience pointer — see commit protocol). Provenance
+  * root/CURRENT (text file with latest id; a derived convenience pointer —
+  * see commit protocol). Provenance
   * parity: the reference records executed=/used= lineage on every egress
   * (/root/reference/scripts/daily-measures.R:242-251) — here it is the
-  * snapshot log itself.
+  * snapshot log itself. The snapshot log and CURRENT are the table's only
+  * metadata; a `keys.json` index that older versions wrote is never read.
   *
   * Commit protocol (crash-safe, multi-writer CAS — the Iceberg
   * CAS-on-metadata-pointer idea, done as a put-if-absent claim; every
@@ -61,17 +60,7 @@ import org.apache.spark.sql.functions._
   *     next read. A crash before the claim leaves only an unreferenced
   *     data/d-<uuid> dir or a hidden staged JSON: no listing or snapshot
   *     names them, so no scan reads them (and nothing deletes them — the
-  *     table has no orphan-file sweep);
-  *   - the key index is written strictly AFTER the claim, so it can only
-  *     ever be STALE, never ahead — `syncKeyIndex` heals staleness by
-  *     walking just the (indexed, CURRENT] gap;
-  *   - appends may carry an idempotency `key` (recorded in the snapshot):
-  *     re-appending a committed key is a no-op returning the original id —
-  *     this is what makes at-least-once streaming foreachBatch replays
-  *     exactly-once (StreamTier keys each micro-batch by its epoch).
-  *     CONCURRENT writers racing the SAME key can both commit (the key
-  *     check precedes the claim); last-committed wins the index — keyed
-  *     idempotency assumes one writer per key stream, as in streaming.
+  *     table has no orphan-file sweep).
   *
   * All I/O goes through the Hadoop FileSystem API or [[MetaFiles]], so the
   * table works on any Hadoop-supported storage (local file://, HDFS,
@@ -93,7 +82,6 @@ final class IceTable(val root: String) {
   private def snapDir = new Path(root, "snapshots")
   private def dataDir = new Path(root, "data")
   private def currentFile = new Path(root, "CURRENT")
-  private def keyIndexFile = new Path(root, "keys.json")
   private lazy val meta = new MetaFiles(fs)
 
   case class FileEntry(path: String, rows: Long, bytes: Long, minTsUs: Long, maxTsUs: Long)
@@ -109,7 +97,6 @@ final class IceTable(val root: String) {
       parentId: Long,
       op: String,
       files: Seq[FileEntry],
-      key: Option[String] = None,
       delta: Boolean = false,
       chainLen: Int = 0)
 
@@ -130,6 +117,8 @@ final class IceTable(val root: String) {
       .flatMap(n => scala.util.Try(n.stripPrefix(prefix).stripSuffix(suffix).toLong).toOption)
       .foldLeft(0L)(math.max)
 
+  /** Snapshot `id` from its JSON; fields this version does not write
+    * (the `key` of older keyed appends) are ignored. */
   def snapshot(id: Long): Option[Snapshot] =
     meta.read(new Path(snapDir, f"v$id%05d.json")).map { json =>
       val n = mapper.readTree(json)
@@ -137,11 +126,10 @@ final class IceTable(val root: String) {
         FileEntry(f.get("path").asText, f.get("rows").asLong, f.get("bytes").asLong,
           f.get("min_ts_us").asLong, f.get("max_ts_us").asLong)
       }.toSeq
-      val key = Option(n.get("key")).filterNot(_.isNull).map(_.asText)
       val delta = Option(n.get("delta")).exists(_.asBoolean) // absent (pre-delta log) = base
       val chainLen = Option(n.get("chain_len")).map(_.asInt).getOrElse(0)
       Snapshot(n.get("id").asLong, n.get("parent_id").asLong, n.get("op").asText,
-        files, key, delta, chainLen)
+        files, delta, chainLen)
     }
 
   def current: Option[Snapshot] = snapshot(currentSnapshotId)
@@ -179,7 +167,6 @@ final class IceTable(val root: String) {
     node.put("op", s.op)
     node.put("delta", s.delta)
     node.put("chain_len", s.chainLen)
-    s.key.foreach(node.put("key", _))
     val arr: ArrayNode = node.putArray("files")
     s.files.foreach { f =>
       val fn = arr.addObject()
@@ -252,78 +239,29 @@ final class IceTable(val root: String) {
     dir
   }
 
-  // ------------------------------------------------------ idempotency index
-
-  /** Read keys.json → (highest indexed snapshot id, key → snapshot id).
-    * A corrupt/missing file degrades to (0, empty) — the next sync rebuilds
-    * it from the snapshot log (the log is the source of truth). */
-  private def readKeyIndex(): (Long, Map[String, Long]) =
-    meta.read(keyIndexFile).flatMap(json => scala.util.Try {
-      val n = mapper.readTree(json)
-      val keys = Option(n.get("keys")).map { kn =>
-        kn.properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
-      }.getOrElse(Map.empty[String, Long])
-      (n.get("up_to").asLong, keys)
-    }.toOption).getOrElse((0L, Map.empty))
-
-  /** Bring keys.json up to CURRENT and return the synced key map. Walks
-    * ONLY the (up_to, CURRENT] gap — normally zero or one snapshot — so a
-    * keyed lookup (and therefore every streaming micro-batch commit) costs
-    * O(1) amortized filesystem reads instead of an O(snapshots) chain walk.
-    * The index is a pure cache: written post-commit (never ahead of
-    * CURRENT), healed from the log when stale, rebuilt if deleted. */
-  private def syncKeyIndex(): Map[String, Long] = {
-    val (upTo, keys) = readKeyIndex()
-    val curId = currentSnapshotId
-    if (curId <= upTo) keys
-    else {
-      val gap = Iterator.iterate(current)(s => s.flatMap(x => snapshot(x.parentId)))
-        .takeWhile(_.exists(_.id > upTo))
-        .flatten
-        .collect { case s if s.op == "append" && s.key.isDefined => s.key.get -> s.id }
-        .toList
-      // gap walks newest→oldest; "latest append wins" ⇒ oldest applied first
-      val merged = keys ++ gap.reverse
-      val node = mapper.createObjectNode()
-      node.put("up_to", curId)
-      val kn = node.putObject("keys")
-      merged.foreach { case (k, v) => kn.put(k, v) }
-      meta.replace(keyIndexFile, mapper.writeValueAsString(node))
-      merged
-    }
-  }
-
-  /** Latest committed append snapshot carrying `key` (idempotency lookup) —
-    * O(1) amortized via the keys.json index. */
-  def appendIdForKey(key: String): Option[Long] = syncKeyIndex().get(key)
-
   // --------------------------------------------------------------- commits
 
-  /** Append a DataFrame as a new snapshot. `tsCol` drives per-file min/max
-    * stats. `key` (optional) makes the append idempotent: if a committed
-    * append already carries the key, nothing is written and its id is
-    * returned — the contract streaming foreachBatch replays rely on.
+  /** Append a DataFrame as a new snapshot: stage its data dir, take
+    * per-file stats (`tsCol` drives the min/max), claim the next
+    * `v<id>.json`, advance CURRENT. Returns the snapshot id.
     *
     * The snapshot manifest lists ONLY this append's files (delta), except
     * every `BaseEvery`-th append in a chain, which materializes the full
     * live set so reads stay bounded. */
-  def append(df: DataFrame, tsCol: String, key: Option[String] = None): Long =
-    key.flatMap(appendIdForKey).getOrElse {
-      // stage data ONCE (the expensive part); the claim loop below only
-      // rebuilds cheap manifest metadata if a concurrent writer wins an id
-      val dir = stageDataDir(df)
-      val entries = statsOf(df.sparkSession, dir, tsCol)
-      val snap = claimCommit { (parent, id) =>
-        val newChainLen = parent.map(_.chainLen + 1).getOrElse(1)
-        if (parent.isEmpty || newChainLen >= BaseEvery)
-          Snapshot(id, parent.map(_.id).getOrElse(0L), "append",
-            parent.map(liveFiles).getOrElse(Nil) ++ entries, key, delta = false, chainLen = 0)
-        else
-          Snapshot(id, parent.get.id, "append", entries, key, delta = true, chainLen = newChainLen)
-      }
-      syncKeyIndex() // post-commit; stale-only on crash, healed next lookup
-      snap.id
-    }
+  def append(df: DataFrame, tsCol: String): Long = {
+    // stage data ONCE (the expensive part); the claim loop below only
+    // rebuilds cheap manifest metadata if a concurrent writer wins an id
+    val dir = stageDataDir(df)
+    val entries = statsOf(df.sparkSession, dir, tsCol)
+    claimCommit { (parent, id) =>
+      val newChainLen = parent.map(_.chainLen + 1).getOrElse(1)
+      if (parent.isEmpty || newChainLen >= BaseEvery)
+        Snapshot(id, parent.map(_.id).getOrElse(0L), "append",
+          parent.map(liveFiles).getOrElse(Nil) ++ entries, delta = false, chainLen = 0)
+      else
+        Snapshot(id, parent.get.id, "append", entries, delta = true, chainLen = newChainLen)
+    }.id
+  }
 
   /** Scan the current snapshot, optionally pruned to files overlapping
     * [loUs, hiUs] via manifest stats (no parquet touched outside range). */
@@ -351,12 +289,6 @@ final class IceTable(val root: String) {
     if (files.nonEmpty) Parquet.readFiles(spark, files)
     else if (live.nonEmpty) Parquet.readFiles(spark, Seq(live.map(_.path).min)).where(lit(false))
     else spark.emptyDataFrame
-  }
-
-  /** Total (rows, bytes) in the current snapshot — table-level metrics. */
-  def metrics: (Long, Long) = {
-    val fs = currentLiveFiles
-    (fs.map(_.rows).sum, fs.map(_.bytes).sum)
   }
 }
 

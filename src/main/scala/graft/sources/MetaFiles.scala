@@ -6,9 +6,10 @@ import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Pa
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
 /** How the program publishes its small metadata files — IceTable's
-  * `snapshots/v<id>.json`, `CURRENT` and `keys.json`, and the tier store's
-  * `_checkpoints/day-*.json` markers. Every read, replace and claim of one
-  * goes through here, and a reader only ever sees a complete file.
+  * `snapshots/v<id>.json` and `CURRENT`, and the tier store's
+  * `_checkpoints/day-*.json` markers and `expired.json` tombstones. Every
+  * read, replace and claim of one goes through here, and a reader only
+  * ever sees a complete file.
   *
   * Each write first puts the whole content in a hidden temp file beside
   * `dst` (`.<name>.tmp-<uuid>`, skipped by every listing that looks for

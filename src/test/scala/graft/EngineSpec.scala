@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.MetricRegistry
-import graft.operators.{GapFill, Rollup}
-import graft.sources.TranscriptGen
+import graft.operators.GapFill
 
-/** Metric registry, gap-fill interpolation, streaming tier = batch tier. */
+/** Metric registry and gap-fill interpolation. */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -48,86 +47,5 @@ class EngineSpec extends SparkSpec {
     val got = GapFill.interpolatedFrom(tier, "m", tier)
       .orderBy("bucket_start").select("m_interp").as[Double].collect()
     assert(got.toSeq == Seq(10.0, 20.0, 30.0, 40.0))
-  }
-
-  test("streaming writes into the shared tier IceTable (foreachBatch append snapshots)") {
-    import graft.streaming.StreamTier
-    import graft.sources.IceTable
-    val dir = java.nio.file.Files.createTempDirectory("stream-in2").toString
-    val tableRoot = java.nio.file.Files.createTempDirectory("stream-ice").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream-ckpt").toString
-    val turns = TranscriptGen.turns(spark, nConvs = 8L, withDuplicates = false).toDF
-    turns.write.mode("overwrite").parquet(dir)
-    val q = StreamTier.intoIceTable(spark, dir, tableRoot, ckpt, col("text_len"))
-    q.awaitTermination(120000)
-    val t = IceTable(tableRoot)
-    assert(t.currentSnapshotId >= 1, "at least one micro-batch committed a snapshot")
-    val stored = t.scan(spark)
-    assert(stored.count() > 0)
-    // same block schema as the batch tier → batch merge works on it
-    val merged = Rollup.rollupTier(stored, "1 hour")
-    assert(merged.count() > 0)
-  }
-
-  test("streaming 1m tier equals batch 1m tier (shared schema + semantics)") {
-    import graft.streaming.StreamTier
-    val dir = java.nio.file.Files.createTempDirectory("stream-in").toString
-    val turns = TranscriptGen.turns(spark, nConvs = 10L, withDuplicates = false).toDF
-    turns.write.mode("overwrite").parquet(dir)
-
-    val q = StreamTier.from(spark, dir, col("text_len"))
-      .format("memory").queryName("t1m_stream").start()
-    q.processAllAvailable(); q.stop()
-
-    val streamed = spark.table("t1m_stream")
-      .select($"conv_id", $"bucket_start", $"n_rows", round($"sum", 6).as("s"))
-      .orderBy("conv_id", "bucket_start").collect()
-    val batch = Rollup.rollupRaw(
-      turns.withColumn("text_len", length($"text").cast("double")),
-      $"conv_id", $"ts", $"text_len", "1 minute")
-      .select($"conv_id", $"bucket_start", $"n_rows", round($"sum", 6).as("s"))
-      .orderBy("conv_id", "bucket_start").collect()
-    // append mode emits only buckets whose watermark has passed; with
-    // AvailableNow + processAllAvailable the final watermark covers all but
-    // the trailing lateness window — compare the emitted prefix.
-    assert(streamed.nonEmpty)
-    val batchMap = batch.map(r => (r.getString(0), r.get(1)) -> r).toMap
-    streamed.foreach { r =>
-      val b = batchMap((r.getString(0), r.get(1)))
-      assert(b.getLong(2) == r.getLong(2) && b.getDouble(3) == r.getDouble(3))
-    }
-  }
-
-  test("streaming 1m tier over sf0.01 events equals the batch tier in FULL (row-for-row)") {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamTier
-    // the driver's sf0.01 events table as the stream source; one sentinel
-    // row a day past the real max pushes the final watermark beyond every
-    // real bucket, so append mode emits the COMPLETE tier (the prefix
-    // carve-out of the fixture test above is not needed here)
-    val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-      .select($"user_id".as("conv_id"), $"ts".cast("timestamp").as("ts"), $"value")
-    val maxTs = ev.agg(max($"ts")).head().getTimestamp(0)
-    val sentinel = Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 86400000L), 0.0))
-      .toDF("conv_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("stream-ev").toString
-    ev.unionByName(sentinel).write.mode("overwrite").parquet(dir)
-
-    val stream = spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
-    val q = StreamTier.tierAggregate(stream, $"value", "1 minute", "10 minutes")
-      .writeStream.outputMode("append").trigger(Trigger.AvailableNow())
-      .format("memory").queryName("t1m_full").start()
-    q.processAllAvailable(); q.stop()
-
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select($"conv_id", $"bucket_start", $"n_rows", $"n_vals",
-        round($"sum", 6).as("s"), $"min", $"max", round($"sum_sin", 9).as("ss"))
-      .orderBy("conv_id", "bucket_start")
-      .collect()
-    val streamed = canon(spark.table("t1m_full").where($"conv_id" =!= -1L))
-    val batch = canon(Rollup.rollupRaw(ev, $"conv_id", $"ts", $"value", "1 minute"))
-    assert(batch.length == streamed.length,
-      s"full equality: batch ${batch.length} vs streamed ${streamed.length} buckets")
-    assert(streamed.sameElements(batch))
   }
 }

@@ -25,28 +25,10 @@ class IceTableSpec extends SparkSpec {
     val id2 = t.append(half2, "ts")
     assert(id1 == 1 && id2 == 2)
     assert(t.current.get.parentId == 1 && t.current.get.op == "append")
-    assert(t.metrics._1 == turnsDf.count())
+    assert(t.currentLiveFiles.map(_.rows).sum == turnsDf.count())
     assert(t.scan(spark).count() == turnsDf.count())
     // older snapshot still readable (time travel by id)
     assert(t.liveFiles(1).map(_.rows).sum == half1.count())
-  }
-
-  test("keyed append is idempotent: replaying an epoch is a no-op") {
-    val t = IceTable(tmp("ice"))
-    val half1 = turnsDf.where($"turn_idx" % 2 === 0)
-    val half2 = turnsDf.where($"turn_idx" % 2 === 1)
-    val id1 = t.append(half1, "ts", key = Some("ck#epoch-0"))
-    // at-least-once replay of the same micro-batch: must not duplicate rows
-    val replay = t.append(half1, "ts", key = Some("ck#epoch-0"))
-    assert(replay == id1, "replayed epoch must return the original snapshot id")
-    assert(t.currentSnapshotId == id1)
-    assert(t.scan(spark).count() == half1.count())
-    // a NEW epoch still appends
-    val id2 = t.append(half2, "ts", key = Some("ck#epoch-1"))
-    assert(id2 > id1)
-    assert(t.scan(spark).count() == turnsDf.count())
-    // and the key survives in the snapshot log (lineage/audit)
-    assert(t.snapshot(id2).get.key.contains("ck#epoch-1"))
   }
 
   test("orphan data dir from a crashed commit never wedges later appends") {
@@ -115,13 +97,11 @@ class IceTableSpec extends SparkSpec {
     val t = writers.head
     assert(t.currentSnapshotId == n)
     assert(t.scan(spark).count() == turnsDf.where($"turn_idx" % 12 < n).count())
-    // every writer replaced CURRENT and keys.json concurrently: both hold a
-    // complete value, and no staged file or sidecar is left beside them
+    // every writer replaced CURRENT concurrently: it holds a complete
+    // value, and no staged file or sidecar is left beside it
     val hint = Files.readString(java.nio.file.Paths.get(s"$root/CURRENT")).trim.toLong
     assert(hint >= 1 && hint <= n, s"CURRENT: $hint")
-    val idx = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(s"$root/keys.json"))
-    assert(idx.get("up_to").asLong >= 1 && idx.get("up_to").asLong <= n, s"keys.json: $idx")
-    assert(new java.io.File(root).list().sorted.toSeq == Seq("CURRENT", "data", "keys.json", "snapshots"))
+    assert(new java.io.File(root).list().sorted.toSeq == Seq("CURRENT", "data", "snapshots"))
   }
 
   test("scanAt time-travels to any committed snapshot (expiry keeps files readable)") {
@@ -175,25 +155,6 @@ class IceTableSpec extends SparkSpec {
     // the resolved live set is still complete and scan-correct
     assert(t.currentLiveFiles.map(_.rows).sum == days.map(_.count()).sum)
     assert(t.scan(spark).count() == days.map(_.count()).sum)
-  }
-
-  test("keyed lookup uses the keys.json index, heals when stale, survives deletion") {
-    val t = IceTable(tmp("ice"))
-    val ids = (0 until 5).map { e =>
-      t.append(turnsDf.where($"turn_idx" % 5 === e).coalesce(1), "ts", key = Some(s"ck#epoch-$e"))
-    }
-    assert(t.appendIdForKey("ck#epoch-3").contains(ids(3)))
-    assert(t.appendIdForKey("nope").isEmpty)
-    // the index is a pure cache over the snapshot log: deleting it must not
-    // change any answer (it rebuilds from the log on the next lookup)
-    val idx = new java.io.File(s"${t.root}/keys.json")
-    assert(idx.exists(), "keys.json index must exist after keyed appends")
-    assert(idx.delete())
-    assert(t.appendIdForKey("ck#epoch-1").contains(ids(1)))
-    assert(idx.exists(), "lookup must rebuild the index")
-    // replay through the healed index is still a no-op
-    val replay = t.append(turnsDf.where($"turn_idx" % 5 === 2), "ts", key = Some("ck#epoch-2"))
-    assert(replay == ids(2) && t.currentSnapshotId == ids.last)
   }
 
   test("cross-process claim race: exactly one of N concurrent claimants wins an id") {
@@ -328,13 +289,11 @@ class IceTableSpec extends SparkSpec {
     // Hadoop's local FileSystem writes a .crc sidecar beside every file;
     // metadata is written and read with java.nio, so a replace must delete
     // the sidecar of the file it replaces. A stale one makes any reader
-    // that goes through Hadoop throw ChecksumException (and keys.json's
-    // reader, were it such a reader, would swallow that and rebuild the
-    // index from the log on every lookup)
+    // that goes through Hadoop throw ChecksumException
     val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
     val early = withLen.where($"ts" < "2025-01-08")
     val t = IceTable(tmp("ice-crc"))
-    assert(t.append(early, "ts", key = Some("epoch-0")) == 1)
+    assert(t.append(early, "ts") == 1)
     val root = tmp("store-crc")
     TierStore.sync(spark, t, root, $"text_len")
     val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
@@ -344,9 +303,6 @@ class IceTableSpec extends SparkSpec {
       assert(new java.io.File(f.getParent, s".${f.getName}.crc").exists(), s"no .crc beside $f")
     }
     rewriteWithCrc(new java.io.File(s"${t.root}/CURRENT"), "1")
-    // "probe" is in the index but not in the snapshot log: it survives only
-    // while the index is read, not rebuilt from the log
-    rewriteWithCrc(new java.io.File(s"${t.root}/keys.json"), """{"up_to":1,"keys":{"epoch-0":1,"probe":1}}""")
     val markers = for {
       tier <- Seq("1m", "1h", "1d")
       f <- new java.io.File(s"$root/$tier/_checkpoints").listFiles() if f.getName.startsWith("day-")
@@ -354,13 +310,9 @@ class IceTableSpec extends SparkSpec {
     assert(markers.nonEmpty)
     markers.foreach(f => rewriteWithCrc(f, Files.readString(f.toPath)))
 
-    // the append replaces CURRENT and keys.json beside their now-stale .crc
+    // the append replaces CURRENT beside its now-stale .crc
     val late = withLen.where($"ts" >= "2025-01-06" && $"ts" < "2025-01-08")
-    assert(t.append(late, "ts", key = Some("epoch-1")) == 2)
-    val idx = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(s"${t.root}/keys.json"))
-    assert(idx.get("up_to").asLong == 2 && idx.get("keys").has("probe"), s"keys.json was rebuilt from the log: $idx")
-    // a keyed replay is a no-op
-    assert(t.append(early, "ts", key = Some("epoch-0")) == 1 && t.currentSnapshotId == 2)
+    assert(t.append(late, "ts") == 2)
     // the sync rebuilds the touched days, replacing their markers beside a
     // stale .crc, and skips the rest; a re-sync then skips every day
     val (r1m, _, _) = TierStore.sync(spark, t, root, $"text_len")
@@ -370,7 +322,7 @@ class IceTableSpec extends SparkSpec {
     // every replaced file reads through Hadoop's checksummed FS, with no
     // sidecar left beside it
     val rebuiltMarker = s"$root/1m/_checkpoints/day-${r1m.find(!_.skipped).get.dayUs}.json"
-    for (f <- Seq(s"${t.root}/CURRENT", s"${t.root}/keys.json", rebuiltMarker)) {
+    for (f <- Seq(s"${t.root}/CURRENT", rebuiltMarker)) {
       val p = new org.apache.hadoop.fs.Path(f)
       val in = local.open(p)
       try assert(new String(in.readAllBytes(), "UTF-8") == Files.readString(java.nio.file.Paths.get(f)), f)
@@ -379,71 +331,89 @@ class IceTableSpec extends SparkSpec {
     }
   }
 
-  test("checkpointed rollup resumes after crash with identical output") {
+  /** A raw table of the turns with `text_len`, spanning more days than
+    * one batch holds, so every tier syncs in several batches. */
+  private def manyDays(): IceTable = {
     val t = IceTable(tmp("ice"))
     t.append(turnsDf.withColumn("text_len", length($"text").cast("double")), "ts")
+    t
+  }
 
-    // reference output: single uninterrupted run
-    val refDir = tmp("tier-ref")
-    CheckpointedRollup.run(spark, t, refDir, col("text_len"))
+  private def batchTmpDirs(root: String): Seq[String] =
+    for (tier <- Tiers; f <- new java.io.File(s"$root/$tier").list() if f.startsWith(".batch-")) yield s"$tier/$f"
 
-    // crashing run: fails after 3 units, then resumes
-    val crashDir = tmp("tier-crash")
-    intercept[RuntimeException] {
-      CheckpointedRollup.run(spark, t, crashDir, col("text_len"), failAfter = Some(3))
+  test("checkpointed rollup resumes after crash with identical output") {
+    val t = manyDays()
+    // reference: one uninterrupted sync
+    val refRoot = tmp("tiers-ref")
+    val ref1m = TierStore.sync(spark, t, refRoot, $"text_len")._1
+    val days = ref1m.map(_.dayUs)
+    val batch = CheckpointedRollup.MaxAutoBatch
+    assert(days.size > batch, s"the input must span more than one 1m batch: ${days.size} days")
+
+    // a task of the second 1m batch fails: the value expression raises on
+    // the rows of that batch's first day with rows
+    val x = ref1m.slice(batch, 2 * batch).find(_.rows > 0).get.dayUs
+    val inX = unix_micros($"ts") >= x && unix_micros($"ts") < x + 86400000000L
+    val crashRoot = tmp("tiers-crash")
+    val e = intercept[Exception] {
+      TierStore.sync(spark, t, crashRoot, when(inX, raise_error(lit("injected"))).otherwise($"text_len"))
     }
-    val resumed = CheckpointedRollup.run(spark, t, crashDir, col("text_len"))
-    assert(resumed.count(_.skipped) == 3, "exactly the 3 completed units must be skipped")
+    // raised in a task, on an executor thread
+    val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .find(c => Option(c.getMessage).exists(_.contains("injected")))
+    assert(raised.exists(_.getStackTrace.exists(_.getClassName.startsWith("org.apache.spark.executor.Executor"))),
+      raised.map(_.getStackTrace.mkString("\n")).getOrElse(e.toString))
+    assert(markers(crashRoot).keySet == days.take(batch).map(d => s"1m/$d").toSet,
+      "exactly the first batch's 1m days commit, and no 1h or 1d day")
 
-    val a = spark.read.parquet(s"$refDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    val b = spark.read.parquet(s"$crashDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    assert(a.sameElements(b))
-    assert(a.nonEmpty)
+    // a plain sync skips exactly the first batch's days and builds the rest
+    val (r1m, r1h, r1d) = TierStore.sync(spark, t, crashRoot, $"text_len")
+    assert(r1m.filter(_.skipped).map(_.dayUs) == days.take(batch))
+    assert((r1h ++ r1d).forall(!_.skipped))
+    assertSameStore(refRoot, crashRoot)
+    assert(batchTmpDirs(crashRoot).isEmpty, batchTmpDirs(crashRoot))
   }
 
   test("parallel day submission (2 concurrent jobs) matches the serial build") {
-    val t = IceTable(tmp("ice"))
-    t.append(turnsDf.withColumn("text_len", length($"text").cast("double")), "ts")
-    val serialDir = tmp("tier-serial")
-    val parDir = tmp("tier-par")
-    CheckpointedRollup.run(spark, t, serialDir, col("text_len"))
-    val res = CheckpointedRollup.run(spark, t, parDir, col("text_len"), parallelism = 2)
-    assert(res.forall(!_.skipped))
-    val a = spark.read.parquet(s"$serialDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    val b = spark.read.parquet(s"$parDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    assert(a.sameElements(b) && a.nonEmpty)
+    val t = manyDays()
+    val serialRoot = tmp("tiers-serial")
+    val parRoot = tmp("tiers-par")
+    TierStore.sync(spark, t, serialRoot, $"text_len")
+    val (r1m, r1h, r1d) = TierStore.sync(spark, t, parRoot, $"text_len", parallelism = 2)
+    assert(r1m.size > CheckpointedRollup.MaxAutoBatch, s"one batch only: ${r1m.size} days")
+    assert((r1m ++ r1h ++ r1d).forall(!_.skipped))
+    assertSameStore(serialRoot, parRoot)
     // resume over the parallel build still skips everything
-    assert(CheckpointedRollup.run(spark, t, parDir, col("text_len"), parallelism = 2).forall(_.skipped))
+    val (a1m, a1h, a1d) = TierStore.sync(spark, t, parRoot, $"text_len", parallelism = 2)
+    assert((a1m ++ a1h ++ a1d).forall(_.skipped))
   }
 
   test("incremental invalidation: appending data recomputes ONLY the touched days") {
-    val t = IceTable(tmp("ice"))
-    val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
-    t.append(withLen, "ts")
-    val outDir = tmp("tier")
-    CheckpointedRollup.run(spark, t, outDir, col("text_len"))
-    val again = CheckpointedRollup.run(spark, t, outDir, col("text_len"))
-    assert(again.forall(_.skipped), "unchanged source → all units skipped")
+    val t = manyDays()
+    val root = tmp("tiers")
+    TierStore.sync(spark, t, root, $"text_len")
+    val (a1m, a1h, a1d) = TierStore.sync(spark, t, root, $"text_len")
+    assert((a1m ++ a1h ++ a1d).forall(_.skipped), "unchanged source → all units skipped")
 
     // append rows confined to a narrow late date range → only those days'
-    // source-file fingerprints change
-    val late = withLen.where($"ts" >= "2025-01-28")
+    // source-file fingerprints change, at every tier
+    val late = turnsDf.withColumn("text_len", length($"text").cast("double")).where($"ts" >= "2025-01-28")
     assert(late.count() > 0)
     t.append(late, "ts")
-    val after = CheckpointedRollup.run(spark, t, outDir, col("text_len"))
-    val redone = after.filter(!_.skipped).map(_.dayUs).toSet
-    val skipped = after.count(_.skipped)
-    assert(redone.nonEmpty && skipped > 0,
-      s"expected a mix: redone=${redone.size}, skipped=$skipped")
     val cutoffUs = java.sql.Timestamp.valueOf("2025-01-28 00:00:00").getTime * 1000
-    assert(redone.forall(_ >= cutoffUs - 86400000000L),
-      s"only late days may recompute, got ${redone.map(_ / 86400000000L)}")
+    val (b1m, b1h, b1d) = TierStore.sync(spark, t, root, $"text_len")
+    for ((r, tier) <- Seq((b1m, "1m"), (b1h, "1h"), (b1d, "1d"))) {
+      val redone = r.filter(!_.skipped).map(_.dayUs)
+      assert(redone.nonEmpty && r.exists(_.skipped), s"$tier: expected a mix, got $r")
+      assert(redone.forall(_ >= cutoffUs - 86400000000L),
+        s"$tier: only late days may recompute, got ${redone.map(_ / 86400000000L)}")
+    }
 
-    // and the incremental result equals a from-scratch build on the same source
-    val freshDir = tmp("tier-fresh")
-    CheckpointedRollup.run(spark, t, freshDir, col("text_len"))
-    val a = spark.read.parquet(s"$outDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    val b = spark.read.parquet(s"$freshDir/day=*").orderBy("conv_id", "bucket_start").collect()
-    assert(a.sameElements(b))
+    // and the incremental day files equal a from-scratch sync's on the same
+    // source, byte for byte (the markers differ in the snapshot they cite)
+    val freshRoot = tmp("tiers-fresh")
+    TierStore.sync(spark, t, freshRoot, $"text_len")
+    assert(dayFiles(root) == dayFiles(freshRoot))
   }
 }

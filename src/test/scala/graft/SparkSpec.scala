@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.Properties
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -9,6 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.CheckpointedRollup
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSpec {
@@ -52,6 +55,39 @@ abstract class SparkSpec extends AnyFunSuite {
       assert(started.asScala.exists(isMarker), "the listener never saw the marker job")
       (r, started.asScala.toSeq.filterNot(isMarker))
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The tiers of a tier store (TierStore.sync), by directory name. */
+  val Tiers: Seq[String] = Seq("1m", "1h", "1d")
+
+  /** Day `d`'s marker in `tier` of the store at `root`. */
+  def markerFile(root: String, tier: String, d: Long): java.nio.file.Path =
+    Paths.get(s"$root/$tier/_checkpoints/day-$d.json")
+
+  /** Every committed day dir's files: each must hold exactly one parquet
+    * file; its bytes, by "<tier>/day=<d>". */
+  def dayFiles(root: String): Map[String, Seq[Byte]] =
+    Tiers.flatMap { tier =>
+      new java.io.File(s"$root/$tier").listFiles().filter(_.getName.startsWith("day=")).map { dir =>
+        val parquet = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(parquet.length == 1, s"$tier/${dir.getName} holds ${parquet.length} parquet files")
+        s"$tier/${dir.getName}" -> Files.readAllBytes(parquet.head.toPath).toSeq
+      }
+    }.toMap
+
+  /** Every day marker of `root`, as written, by "<tier>/<day>". */
+  def markers(root: String): Map[String, String] =
+    Tiers.flatMap { tier =>
+      new CheckpointedRollup.DayDirSource(spark, s"$root/$tier").pendingDays
+        .map(d => s"$tier/$d" -> Files.readString(markerFile(root, tier, d)))
+    }.toMap
+
+  /** The two stores hold byte-identical day files and markers. */
+  def assertSameStore(a: String, b: String): Unit = {
+    val (fa, fb) = (dayFiles(a), dayFiles(b))
+    assert(fa.keySet == fb.keySet)
+    fa.keys.foreach(k => assert(fa(k) == fb(k), s"$k: day files differ"))
+    assert(markers(a) == markers(b))
   }
 
   /** The description of a job, from its local properties ("" if none). */

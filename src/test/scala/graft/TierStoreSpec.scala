@@ -122,30 +122,6 @@ class TierStoreSpec extends SparkSpec {
     }
   }
 
-  private val Tiers = Seq("1m", "1h", "1d")
-
-  /** Every committed day dir's files: each must hold exactly one parquet
-    * file; its bytes, by "<tier>/day=<d>". */
-  private def dayFiles(root: String): Map[String, Seq[Byte]] =
-    Tiers.flatMap { tier =>
-      new java.io.File(s"$root/$tier").listFiles().filter(_.getName.startsWith("day=")).map { dir =>
-        val parquet = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        assert(parquet.length == 1, s"$tier/${dir.getName} holds ${parquet.length} parquet files")
-        s"$tier/${dir.getName}" -> Files.readAllBytes(parquet.head.toPath).toSeq
-      }
-    }.toMap
-
-  /** Every day marker of `root` without its `wall_ms`, by "<tier>/<day>". */
-  private def markers(root: String): Map[String, String] =
-    Tiers.flatMap { tier =>
-      new CheckpointedRollup.DayDirSource(spark, s"$root/$tier").pendingDays.map { d =>
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(markerFile(root, tier, d).toFile).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        assert(m.remove("wall_ms") != null, s"$tier day $d: no wall_ms")
-        s"$tier/$d" -> m.toString
-      }
-    }.toMap
-
   /** Sync `src` into new roots at parallelism 4 and 1; the results and the
     * jobs of each. */
   private def syncBoth(src: IceTable, name: String): Seq[(String, Results, Seq[java.util.Properties])] =
@@ -155,15 +131,6 @@ class TierStoreSpec extends SparkSpec {
       assert(Seq(r._1, r._2, r._3).forall(_.forall(!_.skipped)))
       (root, r, jobs)
     }
-
-  /** The two roots hold byte-identical day files and equal markers (but for
-    * `wall_ms`). */
-  private def assertSameStore(a: String, b: String): Unit = {
-    val (fa, fb) = (dayFiles(a), dayFiles(b))
-    assert(fa.keySet == fb.keySet)
-    fa.keys.foreach(k => assert(fa(k) == fb(k), s"$k: day files differ"))
-    assert(markers(a) == markers(b))
-  }
 
   /** `body` with AQE's partition coalescing off: a batch's final stage then
     * keeps `spark.sql.shuffle.partitions` tasks, and a day's rows reach
@@ -287,8 +254,6 @@ class TierStoreSpec extends SparkSpec {
 
   private def lo1m(root: String): Long =
     TierStore.scanTier(spark, s"$root/1m").agg(min(unix_micros($"bucket_start"))).head().getLong(0)
-
-  private def markerFile(root: String, tier: String, d: Long) = Paths.get(s"$root/$tier/_checkpoints/day-$d.json")
 
   test("expired 1m days stay expired: a sync after expireDays rebuilds no day at any tier") {
     val (src, root, raw, days) = syncedStore("sticks")
